@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute load average from /proc/loadavg (-1.0 if unreadable) — stamped
     * into the artifact so a loaded-container run is distinguishable from a
@@ -11,43 +10,23 @@ object Bench {
       .split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
+  /** A canonical run (every declared query, at the sf0.1 dir the clean
+    * band is calibrated on) is the only one that may write the committed
+    * BENCH_FULL.json / BENCH_COMPACT.json or raise the load warning; a
+    * subset or another-SF run prints its lines and writes nothing. */
+  def canonical(selected: collection.Set[String], sfDir: String): Boolean =
+    selected == SparkEntry.queries.keySet && sfDir.replaceAll("/+$", "").endsWith("sf0.1")
+
+  /** Trailing args name the queries to time (none = all). */
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/ScaleGen: Tables.t's NTZ→TIMESTAMP normalization
-      // assumes the UTC session, and benched plans must match verified ones
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: pay one-time JVM costs (codegen compiler, parquet
-    // writer classloading, shuffle machinery) before measuring queries.
-    locally {
-      import spark.implicits._
-      val w = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-      w.join(w.toDF("k", "v2"), "k").groupBy($"v").count().count()
-      w.write.mode("overwrite").parquet("target/tmp_bench_warmup")
-      spark.read.parquet("target/tmp_bench_warmup").count()
-      spark.sql("SELECT count(*) FROM (SELECT 1 AS x) t WHERE x > 0").count()
-    }
-    // dev-loop filter: SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those
-    // queries (unset for the driver's full run). Unknown names FAIL —
-    // a typo'd name silently benching zero queries would read as "instant"
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) =>
-        val unknown = names.diff(SparkEntry.queries.keySet)
-        require(unknown.isEmpty && names.nonEmpty,
-          s"SPARK_GRAFT_BENCH_ONLY names not declared (or empty): ${unknown.mkString(",")}")
-        SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
-    }
+    val sfDir = Harness.sfDir
+    // cache state at start: any complete DiskCache entry makes the run warm
+    val cacheState = if (graft.operators.DiskCache.hasCompleteEntry) "warm" else "cold"
+    val selected = Harness.select(args.toSeq)
+    val isCanonical = canonical(selected.keySet, sfDir)
+    val spark = Harness.session()
+    Harness.warmup(spark)
     // deterministic name order: HashMap iteration order is arbitrary, so the
     // first-measured query (which absorbs any residual one-time cost) would
     // differ run to run and read as a regression in per-query comparisons
@@ -80,8 +59,8 @@ object Bench {
     // The recorded CLEAN band is ~0.69 s/query at sf0.1 (BASELINE.md clean-run
     // row); a full-set total >1.5× that band means the container was busy —
     // flag it IN the artifact so a downstream reader can never mistake load
-    // for regression. Only for full runs (a BENCH_ONLY subset of heavy
-    // queries legitimately exceeds the fleet-median band).
+    // for regression. Only for full runs (a subset of heavy queries
+    // legitimately exceeds the fleet-median band).
     // band over SUCCESSFUL queries only: crashes often co-occur with load,
     // and counting them in the denominator while excluding their time from
     // `total` would let a loaded run slip under the band (review-caught)
@@ -91,8 +70,7 @@ object Bench {
     // (advice round 9).
     val cleanBandSecPerQuery = 0.69
     val nOk = results.count(_._2 >= 0)
-    val loadWarning = only.isEmpty && sfDir.replaceAll("/+$", "").endsWith("sf0.1") &&
-      total > 1.5 * cleanBandSecPerQuery * nOk
+    val loadWarning = isCanonical && total > 1.5 * cleanBandSecPerQuery * nOk
     if (loadWarning)
       System.err.println(f"[bench] WARNING: total ${total}%.1f s exceeds the " +
         f"clean band (${cleanBandSecPerQuery * nOk}%.1f s over $nOk ok queries) " +
@@ -107,10 +85,6 @@ object Bench {
       s""","load_avg_start":${fmt(loadStart)},"load_avg_end":${fmt(loadAvg())}"""
     val line =
       s"""{"metric":"total","unit":"sec","queries":$qs,"sf":"$sfDir"$warnField$loadField,"value":${fmt(total)}}"""
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-        (line + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
     // Full line first (BENCH_FULL parity), then a COMPACT summary as the very
     // last stdout line: the driver captures only the tail of the run output,
     // and at 338 queries the full line's HEAD gets cut, leaving unparseable
@@ -163,19 +137,27 @@ object Bench {
     val topField =
       s""","n_top":${topEntries.size},"queries_md5":"$digest"""" +
         s""","queries":${topEntries.mkString("{", ",", "}")}"""
+    // run context: cpu count and the DiskCache state at start, so a warm
+    // and a cold run are never compared as if alike (a canonical cold sweep
+    // pays every cache build). "full" is null when no file was written.
+    val contextField = s""","cpus":${Harness.cpus},"cache":"$cacheState""""
+    val full = if (isCanonical) "\"BENCH_FULL.json\"" else "null"
     val compact =
       s"""{"metric":"total","unit":"sec","n_queries":${results.size}$failField,""" +
-        s""""median":${fmt(median)},"sf":"$sfDir"$warnField$loadField$topField,""" +
-        s""""full":"BENCH_FULL.json","value":${fmt(total)}}"""
+        s""""median":${fmt(median)},"sf":"$sfDir"$warnField$loadField$topField$contextField,""" +
+        s""""full":$full,"value":${fmt(total)}}"""
     // BENCH_COMPACT.json: the driver-parseable artifact (round-9 verdict #2 —
     // BENCH_r08/r09 shipped "parsed": null because the captured stdout tail
     // carried an sbt "[info] " prefix on the compact line). A FILE cannot be
     // prefix-mangled by any logger; build.sbt additionally sets
     // run / outputStrategy := StdoutOutput so sbt-launched runs print bare.
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_COMPACT.json"),
-        (compact + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
+    // Only a canonical run writes the committed artifacts: a subset run once
+    // overwrote the 391-query BENCH_*.json with a 2-query smoke run.
+    if (isCanonical)
+      Seq("BENCH_FULL.json" -> line, "BENCH_COMPACT.json" -> compact).foreach { case (f, l) =>
+        try java.nio.file.Files.write(java.nio.file.Paths.get(f), (l + "\n").getBytes("UTF-8"))
+        catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
+      }
     println(line)
     println(compact)
     graft.operators.CacheRegistry.sweep()

@@ -1,15 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+/** Formatted plans of the named queries (none = all), planned in Bench's
+  * session on Bench's data dir, so the printed plans are the benched ones.
+  * Usage: `SPARK_GRAFT_SF_DIR=<dir> tools/run.sh graft.Explain <query>...` */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = "/root/testdata/sf0.001"
-    for (q <- args) {
+    val selected = Harness.select(args.toSeq)
+    val spark = Harness.session()
+    val dir = Harness.sfDir
+    for ((q, fn) <- selected.toSeq.sortBy(_._1)) {
       println(s"===== $q =====")
-      SparkEntry.queries(q)(spark, dir).explain("formatted")
+      fn(spark, dir).explain("formatted")
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,23 +7,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing args = run only these queries (dev loop; the driver
     // passes exactly two args and gets the full sweep + full _declared.txt)
-    val only = args.drop(2).toSet
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else {
-        val unknown = only.diff(SparkEntry.queries.keySet)
-        require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(",")}")
-        SparkEntry.queries.view.filterKeys(only).toMap
-      }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.drop(2).toSeq
+    val selected = Harness.select(only)
+    val spark = Harness.session()
     // trained-ANN oracles (sim_ivf_kmeans/sim_pq) fit their deterministic
     // model on THIS run's data and inline it as SQL literals — they need
     // the session + data dir at oracleSql-dump time
@@ -78,23 +63,11 @@ object Verify {
     }
     System.err.println(f"[verify] storage high-water: mem=${HighWater.mem / 1e6}%.1f MB " +
       f"disk=${HighWater.disk / 1e6}%.1f MB cached_rdds=${HighWater.rdds}")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // __SFDIR__ placeholder: oracles that must reference the data directory
     // by path (DuckDB table functions like read_blob) are bound to the
     // actual run directory here, not hardcoded to one scale
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__SFDIR__", sfDir))}" }
+      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v.replace("__SFDIR__", sfDir))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // release the deliberate session-lifetime operator caches (minhash

@@ -71,6 +71,16 @@ object DiskCache {
       } finally raf.close()
     }
 
+  /** True iff [[root]] holds at least one published entry: a keyed
+    * `<prefix>_v<N>_<hex>` dir with a `_SUCCESS` marker in it or in one of
+    * its subdirs. Entries publish by atomic rename, so a marker means the
+    * entry is complete; temp and stale siblings never match the name. */
+  def hasCompleteEntry: Boolean = {
+    def dirs(f: java.io.File) = Option(f.listFiles()).toSeq.flatten.filter(_.isDirectory)
+    dirs(new java.io.File(root)).filter(_.getName.matches(".*_v\\d+_[0-9a-f]+"))
+      .exists(e => (e +: dirs(e)).exists(d => new java.io.File(d, "_SUCCESS").exists()))
+  }
+
   /** True iff `path` holds a completed artifact: every relative `marker`
     * (e.g. "_SUCCESS", "bands/_SUCCESS") exists under it. */
   def complete(path: String, markers: Seq[String]): Boolean =

@@ -179,4 +179,24 @@ class DiskCacheSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("hasCompleteEntry: only a published keyed entry makes the root warm") {
+    val cacheRoot = freshDir()
+    val prev = sys.props.get("graft.cache.root")
+    sys.props("graft.cache.root") = cacheRoot.getPath
+    try {
+      assert(!DiskCache.hasCompleteEntry, "empty root")
+      write(new java.io.File(cacheRoot, "scala-2.13/_SUCCESS"), Array.emptyByteArray)
+      write(new java.io.File(cacheRoot, "idx_v1_ab12.tmp-1-2/_SUCCESS"), Array.emptyByteArray)
+      new java.io.File(cacheRoot, "dpp_v1_cd34/fact").mkdirs()
+      assert(!DiskCache.hasCompleteEntry, "non-entry dirs, temp builds and unpublished parts")
+      write(new java.io.File(cacheRoot, "dpp_v1_cd34/fact/_SUCCESS"), Array.emptyByteArray)
+      assert(DiskCache.hasCompleteEntry, "marker one level down")
+    } finally {
+      prev match {
+        case Some(v) => sys.props("graft.cache.root") = v
+        case None    => sys.props.remove("graft.cache.root"): Unit
+      }
+    }
+  }
 }

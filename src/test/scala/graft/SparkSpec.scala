@@ -16,6 +16,7 @@ object SparkTestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    Harness.quietAuditedWarnings()
     s
   }
 }
