@@ -205,6 +205,43 @@ object QueriesText {
   private val NdcgQueries = Seq((1L, "slow", "dup"), (2L, "merge", "join"),
     (3L, "scan", "vector"))
 
+  /** The full-corpus bigram BM25 index shared by bm25_search and bm25_prf:
+    * postings (term-sorted), doclens, dfs and corpus stats, built once per
+    * documents fingerprint under DiskCache. Returns the index root. */
+  private def bm25Index(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    val base = graft.operators.DiskCache.keyedPath(
+      "bm25_idx_v1", s"$dir/documents.parquet")
+    graft.operators.DiskCache.ensure(base, Seq("postings/_SUCCESS",
+      "doclens/_SUCCESS", "dfs/_SUCCESS", "stats/_SUCCESS")) { tmp =>
+      val terms = t(s, dir, "documents")
+        .select(col("doc_id"), TextFns.shingleExplode(TextFns.tokens(col("text")), 2).as("term"))
+        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      terms.repartitionByRange(col("term")).sortWithinPartitions(col("term"))
+        .write.parquet(s"$tmp/postings")
+      val dlen = terms.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      dlen.write.parquet(s"$tmp/doclens")
+      dlen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
+        .write.parquet(s"$tmp/stats")
+      terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
+        .repartitionByRange(col("term")).sortWithinPartitions(col("term"))
+        .write.parquet(s"$tmp/dfs")
+      dlen.unpersist()
+      terms.unpersist(): Unit
+    }
+    base
+  }
+
+  /** Per-doc bigram count (the BM25 document length over width-2
+    * shingles) without building the term table: size(tokens) − 1 per row,
+    * rows with fewer than 2 tokens dropped (no bigram, so no doc), summed
+    * per doc_id. Equals sum(tf) over the doc's (doc_id, term, tf) rows. */
+  private[graft] def bigramDocLens(docs: org.apache.spark.sql.DataFrame) = docs
+    .select(col("doc_id"), (size(TextFns.tokens(col("text"))) - 1).cast(LongType).as("dl"))
+    .where(col("dl") > 0)
+    .groupBy(col("doc_id")).agg(sum(col("dl")).as("dl"))
+
   val queries: Map[String, Q] = Map(
     // Blocklist filtering card (the C4 "bad words" pipeline stage): per
     // source, how many docs a lexicon gate would drop and the bad-token
@@ -797,27 +834,7 @@ object QueriesText {
     // quantize-then-integer-sum discipline), so stage-2 sums commute.
     "bm25_prf" -> ((s, dir) => {
       import s.implicits._
-      val base = graft.operators.DiskCache.keyedPath(
-        "bm25_idx_v1", s"$dir/documents.parquet")
-      graft.operators.DiskCache.ensure(base, Seq("postings/_SUCCESS",
-        "doclens/_SUCCESS", "dfs/_SUCCESS", "stats/_SUCCESS")) { tmp =>
-        val terms = t(s, dir, "documents")
-          .select(col("doc_id"), TextFns.shingleExplode(TextFns.tokens(col("text")), 2).as("term"))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        terms.repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-          .write.parquet(s"$tmp/postings")
-        val dlen = terms.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        dlen.write.parquet(s"$tmp/doclens")
-        dlen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
-          .write.parquet(s"$tmp/stats")
-        terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-          .write.parquet(s"$tmp/dfs")
-        dlen.unpersist()
-        terms.unpersist(): Unit
-      }
+      val base = bm25Index(s, dir)
       val postings = s.read.parquet(s"$base/postings")
       val dft = s.read.parquet(s"$base/dfs")
       val dlen = s.read.parquet(s"$base/doclens")
@@ -867,27 +884,7 @@ object QueriesText {
 
     "bm25_search" -> ((s, dir) => {
       import s.implicits._
-      val base = graft.operators.DiskCache.keyedPath(
-        "bm25_idx_v1", s"$dir/documents.parquet")
-      graft.operators.DiskCache.ensure(base, Seq("postings/_SUCCESS",
-        "doclens/_SUCCESS", "dfs/_SUCCESS", "stats/_SUCCESS")) { tmp =>
-        val terms = t(s, dir, "documents")
-          .select(col("doc_id"), TextFns.shingleExplode(TextFns.tokens(col("text")), 2).as("term"))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        terms.repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-          .write.parquet(s"$tmp/postings")
-        val dlen = terms.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        dlen.write.parquet(s"$tmp/doclens")
-        dlen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
-          .write.parquet(s"$tmp/stats")
-        terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .repartitionByRange(col("term")).sortWithinPartitions(col("term"))
-          .write.parquet(s"$tmp/dfs")
-        dlen.unpersist()
-        terms.unpersist(): Unit
-      }
+      val base = bm25Index(s, dir)
       val q = Seq((0L, "hash join"), (0L, "table scan"),
         (1L, "merge sort"), (1L, "batch stream"),
         (2L, "slow query"), (2L, "fast scan")).toDF("qid", "term")
@@ -962,32 +959,25 @@ object QueriesText {
           .write.parquet(s"$tmp/doclens")
         terms.unpersist(): Unit
       }
-      // the refresh: tokenize the BATCH only (three consumers → tracked)
-      val batchTerms = CacheRegistry.track(termsOf(docs.where(col("doc_id") >= 400)))
-      val postings = s.read.parquet(s"$base/postings").unionByName(batchTerms)
       val q = Seq((0L, "hash join"), (0L, "table scan"),
         (1L, "merge sort"), (1L, "batch stream"),
         (2L, "slow query"), (2L, "fast scan")).toDF("qid", "term")
       val qTerms = Seq("hash join", "table scan", "merge sort",
         "batch stream", "slow query", "fast scan")
-      // df is only consumed for the 6 query terms. NOTE (r14 verdict §14):
-      // this explicit filter is DOCUMENTATION-ONLY — Catalyst already pushes
-      // the In(term) predicate through the grouping-key aggregate on its own
-      // (the r14 before-plan shows PushedFilters: [In(term,…)] on the base
-      // dfs scan), so before/after plans are identical and no speedup is
-      // attributable to it. Kept because filter-then-aggregate on the
-      // grouping key is exact and makes the intent explicit.
+      // the refresh tokenizes the BATCH only. Filter before the aggregate:
+      // only query-term bigrams reach the (doc_id, term) shuffle, and only
+      // that small table is tracked (postings union + batch df). Batch doc
+      // lengths are derived per row from token counts, not from terms.
+      val batch = docs.where(col("doc_id") >= 400)
+      val batchTerms = CacheRegistry.track(
+        termsOf(batch).where(col("term").isin(qTerms: _*)))
+      val postings = s.read.parquet(s"$base/postings").unionByName(batchTerms)
       val dfs = s.read.parquet(s"$base/dfs").where(col("term").isin(qTerms: _*))
-        .unionByName(batchTerms.where(col("term").isin(qTerms: _*))
-          .groupBy(col("term")).agg(count(lit(1)).as("df")))
+        .unionByName(batchTerms.groupBy(col("term")).agg(count(lit(1)).as("df")))
         .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      // r15 (JobProfile: each agg pass over the cached batch-terms costs a
-      // full 32-partition cache read — the merged doclens table was built
-      // TWICE, once for the corpus stats and once for the scoring join).
-      // The merged doclens is docs-sized metadata (doc_id, dl — the
-      // docStats caching rule), so ONE tracked build serves both consumers.
-      val dlen = CacheRegistry.track(s.read.parquet(s"$base/doclens")
-        .unionByName(batchTerms.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))))
+      // merged doclens: compact per-doc metadata, two consumers → tracked
+      val dlen = CacheRegistry.track(
+        s.read.parquet(s"$base/doclens").unionByName(bigramDocLens(batch)))
       val stats = broadcast(
         dlen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len")))
       val qdf = broadcast(q.join(dfs, "term"))

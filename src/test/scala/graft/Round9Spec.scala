@@ -162,6 +162,58 @@ class Round9Spec extends SparkSpec {
     assert(inc.nonEmpty)
   }
 
+  test("bm25_incremental: every cached (doc_id, term) aggregate has the query-term filter below it") {
+    // a filter on a tracked frame cannot reach below its cache: caching the
+    // unfiltered batch term stream would shuffle and hold every bigram of
+    // the batch on each refresh
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    // every node of a physical plan, through AQE wrappers and nested caches
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case a: AdaptiveSparkPlanExec => nodes(a.inputPlan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cacheBuilder.cachedPlan)
+      case n => Seq(n)
+    }.flatten
+    val cachedPlans = graft.queries.QueriesText.queries("bm25_incremental")(spark, dir)
+      .queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r.cacheBuilder.cachedPlan }
+    val termAggs = cachedPlans.flatMap(nodes).collect {
+      case a: BaseAggregateExec if a.groupingExpressions.flatMap(_.references.map(_.name)).toSet ==
+        Set("doc_id", "term") => a
+    }
+    assert(termAggs.nonEmpty, s"no cached (doc_id, term) aggregate in:\n${cachedPlans.mkString("\n")}")
+    termAggs.foreach { a =>
+      val filtered = nodes(a.child).exists {
+        case f: FilterExec => f.condition.exists {
+          case i: In => i.value.references.exists(_.name == "term")
+          case i: InSet => i.child.references.exists(_.name == "term")
+          case _ => false
+        }
+        case _ => false
+      }
+      assert(filtered, s"cached (doc_id, term) aggregate without a term filter below it:\n$a")
+    }
+  }
+
+  test("bigramDocLens: per-row size(tokens) - 1 equals sum(tf) over the bigram term table") {
+    import spark.implicits._
+    val docs = Seq[(Long, String)]((1L, ""), (2L, "  \t "), (3L, "single"),
+      (4L, "a\tb\n\nc   d"), (5L, "Hash JOIN hash"), (6L, "x y"), (6L, "P q r"),
+      (7L, null)).toDF("doc_id", "text")
+    val viaTerms = docs
+      .select(col("doc_id"),
+        graft.functions.TextFns.shingleExplode(graft.functions.TextFns.tokens(col("text")), 2).as("term"))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+      .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val perRow = graft.queries.QueriesText.bigramDocLens(docs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(perRow == viaTerms)
+    assert(perRow == Map(4L -> 3L, 5L -> 2L, 6L -> 3L))
+  }
+
   test("ann_nprobe_sweep: recall is monotone in nprobe and exactly 1.0 at full probe") {
     val rows = graft.queries.QueriesSim.queries("ann_nprobe_sweep")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
