@@ -6,7 +6,7 @@ import org.apache.spark.sql.Dataset
   * persists (minhash shingle sets, packed-simhash signatures, bloom-probe
   * shingles): each backing operator returns a LAZY plan over its cache, so
   * it cannot unpersist before the caller materializes — but across a
-  * 276-query Verify sweep those cached RDDs would otherwise accumulate in
+  * 391-query Verify sweep those cached RDDs would otherwise accumulate in
   * executor storage for the whole session. Operators register here instead
   * of calling persist directly; the harness mains (Verify, Bench) call
   * [[sweep]] once their work is materialized. Entry points that never

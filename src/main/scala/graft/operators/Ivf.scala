@@ -3,7 +3,6 @@ package graft.operators
 import graft.functions.SimFns
 import graft.plans.NearestCells
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -211,11 +210,8 @@ object Ivf {
         // bounded per-cell sample: a cells-partitioned rank, never a
         // global sort; ranks are id-ordered so the sample (and the Lloyd
         // seeds) are deterministic
-        val wCell = Window.partitionBy(col("cell")).orderBy(col(idCol))
-        val sampled = over
-          .withColumn("_rk", row_number().over(wCell))
-          .where(col("_rk") <= sampleN)
-          .select(col("cell"), col("_cnt"), col("_rk"),
+        val sampled = TopK.perKey(over, col("cell"))(sampleN, col(idCol))
+          .select(col("cell"), col("_cnt"), col("rank"),
             SimFns.toDouble(col(vecCol)).as("_v"))
           .as[(Long, Long, Int, Seq[Double])]
         val subCents = sampled.groupByKey(_._1)
@@ -279,19 +275,18 @@ object Ivf {
 
   /** Top-k cosine search probing the query's `nprobe` nearest cells, over a
     * pre-built [[index]]. The probe-cell choice is the same codegen'd
-    * expression (exploded to `nprobe` rows per query); ranking is a window
-    * per query id, so work scales with queries × probed candidates. */
+    * expression (exploded to `nprobe` rows per query); ranking is
+    * [[TopK.perKey]] per query id, so work scales with queries × probed
+    * candidates. */
   def search(indexed: DataFrame, centroids: DataFrame, queries: DataFrame,
              idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
              topK: Int, nprobe: Int): DataFrame = {
     val cents = collectCentroids(centroids)
     val qCells = queries.select(col(qIdCol), col(qVecCol),
       explode(nearestCells(col(qVecCol), cents, nprobe)).as("cell"))
-    val w = Window.partitionBy(col(qIdCol)).orderBy(col("cos").desc, col(idCol))
-    qCells.join(indexed, "cell")
-      .select(col(qIdCol), col(idCol),
-        SimFns.cosine(col(qVecCol), col(vecCol)).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topK)
+    TopK.perKey(qCells.join(indexed, "cell")
+        .select(col(qIdCol), col(idCol),
+          SimFns.cosine(col(qVecCol), col(vecCol)).as("cos")),
+      col(qIdCol))(topK, col("cos").desc, col(idCol))
   }
 }

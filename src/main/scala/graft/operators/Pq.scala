@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SimFns
 
@@ -106,20 +105,39 @@ object Pq {
              books: Seq[Array[Array[Double]]]): DataFrame =
     vectors.select(col(idCol), codesFor(col(vecCol), books).as("codes"))
 
+  /** Squared L2 between `c` and the `c.length`-long slice of `v` at `off`:
+    * the ascending-index left fold of NearestCells, so driver-side values
+    * (ADC tables, probe choices, k-center picks) match the codegen'd and
+    * the DuckDB `(v−c)²` chains bit for bit. */
+  private[graft] def sqL2(v: Array[Double], c: Array[Double], off: Int = 0): Double = {
+    var d = 0.0; var i = 0
+    while (i < c.length) { val t = v(off + i) - c(i); d += t * t; i += 1 }
+    d
+  }
+
   /** The query-side ADC lookup table: squared L2 from the query's j-th
     * subvector to centroid c of subspace j, for all (j, c). m×k rows. */
   private[graft] def adcTable(q: Array[Double], books: Seq[Array[Array[Double]]]): Seq[(Int, Int, Double)] = {
     val sub = q.length / books.length
     books.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (cent, c) =>
-        var d = 0.0
-        var i = 0
-        while (i < sub) {
-          val diff = q(j * sub + i) - cent(i); d += diff * diff; i += 1
-        }
-        (j, c, d)
-      }
+      book.zipWithIndex.map { case (cent, c) => (j, c, sqL2(q, cent, j * sub)) }
     }
+  }
+
+  /** Every query's ADC table as one broadcast (qid, j, code, d) relation:
+    * Q×m×k rows collected driver-side — query-set-sized, never
+    * corpus-sized. */
+  private def adcLut(queries: DataFrame, qidCol: String, qvecCol: String,
+                     books: Seq[Array[Array[Double]]]): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val luts = queries
+      .select(col(qidCol).cast("long"), SimFns.toDouble(col(qvecCol))).collect()
+      .flatMap { r =>
+        adcTable(r.getSeq[Double](1).toArray, books)
+          .map { case (j, c, d) => (r.getLong(0), j, c, d) }
+      }.toIndexedSeq
+    broadcast(luts.toDF("qid", "j", "code", "d"))
   }
 
   /** Approximate top-k by squared L2 via ADC over an encoded corpus: the
@@ -129,22 +147,29 @@ object Pq {
     * to one row per (query, id). Returns (qid, idCol, dist2, rank). */
   def search(encoded: DataFrame, idCol: String, queries: DataFrame,
              qidCol: String, qvecCol: String, books: Seq[Array[Array[Double]]],
-             topk: Int): DataFrame = {
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    val luts = queries
-      .select(col(qidCol).cast("long"), SimFns.toDouble(col(qvecCol))).collect()
-      .flatMap { r =>
-        adcTable(r.getSeq[Double](1).toArray, books)
-          .map { case (j, c, d) => (r.getLong(0), j, c, d) }
-      }.toIndexedSeq
-    val lut = broadcast(luts.toDF("qid", "j", "code", "d"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist2").asc, col(idCol).asc)
-    encoded
-      .select(col(idCol), posexplode(col("codes")).as(Seq("j", "code")))
-      .join(lut, Seq("j", "code"))
-      .groupBy(col("qid"), col(idCol)).agg(sum(col("d")).as("dist2"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= topk)
+             topk: Int): DataFrame =
+    TopK.perKey(encoded
+        .select(col(idCol), posexplode(col("codes")).as(Seq("j", "code")))
+        .join(adcLut(queries, qidCol, qvecCol, books), Seq("j", "code"))
+        .groupBy(col("qid"), col(idCol)).agg(sum(col("d")).as("dist2")),
+      col("qid"))(topk, col("dist2").asc, col(idCol).asc)
+
+  /** IVF-PQ search (FAISS IndexIVFPQ, by_residual=false): each query
+    * (`qid`, `qvecCol`) probes its `nprobe` nearest of the coarse `cents`
+    * through a broadcast (qid, cell) join, and only the probed cells'
+    * codes are ADC-scored — each vector lives in exactly one cell, so no
+    * dedup is needed, and the ADC sum folds ascending-j as in [[search]].
+    * `encoded` holds (idCol, cell, codes). Returns (qid, idCol, dist2,
+    * rank). */
+  def ivfSearch(encoded: DataFrame, idCol: String, cents: Array[Array[Double]],
+                queries: DataFrame, qvecCol: String, books: Seq[Array[Array[Double]]],
+                nprobe: Int, topk: Int): DataFrame = {
+    val probes = queries.select(col("qid"),
+      explode(Ivf.nearestCells(col(qvecCol), cents, nprobe)).as("cell"))
+    TopK.perKey(encoded.join(broadcast(probes), "cell")
+        .select(col("qid"), col(idCol), posexplode(col("codes")).as(Seq("j", "code")))
+        .join(adcLut(queries, "qid", qvecCol, books), Seq("qid", "j", "code"))
+        .groupBy(col("qid"), col(idCol)).agg(sum(col("d")).as("dist2")),
+      col("qid"))(topk, col("dist2").asc, col(idCol).asc)
   }
 }

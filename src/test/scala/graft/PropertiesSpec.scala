@@ -87,6 +87,20 @@ class PropertiesSpec extends SparkSpec {
     assert(dt.contentHash == shuffled.contentHash)
   }
 
+  test("property: TopK-ranked similarity cards are invariant under shuffle partitions") {
+    val cards = Seq("sim_topk", "sim_ivf", "sim_lsh_multiprobe", "sim_hamming_rerank",
+      "sim_ivfpq", "knn_eval", "retrieval_mrr", "ann_nprobe_sweep")
+    def hashes(partitions: Int) = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try cards.map(c => c -> DataTable(SparkEntry.queries(c)(spark, "/root/testdata/sf0.001"))
+        .contentHash).toMap
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    val (h1, h7) = (hashes(1), hashes(7))
+    cards.foreach(c => assert(h1(c) == h7(c), s"$c: ${h1(c)} at 1 partition, ${h7(c)} at 7"))
+  }
+
   test("property: dedup pairs shrink monotonically with threshold") {
     val text = (1 to 30).map(i => s"tok$i").mkString(" ")
     val docs = Seq(
