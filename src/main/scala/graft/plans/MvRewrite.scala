@@ -41,16 +41,22 @@ case class MvDef(
     rightKey: String,
     measure: AggregateFunction => Option[String])
 
+/** The registered MVs, one per identity (name, base paths). The state path
+  * is not part of the identity: it moves with the cache root, and a def
+  * left behind by an old root would point at files that may be gone. */
 object MvCatalog {
   private val defs =
-    new java.util.concurrent.ConcurrentHashMap[String, MvDef]()
-  def register(key: String, d: MvDef): Unit = { defs.put(key, d); () }
+    new java.util.concurrent.ConcurrentHashMap[(String, Set[String]), MvDef]()
+  /** Register `d` as MV `name`, replacing any earlier def of the same MV. */
+  def register(name: String, d: MvDef): Unit = { defs.put((name, d.basePaths), d); () }
+  /** Forget MV `name` over `basePaths`: call before (re)building its state,
+    * so the build's own join-aggregate is not routed to an older state. */
+  def drop(name: String, basePaths: Set[String]): Unit = { defs.remove((name, basePaths)); () }
   def all: Seq[MvDef] = {
     import scala.jdk.CollectionConverters._
     defs.values().asScala.toSeq
   }
   def isEmpty: Boolean = defs.isEmpty
-  def clear(): Unit = defs.clear()
 }
 
 object MvRewriteRule extends Rule[LogicalPlan] with PredicateHelper {

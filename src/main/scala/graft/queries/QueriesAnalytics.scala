@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFns
-import graft.operators.DiscreteQuantile
+import graft.operators.{DiscreteQuantile, TopK}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -765,13 +765,10 @@ object QueriesAnalytics {
             .otherwise(0L))
         .withColumn("sid", sum(col("brk")).over(
           ow.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val sw = Window.partitionBy(col("user_id"), col("sid"))
-        .orderBy(col("ts"), col("event_id"))
-      sess.withColumn("rn", row_number().over(sw))
-        .where(col("rn") <= 5)
+      TopK.perKey(sess, col("user_id"), col("sid"))(5, col("ts"), col("event_id"))
         .groupBy(col("user_id"), col("sid"))
         .agg(concat_ws(">",
-          transform(array_sort(collect_list(struct(col("rn"), col("event_type")))),
+          transform(array_sort(collect_list(struct(col("rank"), col("event_type")))),
             x => x.getField("event_type"))).as("path"))
         .groupBy(col("path")).agg(count(lit(1)).as("n_sessions"))
         .orderBy(col("n_sessions").desc, col("path"))
@@ -1044,11 +1041,10 @@ object QueriesAnalytics {
       val nodes = nodes0 // persisted inside successorGraph
       var lbl = nodes.select(col("id"), col("id").as("lbl"))
       for (_ <- 1 to 5) {
-        val wv = Window.partitionBy(col("a")).orderBy(col("ws").desc, col("cl").asc)
         val votes = edges
           .join(lbl.select(col("id").as("b"), col("lbl").as("cl")), "b")
           .groupBy(col("a"), col("cl")).agg(sum(col("w")).as("ws"))
-          .withColumn("rn", row_number().over(wv)).where(col("rn") === 1)
+          .transform(TopK.perKey(_, col("a"))(1, col("ws").desc, col("cl").asc))
           .select(col("a").as("id"), col("cl").as("nl"))
         // isolated nodes (no edges) keep their own label
         lbl = lbl.join(votes, Seq("id"), "left")
@@ -1396,9 +1392,7 @@ object QueriesAnalytics {
         .where(col("user_id").isNotNull && col("ts").isNotNull)
         .groupBy(to_date(col("ts")).as("d"), col("user_id"))
         .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("d")).orderBy(col("n").desc, col("user_id"))
-      d.withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
+      TopK.perKey(d, col("d"))(3, col("n").desc, col("user_id"))
         .select(col("d"), col("rank").cast(LongType).as("rank"), col("user_id"), col("n"))
         .orderBy(col("d"), col("rank"))
     }),
@@ -1439,8 +1433,7 @@ object QueriesAnalytics {
       val post = t(s, dir, "documents")
         .select(explode(TextFns.tokens(col("text"))).as("term"), col("doc_id"))
         .distinct()
-      val w = Window.partitionBy(col("term")).orderBy(col("doc_id"))
-      val top = post.withColumn("rn", row_number().over(w)).where(col("rn") <= 5)
+      val top = TopK.perKey(post, col("term"))(5, col("doc_id"))
       val dfq = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
       // postings ships as a comma-joined STRING, not ArrayType: the driver's
       // checker sorts result columns with pandas, which cannot hash ndarray

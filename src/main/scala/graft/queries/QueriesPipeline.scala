@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.{SimFns, TextFns}
-import graft.operators.GlobalOrder
+import graft.operators.{GlobalOrder, TopK}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -125,10 +125,8 @@ object QueriesPipeline {
         .withColumn("bucket", when(col("score") >= 0.8, "high")
           .when(col("score") >= 0.5, "mid").otherwise("low"))
         .withColumn("h", md5(concat(lit("review:"), col("doc_id").cast(StringType))))
-      val w = Window.partitionBy(col("source"), col("bucket")).orderBy(col("h"))
-      scored.withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 2)
-        .select(col("source"), col("bucket"), col("rk").cast(LongType).as("rk"),
+      TopK.perKey(scored, col("source"), col("bucket"))(2, col("h"))
+        .select(col("source"), col("bucket"), col("rank").cast(LongType).as("rk"),
           col("doc_id"), (floor(col("score") * 1e6 + 0.5) / 1e6).as("score"))
         .orderBy(col("source"), col("bucket"), col("rk"))
     }),
@@ -487,10 +485,9 @@ object QueriesPipeline {
         .withColumn("dup", col("doc_id") =!= col("keep_id"))
         .withColumn("qpass", col("score") >= 0.5)
         .localCheckpoint(false) // funnel aggregate AND the cap read it
-      val w = Window.partitionBy(col("source"))
-        .orderBy(md5(concat(lit("asm:"), col("doc_id").cast(StringType))), col("doc_id"))
       val kept = flagged.where(!col("dup") && col("qpass"))
-        .withColumn("rk", row_number().over(w)).where(col("rk") <= 50)
+        .transform(TopK.perKey(_, col("source"))(50,
+          md5(concat(lit("asm:"), col("doc_id").cast(StringType))), col("doc_id")))
       flagged.groupBy(col("source"))
         .agg(count(lit(1)).as("n_raw"),
           count(when(!col("dup"), 1)).as("n_after_dedup"),
@@ -537,6 +534,10 @@ object QueriesPipeline {
           md5(col("text")).as("h"),
           TextFns.qualityScore(col("text")).as("score"),
           md5(concat(lit("asm:"), col("doc_id").cast(StringType))).as("rkey"))
+      // the per-source top-50 kept pool: built over the base era, re-ranked
+      // over base pool ∪ batch candidates
+      def topPool(df: org.apache.spark.sql.DataFrame) =
+        TopK.perKey(df, col("source"))(50, col("rkey"), col("doc_id"))
       val base = docsAll.where(col("doc_id") < 400)
       val statePath = DiskCache.keyedPath("asmstate_v1", s"$dir/documents.parquet")
       DiskCache.ensure(statePath,
@@ -553,9 +554,7 @@ object QueriesPipeline {
             count(when(!col("dup"), 1)).as("n_after_dedup"),
             count(when(!col("dup") && col("qpass"), 1)).as("n_after_quality"))
           .write.mode("overwrite").parquet(s"$tmp/stats")
-        val wp = Window.partitionBy(col("source")).orderBy(col("rkey"), col("doc_id"))
-        fl.where(!col("dup") && col("qpass"))
-          .withColumn("rk", row_number().over(wp)).where(col("rk") <= 50)
+        topPool(fl.where(!col("dup") && col("qpass")))
           .select(col("source"), col("doc_id"), col("n_chars"), col("rkey"))
           .write.mode("overwrite").parquet(s"$tmp/pool")
         fl.unpersist()
@@ -586,11 +585,9 @@ object QueriesPipeline {
         .agg(sum(col("n_raw")).as("n_raw"),
           sum(col("n_after_dedup")).as("n_after_dedup"),
           sum(col("n_after_quality")).as("n_after_quality"))
-      val wp = Window.partitionBy(col("source")).orderBy(col("rkey"), col("doc_id"))
-      val pool = s.read.parquet(s"$statePath/pool")
+      val pool = topPool(s.read.parquet(s"$statePath/pool")
         .unionByName(bfl.where(!col("dup") && col("qpass"))
-          .select(col("source"), col("doc_id"), col("n_chars"), col("rkey")))
-        .withColumn("rk", row_number().over(wp)).where(col("rk") <= 50)
+          .select(col("source"), col("doc_id"), col("n_chars"), col("rkey"))))
       stats
         .join(pool.groupBy(col("source"))
             .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("kept_id_sum"),
@@ -647,13 +644,11 @@ object QueriesPipeline {
         .withColumn("n_alloc",
           expr("CAST((CAST(500 AS DECIMAL(38,0)) * q) DIV greatest(qtot, 1) AS BIGINT)"))
         .select(col("source"), col("n_h"), col("q"), col("n_alloc"))
-      val w = Window.partitionBy(col("source"))
-        .orderBy(md5(concat(lit("strat:"), col("doc_id").cast(StringType))), col("doc_id"))
-      val picked = docs
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 500) // literal cap => WindowGroupLimit per source
+      // the literal cap 500 => WindowGroupLimit per source; the allocation after
+      val picked = TopK.perKey(docs, col("source"))(500,
+          md5(concat(lit("strat:"), col("doc_id").cast(StringType))), col("doc_id"))
         .join(broadcast(alloc), "source")
-        .where(col("rk") <= col("n_alloc"))
+        .where(col("rank") <= col("n_alloc"))
       alloc.join(picked.groupBy(col("source"))
           .agg(count(lit(1)).as("n_picked"), sum(col("doc_id")).as("picked_id_sum")),
           Seq("source"), "left")
@@ -670,12 +665,10 @@ object QueriesPipeline {
     // BEFORE the full per-group sort materializes; skewed giant domains cap
     // out early instead of sorting whole partitions.
     "source_quota" -> ((s, dir) => {
-      val w = Window.partitionBy(col("source"))
-        .orderBy(md5(concat(lit("q:"), col("doc_id").cast(StringType))), col("doc_id"))
       t(s, dir, "documents")
-        .withColumn("rk", row_number().over(w).cast(LongType))
-        .where(col("rk") <= 10)
-        .select(col("source"), col("doc_id"), col("rk"))
+        .transform(TopK.perKey(_, col("source"))(10,
+          md5(concat(lit("q:"), col("doc_id").cast(StringType))), col("doc_id")))
+        .select(col("source"), col("doc_id"), col("rank").cast(LongType).as("rk"))
         .orderBy(col("source"), col("doc_id"))
     }),
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.DataTable
+import graft.operators.TopK
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Tables._
@@ -141,11 +142,8 @@ object QueriesRelational {
     }),
 
     "window_rank" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc, col("o_orderkey"))
       t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
+        .transform(TopK.perKey(_, col("o_custkey"))(1, col("o_totalprice").desc, col("o_orderkey")))
         .select(col("o_custkey"), col("o_orderkey"), round(col("o_totalprice"), 2).as("best_price"))
         .orderBy(col("o_custkey"))
     }),

@@ -475,8 +475,20 @@ object QueriesScale {
       import graft.operators.DiskCache
       import graft.plans.{MvCatalog, MvDef, MvMeasures, MvRewriteRule}
       import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-      val statePath = DiskCache.keyedPath("mvfull_state_v1",
+      def roots(df: org.apache.spark.sql.DataFrame): Set[String] =
+        df.queryExecution.analyzed.collect {
+          case lr: LogicalRelation => lr.relation match {
+            case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+            case _ => Seq.empty
+          }
+        }.flatten.toSet
+      val mv = "mvfull_state_v1"
+      val basePaths = roots(t(s, dir, "orders")) ++ roots(t(s, dir, "lineitem"))
+      val statePath = DiskCache.keyedPath(mv,
         s"$dir/orders.parquet", s"$dir/lineitem.parquet")
+      // the state build below IS the MV's join-aggregate: a def registered
+      // under an earlier (possibly deleted) cache root would answer it
+      MvCatalog.drop(mv, basePaths)
       DiskCache.ensure(statePath) { tmp =>
         t(s, dir, "orders").join(t(s, dir, "lineitem"),
             col("o_orderkey") === col("l_orderkey"))
@@ -485,16 +497,9 @@ object QueriesScale {
             sum(col("l_quantity").cast(LongType)).as("q"))
           .write.mode("overwrite").parquet(tmp)
       }
-      def roots(df: org.apache.spark.sql.DataFrame): Set[String] =
-        df.queryExecution.analyzed.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten.toSet
-      MvCatalog.register(statePath, MvDef(
+      MvCatalog.register(mv, MvDef(
         stateScan = s.read.parquet(statePath).queryExecution.analyzed,
-        basePaths = roots(t(s, dir, "orders")) ++ roots(t(s, dir, "lineitem")),
+        basePaths = basePaths,
         groupCol = "o_orderpriority",
         leftKey = "o_orderkey", rightKey = "l_orderkey",
         measure = MvMeasures.oneOf(MvMeasures.countStar("n"),

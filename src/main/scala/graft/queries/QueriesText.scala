@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.functions.TextFns
-import org.apache.spark.sql.Column
+import graft.operators.TopK
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -205,6 +206,13 @@ object QueriesText {
   private val NdcgQueries = Seq((1L, "slow", "dup"), (2L, "merge", "join"),
     (3L, "scan", "vector"))
 
+  /** The bm25 cards' fixed queries (qid, bigram term): EXACTLY two terms
+    * per query, so a raw-double score sum is order-free. The SQL oracles
+    * spell the same six rows. */
+  private val Bm25Queries = Seq((0L, "hash join"), (0L, "table scan"),
+    (1L, "merge sort"), (1L, "batch stream"), (2L, "slow query"), (2L, "fast scan"))
+  private val Bm25Terms = Bm25Queries.map(_._2)
+
   /** The full-corpus bigram BM25 index shared by bm25_search and bm25_prf:
     * postings (term-sorted), doclens, dfs and corpus stats, built once per
     * documents fingerprint under DiskCache. Returns the index root. */
@@ -213,9 +221,7 @@ object QueriesText {
       "bm25_idx_v1", s"$dir/documents.parquet")
     graft.operators.DiskCache.ensure(base, Seq("postings/_SUCCESS",
       "doclens/_SUCCESS", "dfs/_SUCCESS", "stats/_SUCCESS")) { tmp =>
-      val terms = t(s, dir, "documents")
-        .select(col("doc_id"), TextFns.shingleExplode(TextFns.tokens(col("text")), 2).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+      val terms = bigramTerms(t(s, dir, "documents"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       terms.repartitionByRange(col("term")).sortWithinPartitions(col("term"))
         .write.parquet(s"$tmp/postings")
@@ -241,6 +247,39 @@ object QueriesText {
     .select(col("doc_id"), (size(TextFns.tokens(col("text"))) - 1).cast(LongType).as("dl"))
     .where(col("dl") > 0)
     .groupBy(col("doc_id")).agg(sum(col("dl")).as("dl"))
+
+  /** Bigram term frequencies (doc_id, term, tf): the postings rows of both
+    * BM25 indexes (bm25_idx_v1 and bm25_base_v1). */
+  private def bigramTerms(docs: DataFrame) = docs
+    .select(col("doc_id"), TextFns.shingleExplode(TextFns.tokens(col("text")), 2).as("term"))
+    .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+
+  /** One (term, doc) BM25 weight (k1 = 1.2, b = 0.75, Lucene's idf) over
+    * tf, df, dl, n_docs and total_len. bm25_search and bm25_incremental
+    * rank on this raw double, so its expression tree is part of the
+    * output; bm25_prf quantizes it to µ-units. */
+  private def bm25Weight: Column =
+    log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
+      (col("tf") * 2.2) / (col("tf") +
+        lit(1.2) * (lit(1.0) - 0.75 + lit(0.75) * col("dl")
+          / (col("total_len").cast(DoubleType) / col("n_docs"))))
+
+  /** Top-10 docs per query by summed BM25 weight over query-term postings:
+    * (qid, doc_id, score rounded to 1e-6, rank BIGINT) ordered by qid, rank.
+    * `qdf` is the query table joined with its terms' df, `stats` the
+    * one-row (n_docs, total_len). */
+  private def bm25Top10(postings: DataFrame, qdf: DataFrame, dlen: DataFrame,
+      stats: DataFrame): DataFrame =
+    postings.join(qdf, "term")
+      .join(dlen, "doc_id")
+      .crossJoin(stats)
+      .withColumn("part", bm25Weight)
+      .groupBy(col("qid"), col("doc_id")).agg(sum(col("part")).as("score"))
+      .transform(TopK.perKey(_, col("qid"))(10, col("score").desc, col("doc_id")))
+      .select(col("qid"), col("doc_id"),
+        (floor(col("score") * 1e6 + 0.5) / 1e6).as("score"),
+        col("rank").cast(LongType).as("rank"))
+      .orderBy(col("qid"), col("rank"))
 
   val queries: Map[String, Q] = Map(
     // Blocklist filtering card (the C4 "bad words" pipeline stage): per
@@ -379,37 +418,30 @@ object QueriesText {
       import s.implicits._
       import graft.functions.SimFns
       val qs = NdcgQueries.toDF("qid", "t1", "t2")
-      val wS = Window.partitionBy(col("qid"))
-        .orderBy(col("tf").desc, col("doc_id"))
       val sparse = t(s, dir, "documents")
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("w"))
         .join(broadcast(qs), col("w") === col("t1") || col("w") === col("t2"))
         .groupBy(col("qid"), col("doc_id")).agg(count(lit(1)).as("tf"))
-        .withColumn("rs", row_number().over(wS))
-        .where(col("rs") <= 20).select(col("qid"), col("doc_id"), col("rs"))
+        .transform(TopK.perKey(_, col("qid"))(20, col("tf").desc, col("doc_id")))
+        .select(col("qid"), col("doc_id"), col("rank").as("rs"))
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       val qe = e.where(col("vec_id").isInCollection(NdcgQueries.map(_._1)))
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val wD = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("doc_id"))
       val dense = e.crossJoin(broadcast(qe))
         .select(col("qid"), col("vec_id").as("doc_id"),
           SimFns.cosine(col("qv"), col("embedding")).as("cos"))
-        .withColumn("rd", row_number().over(wD))
-        .where(col("rd") <= 20).select(col("qid"), col("doc_id"), col("rd"))
-      val wF = Window.partitionBy(col("qid"))
-        .orderBy(col("rrf").desc, col("doc_id"))
+        .transform(TopK.perKey(_, col("qid"))(20, col("cos").desc, col("doc_id")))
+        .select(col("qid"), col("doc_id"), col("rank").as("rd"))
       sparse.join(dense, Seq("qid", "doc_id"), "full_outer")
         .select(col("qid"), col("doc_id"), col("rs"), col("rd"),
           (coalesce(lit(1.0) / (lit(60) + col("rs")), lit(0.0)) +
             coalesce(lit(1.0) / (lit(60) + col("rd")), lit(0.0))).as("rrf"))
-        .withColumn("fr", row_number().over(wF))
-        .where(col("fr") <= 10)
+        .transform(TopK.perKey(_, col("qid"))(10, col("rrf").desc, col("doc_id")))
         .select(col("qid"), col("doc_id"),
           col("rs").cast(LongType).as("sparse_rank"),
           col("rd").cast(LongType).as("dense_rank"),
           round(col("rrf"), 6).as("rrf"),
-          col("fr").cast(LongType).as("fused_rank"))
+          col("rank").cast(LongType).as("fused_rank"))
         .orderBy(col("qid"), col("fused_rank"))
     }),
 
@@ -752,9 +784,7 @@ object QueriesText {
       val scored = tf.join(dfreq, "term")
         .crossJoin(broadcast(nDocs))
         .withColumn("tfidf", col("tf") * log(col("n_docs") / col("df")))
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("term"))
-      scored.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+      TopK.perKey(scored, col("doc_id"))(1, col("tfidf").desc, col("term"))
         .select(col("doc_id"), col("term"), round(col("tfidf"), 6).as("tfidf"))
         .orderBy(col("doc_id"))
     }),
@@ -839,24 +869,16 @@ object QueriesText {
       val dft = s.read.parquet(s"$base/dfs")
       val dlen = s.read.parquet(s"$base/doclens")
       val stats = broadcast(s.read.parquet(s"$base/stats"))
-      val part6 = floor(
-        (log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * 2.2) / (col("tf") +
-            lit(1.2) * (lit(1.0) - 0.75 + lit(0.75) * col("dl")
-              / (col("total_len").cast(DoubleType) / col("n_docs"))))) * 1e6 + 0.5)
-        .cast(LongType)
+      val part6 = floor(bm25Weight * 1e6 + 0.5).cast(LongType)
       def scored(qterms: org.apache.spark.sql.DataFrame) =
         postings.join(broadcast(qterms), "term")
           .join(dft, "term").join(dlen, "doc_id").crossJoin(stats)
           .select(col("qid"), col("doc_id"), col("w"), part6.as("p6"))
-      val q0 = Seq((0L, "hash join"), (0L, "table scan"),
-        (1L, "merge sort"), (1L, "batch stream"),
-        (2L, "slow query"), (2L, "fast scan")).toDF("qid", "term")
+      val q0 = Bm25Queries.toDF("qid", "term")
       val s1 = scored(q0.withColumn("w", lit(10L)))
         .groupBy(col("qid"), col("doc_id")).agg(sum(col("p6")).as("sc1"))
-      val fb = s1.withColumn("rk", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("sc1").desc, col("doc_id"))))
-        .where(col("rk") <= 3).select(col("qid"), col("doc_id"))
+      val fb = TopK.perKey(s1, col("qid"))(3, col("sc1").desc, col("doc_id"))
+        .select(col("qid"), col("doc_id"))
         .localCheckpoint(false) // expansion vote join below
       val idf6 = floor(log(lit(1.0) +
         (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) * 1e6 + 0.5)
@@ -866,17 +888,14 @@ object QueriesText {
         .join(q0.select(col("qid"), col("term")), Seq("qid", "term"), "left_anti")
         .join(dft, "term").crossJoin(stats)
         .select(col("qid"), col("term"), (idf6 * col("wsum")).as("esc"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("esc").desc, col("term"))))
-        .where(col("rk") <= 2).select(col("qid"), col("term"))
+        .transform(TopK.perKey(_, col("qid"))(2, col("esc").desc, col("term")))
+        .select(col("qid"), col("term"))
       val allq = q0.withColumn("w", lit(10L))
         .unionByName(exp.withColumn("w", lit(5L)))
       scored(allq)
         .groupBy(col("qid"), col("doc_id"))
         .agg(sum(expr("w * p6")).as("score6w"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("score6w").desc, col("doc_id"))))
-        .where(col("rank") <= 5)
+        .transform(TopK.perKey(_, col("qid"))(5, col("score6w").desc, col("doc_id")))
         .select(col("qid"), col("doc_id"), col("score6w"),
           col("rank").cast(LongType).as("rank"))
         .orderBy(col("qid"), col("rank"))
@@ -885,32 +904,12 @@ object QueriesText {
     "bm25_search" -> ((s, dir) => {
       import s.implicits._
       val base = bm25Index(s, dir)
-      val q = Seq((0L, "hash join"), (0L, "table scan"),
-        (1L, "merge sort"), (1L, "batch stream"),
-        (2L, "slow query"), (2L, "fast scan")).toDF("qid", "term")
-      val qTerms = Seq("hash join", "table scan", "merge sort",
-        "batch stream", "slow query", "fast scan")
       val postings = s.read.parquet(s"$base/postings")
-        .where(col("term").isin(qTerms: _*))
-      val dft = s.read.parquet(s"$base/dfs").where(col("term").isin(qTerms: _*))
-      val dlen = s.read.parquet(s"$base/doclens")
-      val stats = broadcast(s.read.parquet(s"$base/stats"))
-      val qdf = broadcast(q.join(dft, "term"))
-      val scored = postings.join(qdf, "term")
-        .join(dlen, "doc_id")
-        .crossJoin(stats)
-        .withColumn("part",
-          log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-            (col("tf") * 2.2) / (col("tf") +
-              lit(1.2) * (lit(1.0) - 0.75 + lit(0.75) * col("dl")
-                / (col("total_len").cast(DoubleType) / col("n_docs")))))
-        .groupBy(col("qid"), col("doc_id")).agg(sum(col("part")).as("score"))
-      val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))
-      scored.withColumn("rank", row_number().over(w)).where(col("rank") <= 10)
-        .select(col("qid"), col("doc_id"),
-          (floor(col("score") * 1e6 + 0.5) / 1e6).as("score"),
-          col("rank").cast(LongType).as("rank"))
-        .orderBy(col("qid"), col("rank"))
+        .where(col("term").isin(Bm25Terms: _*))
+      val dft = s.read.parquet(s"$base/dfs").where(col("term").isin(Bm25Terms: _*))
+      val qdf = broadcast(Bm25Queries.toDF("qid", "term").join(dft, "term"))
+      bm25Top10(postings, qdf, s.read.parquet(s"$base/doclens"),
+        broadcast(s.read.parquet(s"$base/stats")))
     }),
 
     // Incremental BM25 index maintenance — the text-retrieval member of
@@ -929,10 +928,6 @@ object QueriesText {
       import s.implicits._
       import graft.operators.{CacheRegistry, DiskCache}
       val docs = t(s, dir, "documents")
-      def termsOf(df: org.apache.spark.sql.DataFrame) = df
-        .select(col("doc_id"),
-          TextFns.shingleExplode(TextFns.tokens(col("text")), 2).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       // the base-era cache key covers ONLY the base slice's content — a
       // file-level fingerprint of documents.parquet would change on every
       // batch append and re-tokenize the base each refresh, defeating the
@@ -950,7 +945,7 @@ object QueriesText {
       val base = s"${DiskCache.root}/bm25_base_v1_$baseKey"
       DiskCache.ensure(base, Seq("postings/_SUCCESS", "dfs/_SUCCESS",
         "doclens/_SUCCESS")) { tmp =>
-        val terms = termsOf(docs.where(col("doc_id") < 400))
+        val terms = bigramTerms(docs.where(col("doc_id") < 400))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         terms.write.parquet(s"$tmp/postings")
         terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -959,20 +954,15 @@ object QueriesText {
           .write.parquet(s"$tmp/doclens")
         terms.unpersist(): Unit
       }
-      val q = Seq((0L, "hash join"), (0L, "table scan"),
-        (1L, "merge sort"), (1L, "batch stream"),
-        (2L, "slow query"), (2L, "fast scan")).toDF("qid", "term")
-      val qTerms = Seq("hash join", "table scan", "merge sort",
-        "batch stream", "slow query", "fast scan")
       // the refresh tokenizes the BATCH only. Filter before the aggregate:
       // only query-term bigrams reach the (doc_id, term) shuffle, and only
       // that small table is tracked (postings union + batch df). Batch doc
       // lengths are derived per row from token counts, not from terms.
       val batch = docs.where(col("doc_id") >= 400)
       val batchTerms = CacheRegistry.track(
-        termsOf(batch).where(col("term").isin(qTerms: _*)))
+        bigramTerms(batch).where(col("term").isin(Bm25Terms: _*)))
       val postings = s.read.parquet(s"$base/postings").unionByName(batchTerms)
-      val dfs = s.read.parquet(s"$base/dfs").where(col("term").isin(qTerms: _*))
+      val dfs = s.read.parquet(s"$base/dfs").where(col("term").isin(Bm25Terms: _*))
         .unionByName(batchTerms.groupBy(col("term")).agg(count(lit(1)).as("df")))
         .groupBy(col("term")).agg(sum(col("df")).as("df"))
       // merged doclens: compact per-doc metadata, two consumers → tracked
@@ -980,22 +970,8 @@ object QueriesText {
         s.read.parquet(s"$base/doclens").unionByName(bigramDocLens(batch)))
       val stats = broadcast(
         dlen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len")))
-      val qdf = broadcast(q.join(dfs, "term"))
-      val scored = postings.where(col("term").isin(qTerms: _*)).join(qdf, "term")
-        .join(dlen, "doc_id")
-        .crossJoin(stats)
-        .withColumn("part",
-          log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-            (col("tf") * 2.2) / (col("tf") +
-              lit(1.2) * (lit(1.0) - 0.75 + lit(0.75) * col("dl")
-                / (col("total_len").cast(DoubleType) / col("n_docs")))))
-        .groupBy(col("qid"), col("doc_id")).agg(sum(col("part")).as("score"))
-      val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))
-      scored.withColumn("rank", row_number().over(w)).where(col("rank") <= 10)
-        .select(col("qid"), col("doc_id"),
-          (floor(col("score") * 1e6 + 0.5) / 1e6).as("score"),
-          col("rank").cast(LongType).as("rank"))
-        .orderBy(col("qid"), col("rank"))
+      val qdf = broadcast(Bm25Queries.toDF("qid", "term").join(dfs, "term"))
+      bm25Top10(postings.where(col("term").isin(Bm25Terms: _*)), qdf, dlen, stats)
     }),
 
     // Fixed-size token chunking with overlap (64-token windows, stride 48) —
@@ -1113,10 +1089,8 @@ object QueriesText {
         .where(col("text").isNotNull)
         .select(col("source"), explode(TextFns.tokens(col("text"))).as("w"))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
-      val wr = Window.partitionBy("source").orderBy(col("c").desc, col("w"))
-      tc.withColumn("r", row_number().over(wr))
-        .where(col("r") <= 100)
-        .select(col("source"), log(col("r").cast("double")).as("x"),
+      TopK.perKey(tc, col("source"))(100, col("c").desc, col("w"))
+        .select(col("source"), log(col("rank").cast("double")).as("x"),
           log(col("c").cast("double")).as("y"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_ranks"),
@@ -1154,11 +1128,10 @@ object QueriesText {
     "length_tail" -> ((s, dir) => {
       val r = t(s, dir, "documents")
         .where(col("n_chars").isNotNull && col("n_chars") > 0)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("source").orderBy(col("n_chars").desc, col("doc_id"))))
-      val thr = r.where(col("rk") === 21)
+        .transform(TopK.perKey(_, col("source"))(21, col("n_chars").desc, col("doc_id")))
+      val thr = r.where(col("rank") === 21)
         .select(col("source"), col("n_chars").as("x_k1"))
-      r.where(col("rk") <= 20)
+      r.where(col("rank") <= 20)
         .join(thr, "source")
         .select(col("source"),
           log(col("n_chars").cast("double") / col("x_k1")).as("lr"))

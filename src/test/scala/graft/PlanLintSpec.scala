@@ -187,7 +187,26 @@ class PlanLintSpec extends SparkSpec {
     "graft/queries/QueriesTrain.scala" -> ((2, "limit(QcSample) trainer sample + per-source domain aggregate (|sources| rows)"))
   )
 
-  test("driver .collect() sites stay within the audited per-file budget") {
+  /** Per-key top-k goes through `TopK.perKey` (its last order column is
+    * the one place a tie-break is decided). Every other Scala-API
+    * `row_number()….over(` site is a rank that is not a constant-k per-key
+    * cut, audited per file like `collectBudget`. The SQL
+    * `row_number() OVER` inside oracle strings does not count. */
+  private val rowNumberBudget: Map[String, (Int, String)] = Map(
+    "graft/operators/TopK.scala" -> ((1, "TopK.perKey itself")),
+    "graft/queries/QueriesAnalytics.scala" -> ((4, "global ranks after limit: dp_topk (5 rows), graph_pagerank_users and graph_ppr_users (100 rows); fdr_bh's BH rank over the event-types-bounded card")),
+    "graft/queries/QueriesDedup.scala" -> ((2, "ssjoin_prefix: class rn feeds window aggregates; the prefix rank's k depends on the data (n - ceil(n·tau) + 1)")),
+    "graft/queries/QueriesMlops.scala" -> ((2, "full ranks feeding an aggregate: bootstrap_ci percentile ranks, attribution_markov step sequence")),
+    "graft/queries/QueriesPipeline.scala" -> ((1, "quantile_normalize: per-block offset rank (every row kept)")),
+    "graft/queries/QueriesScale.scala" -> ((1, "gini_sources: full rank feeding the Gini aggregate")),
+    "graft/queries/QueriesText.scala" -> ((4, "search_ndcg: two full ranks feeding the NDCG aggregate; rake_keywords: run id (pos - rn) and the global rank after limit(10)"))
+  )
+
+  /** Exact per-file counts of `pattern` in main source against an audited
+    * budget: a new site fails until it is audited, a removed one until its
+    * budget is lowered. */
+  private def budgetProblems(pattern: scala.util.matching.Regex, what: String,
+      budget: Map[String, (Int, String)]): Seq[String] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val root = Paths.get("src/main/scala")
@@ -196,19 +215,31 @@ class PlanLintSpec extends SparkSpec {
       .filter(p => p.toString.endsWith(".scala"))
       .map { p =>
         val src = new String(Files.readAllBytes(p), "UTF-8")
-        root.relativize(p).toString -> "\\.collect\\(\\)".r.findAllIn(src).length
+        root.relativize(p).toString -> pattern.findAllIn(src).length
       }
       .filter(_._2 > 0).toMap
     val problems = scala.collection.mutable.ArrayBuffer.empty[String]
-    for ((f, n) <- counts) collectBudget.get(f) match {
-      case None => problems += s"$f: $n unaudited .collect() site(s) — audit the bound and add a budget entry"
-      case Some((b, _)) if n != b => problems += s"$f: $n .collect() site(s), audited budget $b — re-audit"
+    for ((f, n) <- counts) budget.get(f) match {
+      case None => problems += s"$f: $n unaudited $what site(s) — audit the bound and add a budget entry"
+      case Some((b, _)) if n != b => problems += s"$f: $n $what site(s), audited budget $b — re-audit"
       case _ => ()
     }
-    for ((f, _) <- collectBudget if !counts.contains(f))
-      problems += s"$f: budget entry but no .collect() in source — remove the stale audit"
+    for ((f, _) <- budget if !counts.contains(f))
+      problems += s"$f: budget entry but no $what in source — remove the stale audit"
+    problems.toSeq
+  }
+
+  test("driver .collect() sites stay within the audited per-file budget") {
+    val problems = budgetProblems("\\.collect\\(\\)".r, ".collect()", collectBudget)
     assert(problems.isEmpty,
       s"${problems.size} driver-collect lint failures:\n  " + problems.mkString("\n  "))
+  }
+
+  test("Scala-API row_number() windows stay within the audited per-file budget") {
+    val problems = budgetProblems("row_number\\(\\)\\s*\\.over\\(".r, "row_number().over(",
+      rowNumberBudget)
+    assert(problems.isEmpty, s"${problems.size} row_number lint failures (per-key top-k " +
+      "goes through TopK.perKey):\n  " + problems.mkString("\n  "))
   }
 
   test("the window allowlist names only live queries (no stale entries)") {

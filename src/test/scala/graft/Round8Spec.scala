@@ -209,18 +209,8 @@ class Round8Spec extends SparkSpec {
       s"expected the MV state scan in the plan:\n${plan.take(4000)}")
     assert(!plan.contains("orders.parquet") && !plan.contains("lineitem.parquet"),
       s"fact-table scan survived the rewrite:\n${plan.take(4000)}")
-    // and the rewritten answer equals the naive plan executed WITHOUT the
-    // rule (fresh session: extraOptimizations are session-scoped)
-    val bare = spark.newSession()
-    val naive = graft.queries.Tables.t(bare, dir, "orders")
-      .join(graft.queries.Tables.t(bare, dir, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("l_quantity").cast("long")).as("sum_qty"))
-      .orderBy(col("o_orderpriority"))
-      .collect().map(_.toSeq).toSeq
-    assert(df.collect().map(_.toSeq).toSeq == naive)
+    // and the rewritten answer equals the naive plan executed WITHOUT the rule
+    assert(df.collect().map(_.toSeq).toSeq == naiveMv())
     // a query the matcher must NOT claim (filtered base) stays on the facts
     val filtered = graft.queries.Tables.t(spark, dir, "orders")
       .where(col("o_totalprice") > 1000.0)
@@ -231,6 +221,53 @@ class Round8Spec extends SparkSpec {
     val fplan = filtered.queryExecution.executedPlan.toString
     assert(!fplan.contains("mvfull_state_v1"),
       "rewrite wrongly claimed a filtered query")
+  }
+
+  test("mv_rewrite: a deleted or changed cache root never serves a dead MV state") {
+    val expected = naiveMv()
+    val prev = sys.props.get("graft.cache.root")
+    val a = java.nio.file.Files.createTempDirectory("mv-root-a-").toFile
+    val b = java.nio.file.Files.createTempDirectory("mv-root-b-").toFile
+    def rmrf(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmrf))
+      f.delete(): Unit
+    }
+    def runUnder(root: java.io.File, step: String): Unit = {
+      sys.props("graft.cache.root") = root.getPath
+      val df = graft.queries.QueriesScale.queries("mv_rewrite")(spark, dir)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains(root.getPath), s"$step: the rewrite must read this root's state:\n${plan.take(4000)}")
+      assert(df.collect().map(_.toSeq).toSeq == expected, step)
+    }
+    try {
+      runUnder(a, "root A")
+      rmrf(a)
+      runUnder(b, "root B after A was deleted")
+      assert(a.mkdirs())
+      runUnder(a, "re-created root A")
+    } finally {
+      prev match {
+        case Some(v) => sys.props("graft.cache.root") = v
+        case None    => sys.props.remove("graft.cache.root"): Unit
+      }
+      // leave the session's MV registered on a live state for later suites
+      graft.queries.QueriesScale.queries("mv_rewrite")(spark, dir).collect()
+      rmrf(a); rmrf(b)
+    }
+  }
+
+  /** The naive join-aggregate executed WITHOUT the MV rule (a fresh session:
+    * extraOptimizations are session-scoped). */
+  private def naiveMv(): Seq[Seq[Any]] = {
+    val bare = spark.newSession()
+    graft.queries.Tables.t(bare, dir, "orders")
+      .join(graft.queries.Tables.t(bare, dir, "lineitem"),
+        col("o_orderkey") === col("l_orderkey"))
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n_rows"),
+        sum(col("l_quantity").cast("long")).as("sum_qty"))
+      .orderBy(col("o_orderpriority"))
+      .collect().map(_.toSeq).toSeq
   }
 
   test("join_bucketed: co-located layout joins with zero shuffle exchange on either side") {
