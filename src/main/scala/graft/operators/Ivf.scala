@@ -35,19 +35,10 @@ object Ivf {
     ColumnBridge.column(
       graft.plans.NearestCellDists(ColumnBridge.expression(vec), cents, n))
 
-  /** Materialize a (cell, centroid) DataFrame to the driver-side matrix the
-    * assignment expression embeds. Cells are dense 0..k-1 by construction. */
-  def collectCentroids(centroids: DataFrame): Array[Array[Double]] = {
-    val rows = centroids.select(col("cell"), col("centroid")).collect()
-    val out = new Array[Array[Double]](rows.map(_.getInt(0)).max + 1)
-    rows.foreach(r => out(r.getInt(0)) = r.getSeq[Double](1).toArray)
-    out
-  }
-
   /** Train k centroids with Lloyd iterations to convergence (max centroid
-    * L2 movement < `tol`) or `maxIters`; returns the (cell: Int,
-    * centroid: Array[Double]) table (k tiny rows). Each iteration is one
-    * narrow codegen'd assign pass + one (cell, dim) aggregate whose map-side
+    * L2 movement < `tol`) or `maxIters`; returns the k centroids, indexed
+    * by cell. Each iteration is one narrow codegen'd assign pass + one
+    * (cell, dim) aggregate whose map-side
     * combine collapses the posexplode blowup to k×dim partials per
     * partition — the shuffle moves k×dim×partitions rows regardless of
     * corpus size. Results materialize on the driver per iteration: chaining
@@ -65,7 +56,7 @@ object Ivf {
     * the probe is one early-terminating `limit(maxRows+1).count()` job. */
   def train(vectors: DataFrame, idCol: String, vecCol: String, k: Int,
             maxIters: Int = 6, tol: Double = 1e-2,
-            maxRows: Long = 1L << 22): DataFrame = {
+            maxRows: Long = 1L << 22): Array[Array[Double]] = {
     // saturate BEFORE the +1: maxRows = Long.MaxValue must not overflow to a
     // negative limit()
     val probed =
@@ -74,7 +65,6 @@ object Ivf {
       s"Ivf.train is the exhaustive (full-corpus-scan) Lloyd path, capped at $maxRows rows " +
         s"(corpus has more). Use Ivf.trainSampled — the corpus-size-independent trainer — " +
         s"or raise maxRows explicitly if an exhaustive fit on a ragged corpus is intended.")
-    val spark = vectors.sparkSession
     var cents: Array[Array[Double]] = vectors.orderBy(col(idCol)).limit(k)
       .select(SimFns.toDouble(col(vecCol)).as("v")).collect()
       .map(_.getSeq[Double](0).toArray)
@@ -102,8 +92,7 @@ object Ivf {
       cents = next
       it += 1
     }
-    import spark.implicits._
-    cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
+    cents
   }
 
   /** Sample-trained quantizer — the corpus-size-INDEPENDENT training path
@@ -116,33 +105,36 @@ object Ivf {
     * order, seeds = first k of the sample, ties to the lower cell, empty
     * cells keep their previous centroid (identical conventions to
     * [[train]]). Requires uniform vector dimension (use [[train]] for
-    * ragged corpora). Returns the same (cell, centroid) table shape. */
+    * ragged corpora). Returns the centroids in the same shape. */
   def trainSampled(vectors: DataFrame, idCol: String, vecCol: String, k: Int,
-                   maxIters: Int = 25, tol: Double = 1e-4, sampleN: Int = 2048): DataFrame = {
-    val spark = vectors.sparkSession
+                   maxIters: Int = 25, tol: Double = 1e-4,
+                   sampleN: Int = 2048): Array[Array[Double]] = {
     val sample = vectors.orderBy(col(idCol)).limit(sampleN)
       .select(SimFns.toDouble(col(vecCol))).collect()
       .map(_.getSeq[Double](0).toArray)
     require(sample.nonEmpty, "no vectors to train on")
-    val cents = Pq.lloydLocal(sample, k, maxIters, tol)
-    import spark.implicits._
-    cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
+    Pq.lloydLocal(sample, k, maxIters, tol)
   }
 
-  /** Assign every vector to its nearest centroid. Returns (idCol, cell) —
-    * one codegen'd projection, no join, no shuffle. */
-  def assign(vectors: DataFrame, centroids: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val cents = collectCentroids(centroids)
-    vectors.select(col(idCol), element_at(nearestCells(col(vecCol), cents, 1), 1).as("cell"))
-  }
-
-  /** Build the searchable index ONCE: vectors tagged with their cell. In
-    * production this is written out partitioned by `cell` so probes become
+  /** Build the searchable index ONCE: vectors tagged with their nearest
+    * cell — one codegen'd projection, no join, no shuffle. In production
+    * this is written out partitioned by `cell` so probes become
     * partition-pruned scans. */
-  def index(vectors: DataFrame, centroids: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val cents = collectCentroids(centroids)
+  def index(vectors: DataFrame, cents: Array[Array[Double]], idCol: String,
+            vecCol: String): DataFrame =
     vectors.withColumn("cell", element_at(nearestCells(col(vecCol), cents, 1), 1))
-  }
+
+  /** The probe side of every IVF search: each query row (`qid`, `qe`, …)
+    * fanned out to its `nprobe` nearest cells, as `cell` plus the cell's
+    * 1-based nearness rank `crank` (ties to the lower cell, as in
+    * [[NearestCells]]). Join it to an [[index]] on `cell`. It is
+    * query-sized, so it is marked for broadcast: the index streams, and
+    * over a [[readIndex]] layout the broadcast probe becomes the dynamic
+    * partition filter. */
+  def probe(queries: DataFrame, cents: Array[Array[Double]], nprobe: Int): DataFrame =
+    broadcast(queries
+      .select(col("*"), posexplode(nearestCells(col("qe"), cents, nprobe)).as(Seq("crank", "cell")))
+      .withColumn("crank", col("crank") + 1))
 
   /** Cell assignment with a bounded-occupancy GUARANTEE at ANY corpus size
     * — the tier past [[NearestCells]]' literal-centroid ceiling (round-10
@@ -150,7 +142,7 @@ object Ivf {
     * vectors; past that, fixed-k cells grow as N/k and the within-cell
     * quadratic term returns).
     *
-    * Base tier: the caller's pre-trained centroid table (k ≤ a few
+    * Base tier: the caller's pre-trained centroids (k ≤ a few
     * thousand — the trained-sample and plan-reference-object budget) via
     * the codegen'd [[NearestCells]] scan, bit-identical to [[index]] when
     * no cell overflows — so existing oracles over the base tier stay
@@ -185,14 +177,14 @@ object Ivf {
     * (first-k seeds, lower-index ties), the argmin ties to the lower sub
     * id via the struct min. Returns (idCol, vecCol, cell: Long).
     */
-  def assignBounded(vectors: DataFrame, centroids: DataFrame,
+  def assignBounded(vectors: DataFrame, cents: Array[Array[Double]],
                     idCol: String, vecCol: String,
                     targetOcc: Long = 512L, occSlack: Long = 4L,
                     sampleN: Int = 2048, maxDepth: Int = 3): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val bound = occSlack * targetOcc
-    var assigned = index(vectors, centroids, idCol, vecCol)
+    var assigned = index(vectors, cents, idCol, vecCol)
       .select(col(idCol), col(vecCol), col("cell").cast("long").as("cell"))
       .localCheckpoint(false) // re-read per depth by the occupancy probe
     var depth = 0
@@ -264,29 +256,21 @@ object Ivf {
   /** Persist the index partitioned by cell — the on-disk ANN layout for a
     * 100 TB corpus: every cell is its own directory, so a probe against
     * [[readIndex]] scans ONLY the probed cells' files. With the probe side
-    * broadcast, Spark's dynamic partition pruning turns the cell equi-join
-    * into partition filters at runtime (IvfSpec asserts the `dynamicpruning`
-    * filter in the executed plan). */
+    * broadcast ([[probe]]), Spark's dynamic partition pruning turns the
+    * cell equi-join into partition filters at runtime (IvfSpec asserts the
+    * `dynamicpruning` filter in the executed plan). */
   def writeIndex(indexed: DataFrame, path: String): Unit =
     indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
 
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Top-k cosine search probing the query's `nprobe` nearest cells, over a
-    * pre-built [[index]]. The probe-cell choice is the same codegen'd
-    * expression (exploded to `nprobe` rows per query); ranking is
-    * [[TopK.perKey]] per query id, so work scales with queries × probed
-    * candidates. */
-  def search(indexed: DataFrame, centroids: DataFrame, queries: DataFrame,
-             idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
-             topK: Int, nprobe: Int): DataFrame = {
-    val cents = collectCentroids(centroids)
-    val qCells = queries.select(col(qIdCol), col(qVecCol),
-      explode(nearestCells(col(qVecCol), cents, nprobe)).as("cell"))
-    TopK.perKey(qCells.join(indexed, "cell")
-        .select(col(qIdCol), col(idCol),
-          SimFns.cosine(col(qVecCol), col(vecCol)).as("cos")),
-      col(qIdCol))(topK, col("cos").desc, col(idCol))
-  }
+  /** Top-k cosine search of the queries (`qid`, `qe`) over a pre-built
+    * [[index]] (`vec_id`, `vecCol`, `cell`): each query [[probe]]s its
+    * `nprobe` nearest cells, and [[TopK.byCosine]] re-ranks the probed
+    * candidates exactly, so work scales with queries × probed candidates.
+    * Returns (qid, vec_id, cos, rank). */
+  def search(indexed: DataFrame, cents: Array[Array[Double]], queries: DataFrame,
+             vecCol: String, topK: Int, nprobe: Int): DataFrame =
+    TopK.byCosine(probe(queries, cents, nprobe).join(indexed, "cell"), topK, vecCol)
 }

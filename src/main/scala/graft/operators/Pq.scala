@@ -124,15 +124,14 @@ object Pq {
     }
   }
 
-  /** Every query's ADC table as one broadcast (qid, j, code, d) relation:
-    * Q×m×k rows collected driver-side — query-set-sized, never
-    * corpus-sized. */
-  private def adcLut(queries: DataFrame, qidCol: String, qvecCol: String,
-                     books: Seq[Array[Array[Double]]]): DataFrame = {
+  /** Every query's ADC table as one broadcast (qid, j, code, d) relation
+    * over the queries (`qid`, `qe`): Q×m×k rows collected driver-side —
+    * query-set-sized, never corpus-sized. */
+  private def adcLut(queries: DataFrame, books: Seq[Array[Array[Double]]]): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
     val luts = queries
-      .select(col(qidCol).cast("long"), SimFns.toDouble(col(qvecCol))).collect()
+      .select(col("qid").cast("long"), SimFns.toDouble(col("qe"))).collect()
       .flatMap { r =>
         adcTable(r.getSeq[Double](1).toArray, books)
           .map { case (j, c, d) => (r.getLong(0), j, c, d) }
@@ -140,36 +139,35 @@ object Pq {
     broadcast(luts.toDF("qid", "j", "code", "d"))
   }
 
-  /** Approximate top-k by squared L2 via ADC over an encoded corpus: the
+  /** The ADC ranking tail: per-(qid, vec_id) sums of the looked-up `d`
+    * terms (partial-aggregated, so the shuffle carries one row per pair),
+    * top `topk` per query by (dist2, vec_id). */
+  private def adcTopK(terms: DataFrame, topk: Int): DataFrame =
+    TopK.perKey(terms.groupBy(col("qid"), col("vec_id")).agg(sum(col("d")).as("dist2")),
+      col("qid"))(topk, col("dist2").asc, col("vec_id").asc)
+
+  /** Approximate top-k by squared L2 via ADC over an encoded corpus
+    * (`vec_id`, `codes`) for the queries (`qid`, `qe`): the
     * (query × subspace × code) distance tables broadcast (Q×m×k rows — query
     * -set-sized, never corpus-sized), codes explode to (id, subspace, code)
     * and join the table map-side, partial-aggregated sums reduce the shuffle
-    * to one row per (query, id). Returns (qid, idCol, dist2, rank). */
-  def search(encoded: DataFrame, idCol: String, queries: DataFrame,
-             qidCol: String, qvecCol: String, books: Seq[Array[Array[Double]]],
+    * to one row per (query, id). Returns (qid, vec_id, dist2, rank). */
+  def search(encoded: DataFrame, queries: DataFrame, books: Seq[Array[Array[Double]]],
              topk: Int): DataFrame =
-    TopK.perKey(encoded
-        .select(col(idCol), posexplode(col("codes")).as(Seq("j", "code")))
-        .join(adcLut(queries, qidCol, qvecCol, books), Seq("j", "code"))
-        .groupBy(col("qid"), col(idCol)).agg(sum(col("d")).as("dist2")),
-      col("qid"))(topk, col("dist2").asc, col(idCol).asc)
+    adcTopK(encoded
+      .select(col("vec_id"), posexplode(col("codes")).as(Seq("j", "code")))
+      .join(adcLut(queries, books), Seq("j", "code")), topk)
 
   /** IVF-PQ search (FAISS IndexIVFPQ, by_residual=false): each query
-    * (`qid`, `qvecCol`) probes its `nprobe` nearest of the coarse `cents`
-    * through a broadcast (qid, cell) join, and only the probed cells'
-    * codes are ADC-scored — each vector lives in exactly one cell, so no
-    * dedup is needed, and the ADC sum folds ascending-j as in [[search]].
-    * `encoded` holds (idCol, cell, codes). Returns (qid, idCol, dist2,
+    * (`qid`, `qe`) probes its `nprobe` nearest of the coarse `cents`
+    * ([[Ivf.probe]]), and only the probed cells' codes are
+    * ADC-scored — each vector lives in exactly one cell, so no dedup is
+    * needed, and the ADC sum folds ascending-j as in [[search]].
+    * `encoded` holds (vec_id, cell, codes). Returns (qid, vec_id, dist2,
     * rank). */
-  def ivfSearch(encoded: DataFrame, idCol: String, cents: Array[Array[Double]],
-                queries: DataFrame, qvecCol: String, books: Seq[Array[Array[Double]]],
-                nprobe: Int, topk: Int): DataFrame = {
-    val probes = queries.select(col("qid"),
-      explode(Ivf.nearestCells(col(qvecCol), cents, nprobe)).as("cell"))
-    TopK.perKey(encoded.join(broadcast(probes), "cell")
-        .select(col("qid"), col(idCol), posexplode(col("codes")).as(Seq("j", "code")))
-        .join(adcLut(queries, "qid", qvecCol, books), Seq("qid", "j", "code"))
-        .groupBy(col("qid"), col(idCol)).agg(sum(col("d")).as("dist2")),
-      col("qid"))(topk, col("dist2").asc, col(idCol).asc)
-  }
+  def ivfSearch(encoded: DataFrame, cents: Array[Array[Double]], queries: DataFrame,
+                books: Seq[Array[Array[Double]]], nprobe: Int, topk: Int): DataFrame =
+    adcTopK(encoded.join(Ivf.probe(queries, cents, nprobe), "cell")
+      .select(col("qid"), col("vec_id"), posexplode(col("codes")).as(Seq("j", "code")))
+      .join(adcLut(queries, books), Seq("qid", "j", "code")), topk)
 }

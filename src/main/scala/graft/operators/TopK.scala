@@ -1,11 +1,15 @@
 package graft.operators
 
+import graft.functions.SimFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Per-key top-k: the one ranking step of the similarity family (exact,
-  * IVF, LSH, PQ and MaxSim searches, kNN votes, beam hops).
+/** Per-key top-k: the one constant-k ranking step of the query layer. The
+  * similarity family ranks through it (exact, IVF, LSH, PQ and MaxSim
+  * searches, kNN votes, beam hops), and so do the text, analytics,
+  * pipeline and relational cards that keep the best k rows per key (bm25
+  * and tf-idf tops, fusion ranks, per-group samples and quotas).
   *
   * The `rank <= k` filter over a `row_number` window is the form Spark 4
   * plans as `WindowGroupLimit`: each task keeps at most k rows per key
@@ -28,4 +32,15 @@ object TopK {
   def perKey(df: DataFrame, keys: Column*)(k: Int, order: Column*): DataFrame =
     df.withColumn("rank", row_number().over(Window.partitionBy(keys: _*).orderBy(order: _*)))
       .where(col("rank") <= k)
+
+  /** The exact verify step of the similarity family: score every candidate
+    * row of `cand` (query `qid` with vector `qe`, corpus row `vec_id` with
+    * vector `vec`) by `SimFns.cosine(qe, vec)` as `cos`, and keep each
+    * query's top `k` by (`cos` desc, `vec_id`). Brute-force scans, IVF
+    * probes, LSH buckets and Hamming shortlists differ only in how `cand`
+    * is built. Returns (qid, vec_id, `keep`…, cos, rank). */
+  def byCosine(cand: DataFrame, k: Int, vec: String, keep: String*): DataFrame =
+    perKey(cand.select(Seq(col("qid"), col("vec_id")) ++ keep.map(col) :+
+        SimFns.cosine(col("qe"), col(vec)).as("cos"): _*),
+      col("qid"))(k, col("cos").desc, col("vec_id"))
 }

@@ -106,10 +106,8 @@ object QueriesSim {
     * exact count ratio. */
   private def knnVote(e: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val nn = e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("qlbl"), col("vec_id"), col("lbl"),
-        SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-      .transform(TopK.perKey(_, col("qid"))(10, col("cos").desc, col("vec_id")))
+    val nn = TopK.byCosine(e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid")),
+      10, "embedding", "qlbl", "lbl")
     val pred = nn.groupBy(col("qid"), col("qlbl"), col("lbl"))
       .agg(count(lit(1)).as("votes"))
       .transform(TopK.perKey(_, col("qid"))(1, col("votes").desc, col("lbl").asc))
@@ -119,6 +117,21 @@ object QueriesSim {
       .withColumn("accuracy",
         expr("floor(CAST(n_correct AS DOUBLE) / n_queries * 1e6 + 0.5) / 1e6"))
       .orderBy(col("label"))
+  }
+
+  /** ann_recall / ann_nprobe_sweep's ground truth: the exact cosine top-10
+    * of the panel candidates `cand` as (qid, vec_id), and its row count.
+    * Panel-bounded (queries × 10 rows), so it is collected once into a
+    * broadcast local relation instead of persisted — a cached RDD would sit
+    * in executor storage for the rest of the session (the Verify sweep runs
+    * every card in one SparkSession). */
+  private def panelTruth(cand: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, Long) = {
+    val plan = TopK.byCosine(cand, 10, "embedding").select(col("qid"), col("vec_id"))
+    val rows = plan.collect()
+    val s = cand.sparkSession
+    (broadcast(s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), plan.schema)),
+      rows.length.toLong)
   }
 
   /** nndescent_round's graph construction, shared with sim_beam_search (one
@@ -196,8 +209,7 @@ object QueriesSim {
     import graft.operators.Ivf
     val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(
-      Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val centLit = array(cents.map(c => typedLit(c.toSeq)): _*)
     val res = e.select(col("vec_id"),
         element_at(Ivf.nearestCells(col("embedding"), cents, 1), 1).as("cell"),
@@ -269,6 +281,18 @@ object QueriesSim {
     (k, off)
   }
 
+  /** SemDeDup's drop rule between two cell-assigned (vec_id, embedding,
+    * cell) frames: every row of `b` that has a lower-id row of `x` in its
+    * cell above cos 0.95, as (cell, did). One row per dropping pair —
+    * callers take the distinct set. */
+  private def semdedupDrops(x: org.apache.spark.sql.DataFrame,
+                            b: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    x.as("x").join(b.as("b"),
+        col("x.cell") === col("b.cell") && col("x.vec_id") < col("b.vec_id") &&
+          SimFns.cosine(col("x.embedding"), col("b.embedding")) > 0.95)
+      .select(col("b.cell").as("cell"), col("b.vec_id").as("did"))
+
   /** kcenter_coreset's deterministic greedy fit — a pure function of the
     * first-256 vectors in id order (the trainSampled convention), shared by
     * the query and its trained-oracle generator so the two cannot drift:
@@ -310,8 +334,7 @@ object QueriesSim {
       import graft.operators.Ivf
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
-      val cents = Ivf.collectCentroids(
-        Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
       // one native k×dim loop per row (NearestCellDists) — the explicit
       // 8×dim column-chain alternative compiled to 9.9 MiB task binaries
       // and ~6× the runtime; distances add in ascending element order, so
@@ -418,8 +441,8 @@ object QueriesSim {
       val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
       val enc = Pq.encode(e, "vec_id", "embedding", books)
       val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      ranked(Pq.search(enc, "vec_id", q, "qid", "embedding", books, 10), "dist2")
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      ranked(Pq.search(enc, q, books, 10), "dist2")
     }),
 
     // Late-interaction retrieval (ColBERT's MaxSim, Khattab & Zaharia
@@ -467,7 +490,7 @@ object QueriesSim {
           posexplode(array((0 until 4).map(i =>
             slice(col("embedding"), i * d + 1, d)): _*)).as(Seq("pos", "sub")))
         .select((col("vec_id") * 4 + col("pos")).as("sid"), col("sub"))
-      val cents = Ivf.collectCentroids(Ivf.trainSampled(slices, "sid", "sub", k = 32))
+      val cents = Ivf.trainSampled(slices, "sid", "sub", k = 32)
       val cellsArr = array((0 until 4).map(i =>
         element_at(Ivf.nearestCells(slice(col("embedding"), i * d + 1, d), cents, 1), 1)): _*)
       val docs = e.select(col("vec_id"), col("embedding"), cellsArr.as("cells"))
@@ -525,10 +548,7 @@ object QueriesSim {
       val e = t(s, dir, "embeddings")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      e.join(broadcast(q))
-        .select(col("qid"), col("vec_id"),
-          SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-        .transform(TopK.perKey(_, col("qid"))(10, col("cos").desc, col("vec_id")))
+      TopK.byCosine(e.join(broadcast(q)), 10, "embedding")
         .transform(ranked(_, "cos"))
     }),
 
@@ -538,10 +558,7 @@ object QueriesSim {
       val e = t(s, dir, "embeddings")
       val q = e.where(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("label").as("qlabel"))
-      e.join(broadcast(q), col("label") === col("qlabel"))
-        .select(col("qid"), col("vec_id"),
-          SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-        .transform(TopK.perKey(_, col("qid"))(5, col("cos").desc, col("vec_id")))
+      TopK.byCosine(e.join(broadcast(q), col("label") === col("qlabel")), 5, "embedding")
         .transform(ranked(_, "cos"))
     }),
 
@@ -559,7 +576,7 @@ object QueriesSim {
       val idx = Ivf.index(e, centroids, "vec_id", "embedding")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      Ivf.search(idx, centroids, q, "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+      Ivf.search(idx, centroids, q, "embedding", topK = 10, nprobe = 3)
         .transform(ranked(_, "cos"))
     }),
 
@@ -582,7 +599,7 @@ object QueriesSim {
         .unionByName(Ivf.readIndex(s, s"$base/batch_1"))
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      Ivf.search(idx, cents, q, "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+      Ivf.search(idx, cents, q, "embedding", topK = 10, nprobe = 3)
         .transform(ranked(_, "cos"))
     }),
 
@@ -610,7 +627,7 @@ object QueriesSim {
       val idx = Ivf.readIndex(s, s"$base/compacted_1")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      Ivf.search(idx, cents, q, "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+      Ivf.search(idx, cents, q, "embedding", topK = 10, nprobe = 3)
         .transform(ranked(_, "cos"))
     }),
 
@@ -651,7 +668,7 @@ object QueriesSim {
       // oracle's query CTE reads the post-delete corpus)
       val q = e.where(col("vec_id") < 5 && col("vec_id") % 30 =!= 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      Ivf.search(idx, cents, q, "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+      Ivf.search(idx, cents, q, "embedding", topK = 10, nprobe = 3)
         .transform(ranked(_, "cos"))
     }),
 
@@ -692,11 +709,10 @@ object QueriesSim {
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
       val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-      val ca = Ivf.collectCentroids(cents)
-      val k = ca.length
+      val k = cents.length
       val ev = e.select(col("vec_id"), SimFns.toDouble(col("embedding")).as("v"))
       def assigned(df: org.apache.spark.sql.DataFrame) = {
-        val cd = element_at(Ivf.nearestCellDists(col("v"), ca, 1), 1)
+        val cd = element_at(Ivf.nearestCellDists(col("v"), cents, 1), 1)
         df.select(col("vec_id"), col("v"), cd.getField("cell").as("cell"),
           floor(cd.getField("d2") * 1e6 + 0.5).cast(LongType).as("d2u"))
       }
@@ -728,11 +744,9 @@ object QueriesSim {
           .unionByName(ba.select(col("vec_id"), col("v"), col("cell")))
         val qs = ba.where(col("vec_id") < off + 25L)
           .select(col("vec_id").as("qid"), col("v").as("qe"))
-        val ivfTop = Ivf.search(idx, cents, qs, "vec_id", "v", "qid", "qe",
-          topK = 10, nprobe = 3).select(col("qid"), col("vec_id"))
-        val truth = idx.crossJoin(broadcast(qs))
-          .select(col("qid"), col("vec_id"), SimFns.cosine(col("qe"), col("v")).as("cos"))
-          .transform(TopK.perKey(_, col("qid"))(10, col("cos").desc, col("vec_id")))
+        val ivfTop = Ivf.search(idx, cents, qs, "v", topK = 10, nprobe = 3)
+          .select(col("qid"), col("vec_id"))
+        val truth = TopK.byCosine(idx.crossJoin(broadcast(qs)), 10, "v")
           .select(col("qid"), col("vec_id"))
         val rec = ivfTop.join(truth, Seq("qid", "vec_id"))
           .agg(count(lit(1)).as("hits"))
@@ -771,13 +785,10 @@ object QueriesSim {
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
       val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-      val ca = Ivf.collectCentroids(cents)
       val idx = Ivf.index(e, cents, "vec_id", "embedding")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val probes = q.select(col("qid"), col("qe"),
-        explode(Ivf.nearestCells(col("qe"), ca, 3)).as("cell"))
-      val hits = idx.join(broadcast(probes), "cell")
+      val hits = idx.join(Ivf.probe(q, cents, 3), "cell")
         .where(col("vec_id") =!= col("qid") &&
           SimFns.cosine(col("qe"), col("embedding")) >= 0.3)
         .groupBy(col("qid"))
@@ -816,10 +827,8 @@ object QueriesSim {
         .orderBy(md5(concat(lit("mrr1:"), col("vec_id").cast("string"))), col("vec_id"))
         .limit(64)
         .select(col("vec_id").as("qid"), col("lbl").as("qlbl"), col("embedding").as("qe"))
-      val top = e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("qlbl"), col("vec_id"), col("lbl"),
-          SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-        .transform(TopK.perKey(_, col("qid"))(100, col("cos").desc, col("vec_id")))
+      val top = TopK.byCosine(e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid")),
+        100, "embedding", "qlbl", "lbl")
       val firstHit = top.where(col("lbl") === col("qlbl"))
         .groupBy(col("qid"), col("qlbl"))
         .agg(min(col("rank")).cast(LongType).as("rank1"))
@@ -860,12 +869,10 @@ object QueriesSim {
       val idx = Ivf.index(e, cents, "vec_id", "embedding")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val fil = Ivf.search(idx.where(pred), cents, q,
-          "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+      val fil = Ivf.search(idx.where(pred), cents, q, "embedding", topK = 10, nprobe = 3)
         .select(col("qid"), col("vec_id"))
         .localCheckpoint(false) // counted AND truth-joined
-      val post = Ivf.search(idx, cents, q,
-          "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+      val post = Ivf.search(idx, cents, q, "embedding", topK = 10, nprobe = 3)
         .select(col("qid"), col("vec_id"))
         .join(e.select(col("vec_id"), col("label")), "vec_id")
         .where(pred)
@@ -874,10 +881,7 @@ object QueriesSim {
       // exact filtered top-10: the rank<=10 filter plans WindowGroupLimit
       // around the qid exchange, so no task holds a query's full candidate
       // ranking (the knn_eval_sampled shape)
-      val truth = e.where(pred).crossJoin(broadcast(q))
-        .select(col("qid"), col("vec_id"),
-          SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-        .transform(TopK.perKey(_, col("qid"))(10, col("cos").desc, col("vec_id")))
+      val truth = TopK.byCosine(e.where(pred).crossJoin(broadcast(q)), 10, "embedding")
         .select(col("qid"), col("vec_id"))
         .localCheckpoint(false)
       def cnt(df: org.apache.spark.sql.DataFrame, name: String) =
@@ -990,12 +994,9 @@ object QueriesSim {
         .select(col("vec_id"), col("embedding"))
       val q = e.where(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val cand = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), col("embedding"),
-          SimFns.cosine(col("qe"), col("embedding")).as("rel"))
-        .transform(TopK.perKey(_, col("qid"))(20, col("rel").desc, col("vec_id")))
-        .select(col("qid"), col("vec_id"), col("rel"), col("embedding"))
+      val cand = TopK.byCosine(e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid")),
+          20, "embedding", "embedding")
+        .select(col("qid"), col("vec_id"), col("cos"), col("embedding"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getSeq[Float](3)))
@@ -1047,26 +1048,14 @@ object QueriesSim {
       import graft.operators.Ivf
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
-      val centsDf = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-      val cents = Ivf.collectCentroids(centsDf)
-      val assigned = Ivf.index(e, centsDf, "vec_id", "embedding")
+      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+      val assigned = Ivf.index(e, cents, "vec_id", "embedding")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val qcells = q.select(col("qid"), col("qe"),
-          posexplode(Ivf.nearestCells(col("qe"), cents, 8)).as(Seq("pos", "cell")))
-        .select(col("qid"), col("qe"), col("cell"), (col("pos") + 1).as("crank"))
-      // brute-force truth: panel-bounded (5 queries × 10), collected into a
-      // local relation (ann_recall's convention — no session-lifetime cache)
-      val truthPlan = e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-        .transform(TopK.perKey(_, col("qid"))(10, col("cos").desc, col("vec_id")))
-        .select(col("qid"), col("vec_id"))
-      val truthRows = truthPlan.collect()
-      val truth = broadcast(s.createDataFrame(
-        s.sparkContext.parallelize(truthRows.toSeq, 1), truthPlan.schema))
-      val possible = lit(truthRows.length.toLong)
-      val cand = assigned.join(broadcast(qcells), "cell")
+      val (truth, nTruth) =
+        panelTruth(e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid")))
+      val possible = lit(nTruth)
+      val cand = assigned.join(Ivf.probe(q, cents, 8), "cell")
         .where(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("crank"), col("vec_id"),
           SimFns.cosine(col("qe"), col("embedding")).as("cos"))
@@ -1162,11 +1151,7 @@ object QueriesSim {
       // Round11Spec), recursive distributed splits past it, so the
       // within-cell pair volume stays linear at ANY corpus size
       val assigned = Ivf.assignBounded(corpus, cents, "vec_id", "embedding")
-      val dropped = assigned.as("a").join(assigned.as("b"),
-          col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id") &&
-            SimFns.cosine(col("a.embedding"), col("b.embedding")) > 0.95)
-        .select(col("b.cell").as("cell"), col("b.vec_id").as("did"))
-        .distinct()
+      val dropped = semdedupDrops(assigned, assigned).distinct()
       assigned.groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
         .join(dropped.groupBy(col("cell"))
           .agg(count(lit(1)).as("nd"), sum(col("did")).as("ds")), Seq("cell"), "left")
@@ -1210,12 +1195,7 @@ object QueriesSim {
         Ivf.writeIndex(baseA, s"$tmp/idx")
         baseA.groupBy(col("cell")).agg(count(lit(1)).as("n_base"))
           .write.parquet(s"$tmp/counts")
-        baseA.as("x").join(baseA.as("b"),
-            col("x.cell") === col("b.cell") && col("x.vec_id") < col("b.vec_id") &&
-              SimFns.cosine(col("x.embedding"), col("b.embedding")) > 0.95)
-          .select(col("b.cell").as("cell"), col("b.vec_id").as("did"))
-          .distinct()
-          .write.parquet(s"$tmp/drops")
+        semdedupDrops(baseA, baseA).distinct().write.parquet(s"$tmp/drops")
         baseA.unpersist()
       }
       val baseIdx = Ivf.readIndex(s, s"$state/idx")
@@ -1225,18 +1205,11 @@ object QueriesSim {
         .select((col("vec_id") + off).as("vec_id"), col("embedding"))
       val batchA = Ivf.index(batch, cents, "vec_id", "embedding")
         .localCheckpoint(false)
+      // batch rows dropped by a base row, then by a lower-id batch row;
       // x.vec_id < b.vec_id is implied for the vs-base family (off > every
       // base id) but kept so the predicate IS the SemDeDup rule verbatim
-      val vsBase = batchA.as("b").join(baseIdx.as("x"),
-          col("x.cell") === col("b.cell") && col("x.vec_id") < col("b.vec_id") &&
-            SimFns.cosine(col("x.embedding"), col("b.embedding")) > 0.95)
-        .select(col("b.cell").as("cell"), col("b.vec_id").as("did"))
-      val vsBatch = batchA.as("x").join(batchA.as("b"),
-          col("x.cell") === col("b.cell") && col("x.vec_id") < col("b.vec_id") &&
-            SimFns.cosine(col("x.embedding"), col("b.embedding")) > 0.95)
-        .select(col("b.cell").as("cell"), col("b.vec_id").as("did"))
       val allDrops = baseDrops.unionByName(
-        vsBase.unionByName(vsBatch).distinct())
+        semdedupDrops(baseIdx, batchA).unionByName(semdedupDrops(batchA, batchA)).distinct())
       val nVecs = baseCounts
         .join(batchA.groupBy(col("cell")).agg(count(lit(1)).as("n_batch")),
           Seq("cell"), "full")
@@ -1305,15 +1278,14 @@ object QueriesSim {
       import graft.operators.Ivf
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
-      val ca = Ivf.collectCentroids(
-        Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
       val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
       val enc = e.select(col("vec_id"),
-        element_at(Ivf.nearestCells(col("embedding"), ca, 1), 1).as("cell"),
+        element_at(Ivf.nearestCells(col("embedding"), cents, 1), 1).as("cell"),
         Pq.codesFor(col("embedding"), books).as("codes"))
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      ranked(Pq.ivfSearch(enc, "vec_id", ca, q, "qe", books, nprobe = 3, topk = 10), "dist2")
+      ranked(Pq.ivfSearch(enc, cents, q, books, nprobe = 3, topk = 10), "dist2")
     }),
 
     // IVF-PQ APPEND-BATCH ingestion (round-9 verdict #4 — sim_ivf_append's
@@ -1331,11 +1303,10 @@ object QueriesSim {
       import graft.operators.Ivf
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
-      val ca = Ivf.collectCentroids(
-        Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
       val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
       def enc(df: org.apache.spark.sql.DataFrame) = df.select(col("vec_id"),
-        element_at(Ivf.nearestCells(col("embedding"), ca, 1), 1).as("cell"),
+        element_at(Ivf.nearestCells(col("embedding"), cents, 1), 1).as("cell"),
         Pq.codesFor(col("embedding"), books).as("codes"))
       val base = graft.operators.DiskCache.keyedPath(
         "ivfpq_idx_v1", s"$dir/embeddings.parquet")
@@ -1351,7 +1322,7 @@ object QueriesSim {
         .unionByName(Ivf.readIndex(s, s"$base/batch_1"))
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      ranked(Pq.ivfSearch(idx, "vec_id", ca, q, "qe", books, nprobe = 3, topk = 10), "dist2")
+      ranked(Pq.ivfSearch(idx, cents, q, books, nprobe = 3, topk = 10), "dist2")
     }),
 
     // Binary sign quantization + Hamming pre-rank + exact cosine rerank —
@@ -1384,10 +1355,8 @@ object QueriesSim {
         .select(col("qid"), col("vec_id"), col("ham"))
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      e.join(broadcast(cand), "vec_id").join(broadcast(q), "qid")
-        .select(col("qid"), col("vec_id"), col("ham"),
-          SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-        .transform(TopK.perKey(_, col("qid"))(10, col("cos").desc, col("vec_id")))
+      TopK.byCosine(e.join(broadcast(cand), "vec_id").join(broadcast(q), "qid"),
+          10, "embedding", "ham")
         .transform(ranked(_, "cos", "ham"))
     }),
 
@@ -1634,10 +1603,7 @@ object QueriesSim {
         .withColumn("bucket", SimFns.rpLshKey(col("embedding"), planes))
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("bucket").as("qbucket"))
-      e.join(broadcast(q), col("bucket") === col("qbucket"))
-        .select(col("qid"), col("vec_id"),
-          SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-        .transform(TopK.perKey(_, col("qid"))(10, col("cos").desc, col("vec_id")))
+      TopK.byCosine(e.join(broadcast(q), col("bucket") === col("qbucket")), 10, "embedding")
         .transform(ranked(_, "cos"))
     }),
 
@@ -1653,10 +1619,7 @@ object QueriesSim {
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
           explode(SimFns.rpLshProbeKeys(col("embedding"), planes)).as("probe"))
-      e.join(broadcast(q), col("bucket") === col("probe"))
-        .select(col("qid"), col("vec_id"),
-          SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-        .transform(TopK.perKey(_, col("qid"))(10, col("cos").desc, col("vec_id")))
+      TopK.byCosine(e.join(broadcast(q), col("bucket") === col("probe")), 10, "embedding")
         .transform(ranked(_, "cos"))
     }),
 
@@ -1677,22 +1640,10 @@ object QueriesSim {
       val q = e.where(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
           col("label").as("qlabel"), col("bucket").as("qbucket"))
-      def top10(cand: org.apache.spark.sql.DataFrame) = cand
-        .select(col("qid"), col("vec_id"),
-          SimFns.cosine(col("qe"), col("embedding")).as("cos"))
-        .transform(TopK.perKey(_, col("qid"))(10, col("cos").desc, col("vec_id")))
-        .select(col("qid"), col("vec_id"))
-      // ground truth is panel-bounded (20 queries × top-10 = ≤200 rows):
-      // collect once into a local relation instead of persisting — a cached
-      // RDD here would sit in executor storage for the rest of the session
-      // (the Verify sweep runs 391 queries in one SparkSession)
-      val truthPlan = top10(e.join(broadcast(q)))
-      val truthRows = truthPlan.collect()
-      val truth = broadcast(s.createDataFrame(
-        s.sparkContext.parallelize(truthRows.toSeq, 1), truthPlan.schema))
-      val possible = lit(truthRows.length.toLong)
+      val (truth, nTruth) = panelTruth(e.join(broadcast(q)))
+      val possible = lit(nTruth)
       def card(method: String, cand: org.apache.spark.sql.DataFrame) =
-        top10(cand).join(truth, Seq("qid", "vec_id"), "left_semi")
+        TopK.byCosine(cand, 10, "embedding").join(truth, Seq("qid", "vec_id"), "left_semi")
           .agg(count(lit(1)).as("hits"))
           .select(lit(method).as("method"), col("hits"), possible.as("possible"),
             (floor(col("hits") / possible.cast(DoubleType) * 1e4 + 0.5) / 1e4)
@@ -1901,7 +1852,7 @@ object QueriesSim {
     * (corpus, trained centroids, base path); both snapshots are published
     * atomically ensure-once. */
   private def ivfLifecycleSnapshots(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, String) = {
+      : (org.apache.spark.sql.DataFrame, Array[Array[Double]], String) = {
     import graft.operators.Ivf
     val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
@@ -1946,7 +1897,7 @@ object QueriesSim {
       posexplode(array((0 until 4).map(i =>
         slice(col("embedding"), i * d + 1, d)): _*)).as(Seq("pos", "sub")))
     val slices = slices0.select((col("vec_id") * 4 + col("pos")).as("sid"), col("sub"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(slices, "sid", "sub", k = 32))
+    val cents = Ivf.trainSampled(slices, "sid", "sub", k = 32)
     val centDf = broadcast(cents.toSeq.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "cent"))
     // residual = slice − its cell centroid, via a broadcast join with the
@@ -2285,7 +2236,7 @@ object QueriesSim {
         posexplode(array((0 until 4).map(i =>
           slice(col("embedding"), i * d + 1, d)): _*)).as(Seq("pos", "sub")))
       .select((col("vec_id") * 4 + col("pos")).as("sid"), col("sub"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(slices, "sid", "sub", k = 32))
+    val cents = Ivf.trainSampled(slices, "sid", "sub", k = 32)
     val k = cents.length
     val dDefs = (0 until 4).flatMap { j =>
       cents.zipWithIndex.map { case (c, i) =>
@@ -2347,7 +2298,7 @@ object QueriesSim {
     import graft.operators.Ivf
     val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val k = cents.length
     val dDefs = cents.zipWithIndex.map { case (c, i) =>
       s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
@@ -2406,7 +2357,7 @@ object QueriesSim {
     import graft.operators.Ivf
     val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val k = cents.length
     val dDefs = cents.zipWithIndex.map { case (c, i) =>
       s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
@@ -2495,7 +2446,7 @@ object QueriesSim {
     val e = t(s, dir, "embeddings")
       .where(col("embedding").isNotNull && col("label").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val k = cents.length
     val dDefs = cents.zipWithIndex.map { case (c, i) =>
       s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
@@ -2566,7 +2517,7 @@ object QueriesSim {
     // the trainer must see the same first-N id-ordered sample as the Spark side
     val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val k = cents.length
     val dDefs = cents.zipWithIndex.map { case (c, i) =>
       s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
@@ -2602,7 +2553,7 @@ object QueriesSim {
     import graft.operators.Ivf
     val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val k = cents.length
     val dDefs = cents.zipWithIndex.map { case (c, i) =>
       s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
@@ -2655,8 +2606,8 @@ object QueriesSim {
     val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
     val (kk, off) = semdedupParams(e)
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding",
-      k = kk, sampleN = math.max(2048, 8 * kk)))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding",
+      k = kk, sampleN = math.max(2048, 8 * kk))
     val k = cents.length
     val dDefs = cents.zipWithIndex.map { case (c, i) =>
       s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
@@ -2690,7 +2641,7 @@ object QueriesSim {
     import graft.operators.Ivf
     val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val k = cents.length
     val dDefs = cents.zipWithIndex.map { case (c, i) =>
       s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
@@ -2776,7 +2727,7 @@ object QueriesSim {
     import graft.operators.Ivf
     val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
     val k = cents.length
     val m = books.length

@@ -789,23 +789,6 @@ object QueriesText {
         .orderBy(col("doc_id"))
     }),
 
-    // BM25 retrieval (Robertson/Okapi, k1=1.2 b=0.75, Lucene's
-    // ln(1 + (N−df+0.5)/(df+0.5)) idf): top-10 docs for fixed 2-term
-    // bigram queries — the search-side complement to tfidf_top's
-    // characterize-side scoring. Terms are token BIGRAMS (the unigram
-    // vocabulary is flat — zero idf discrimination; sparse_cosine_join
-    // precedent). Scale shape (round 5): the postings/doc-length/df/stats
-    // tables ARE the index — built ONCE per corpus fingerprint and
-    // persisted (DiskCache atomic publish, the ensureMinhashIndex
-    // pattern), term-range-sorted so the literal query-term isin filter
-    // reaches the parquet scan as a row-group-pruning pushed predicate.
-    // A probe then reads only matching postings row groups; the
-    // tokenize+shingle+groupBy corpus pass never re-runs. The query table
-    // is literal and broadcast (with its df's) into the postings; doc
-    // lengths join back on the doc key (postings-sized); N/avgdl ride a
-    // 1-row broadcast. EXACTLY 2 terms per query keeps the score sum
-    // order-free (IEEE addition of two values is commutative), so the
-    // double formula is engine-identical from exact BIGINT tf/df/dl.
     // RAKE keyword extraction (Rose et al. 2010 — Rapid Automatic Keyword
     // Extraction, the zero-training phrase miner): candidate phrases are
     // maximal runs of non-stopword tokens (the gaps-and-islands pos − rn
@@ -901,6 +884,23 @@ object QueriesText {
         .orderBy(col("qid"), col("rank"))
     }),
 
+    // BM25 retrieval (Robertson/Okapi, k1=1.2 b=0.75, Lucene's
+    // ln(1 + (N−df+0.5)/(df+0.5)) idf): top-10 docs for fixed 2-term
+    // bigram queries — the search-side complement to tfidf_top's
+    // characterize-side scoring. Terms are token BIGRAMS (the unigram
+    // vocabulary is flat — zero idf discrimination; sparse_cosine_join
+    // precedent). Scale shape (round 5): the postings/doc-length/df/stats
+    // tables ARE the index — built ONCE per corpus fingerprint and
+    // persisted (DiskCache atomic publish, the ensureMinhashIndex
+    // pattern), term-range-sorted so the literal query-term isin filter
+    // reaches the parquet scan as a row-group-pruning pushed predicate.
+    // A probe then reads only matching postings row groups; the
+    // tokenize+shingle+groupBy corpus pass never re-runs. The query table
+    // is literal and broadcast (with its df's) into the postings; doc
+    // lengths join back on the doc key (postings-sized); N/avgdl ride a
+    // 1-row broadcast. EXACTLY 2 terms per query keeps the score sum
+    // order-free (IEEE addition of two values is commutative), so the
+    // double formula is engine-identical from exact BIGINT tf/df/dl.
     "bm25_search" -> ((s, dir) => {
       import s.implicits._
       val base = bm25Index(s, dir)

@@ -16,8 +16,8 @@ class IvfSpec extends SparkSpec {
   test("train is deterministic and assigns every vector to one of k cells") {
     val c1 = Ivf.train(vecs, "vec_id", "embedding", k = 8)
     val c2 = Ivf.train(vecs, "vec_id", "embedding", k = 8)
-    assert(c1.orderBy("cell").collect().toSeq == c2.orderBy("cell").collect().toSeq)
-    val cells = Ivf.assign(vecs, c1, "vec_id", "embedding")
+    assert(c1.map(_.toSeq).toSeq == c2.map(_.toSeq).toSeq)
+    val cells = Ivf.index(vecs, c1, "vec_id", "embedding")
     assert(cells.count() == vecs.count())
     assert(cells.select("cell").distinct().count() <= 8)
   }
@@ -30,18 +30,18 @@ class IvfSpec extends SparkSpec {
       "guard message must point callers at the corpus-size-independent trainer")
     // at-or-under the ceiling still trains
     assert(Ivf.train(vecs.limit(10), "vec_id", "embedding", k = 4, maxRows = 10L)
-      .count() == 4L)
+      .length == 4)
     // maxRows = Long.MaxValue must saturate, not overflow to a negative
     // limit() (r5 advice: the error message tells callers to raise maxRows)
     assert(Ivf.train(vecs.limit(10), "vec_id", "embedding", k = 4,
-      maxRows = Long.MaxValue).count() == 4L)
+      maxRows = Long.MaxValue).length == 4)
   }
 
   test("trainSampled is deterministic and matches distributed train's recall") {
     val c1 = Ivf.trainSampled(vecs, "vec_id", "embedding", k = 8)
     val c2 = Ivf.trainSampled(vecs, "vec_id", "embedding", k = 8)
-    assert(c1.orderBy("cell").collect().toSeq == c2.orderBy("cell").collect().toSeq)
-    val cells = Ivf.assign(vecs, c1, "vec_id", "embedding")
+    assert(c1.map(_.toSeq).toSeq == c2.map(_.toSeq).toSeq)
+    val cells = Ivf.index(vecs, c1, "vec_id", "embedding")
     assert(cells.count() == vecs.count())
     assert(cells.select("cell").distinct().count() <= 8)
 
@@ -54,9 +54,9 @@ class IvfSpec extends SparkSpec {
       .select(col("qid"), col("vec_id"), SimFns.cosine(col("qe"), col("embedding")).as("cos"))
       .withColumn("rank", row_number().over(w)).where(col("rank") <= 10)
       .select("qid", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def recallOf(centroids: org.apache.spark.sql.DataFrame): Double = {
+    def recallOf(centroids: Array[Array[Double]]): Double = {
       val approx = Ivf.search(Ivf.index(vecs, centroids, "vec_id", "embedding"),
-        centroids, queries, "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+        centroids, queries, "embedding", topK = 10, nprobe = 3)
         .select("qid", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       approx.count(exactSet.contains).toDouble / exactSet.size
     }
@@ -71,8 +71,7 @@ class IvfSpec extends SparkSpec {
     val idx = Ivf.index(vecs, centroids, "vec_id", "embedding")
     val queries = vecs.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val approx = Ivf.search(idx, centroids, queries,
-      "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+    val approx = Ivf.search(idx, centroids, queries, "embedding", topK = 10, nprobe = 3)
 
     // the query's own cell is always its nearest → self-match at rank 1
     val self = approx.where(col("rank") === 1)
@@ -90,6 +89,26 @@ class IvfSpec extends SparkSpec {
     assert(recall >= 0.5, s"recall@10 was $recall")
   }
 
+  test("probe fans each query out to its nprobe nearest cells, ranked by crank") {
+    val cents = Ivf.trainSampled(vecs, "vec_id", "embedding", k = 8)
+    val queries = vecs.where(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val got = Ivf.probe(queries, cents, 3)
+      .select("qid", "crank", "cell").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted.toSeq
+    // driver recompute: squared-L2 order, ties to the lower cell
+    val expected = queries.collect().toSeq.flatMap { r =>
+      val qv = r.getSeq[Float](1).map(_.toDouble).toArray
+      cents.indices.map(c => (graft.operators.Pq.sqL2(qv, cents(c)), c)).sorted.take(3)
+        .zipWithIndex.map { case ((_, c), i) => (r.getLong(0), i + 1, c) }
+    }.sorted
+    assert(got == expected)
+    // the query's own cell is its nearest: an index probe at crank 1 finds it
+    val own = Ivf.index(vecs.where(col("vec_id") < 5), cents, "vec_id", "embedding")
+      .select(col("vec_id"), col("cell")).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got.filter(_._2 == 1).forall { case (q, _, c) => own(q) == c })
+  }
+
   test("on-disk index is cell-partitioned and probes prune partitions (DPP)") {
     val centroids = Ivf.train(vecs, "vec_id", "embedding", k = 8)
     val path = "target/tmp_ivf_index"
@@ -100,10 +119,9 @@ class IvfSpec extends SparkSpec {
     val onDisk = Ivf.readIndex(spark, path)
     val queries = vecs.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val fromDisk = Ivf.search(onDisk, centroids, queries,
-      "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+    val fromDisk = Ivf.search(onDisk, centroids, queries, "embedding", topK = 10, nprobe = 3)
     val inMem = Ivf.search(Ivf.index(vecs, centroids, "vec_id", "embedding"), centroids,
-      queries, "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+      queries, "embedding", topK = 10, nprobe = 3)
     assert(fromDisk.orderBy("qid", "rank").collect().map(_.toSeq).toSeq ==
       inMem.orderBy("qid", "rank").collect().map(_.toSeq).toSeq)
     // the probe join must reach the scan as a runtime partition filter —

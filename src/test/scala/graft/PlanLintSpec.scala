@@ -172,7 +172,7 @@ class PlanLintSpec extends SparkSpec {
     "graft/operators/DiscreteQuantile.scala" -> ((1, "quantilesViaDriver: callers must pre-check histogramFitsDriver (contract in scaladoc)")),
     "graft/operators/GlobalOrder.scala" -> ((1, "boundary sample: fraction-sampled input, sample-sized")),
     "graft/operators/HeavyHitters.scala" -> ((1, "top-k: limit(k) upstream")),
-    "graft/operators/Ivf.scala" -> ((4, "centroid tables (k cells) + first-N-in-id-order Lloyd samples")),
+    "graft/operators/Ivf.scala" -> ((3, "first-N-in-id-order Lloyd samples/seeds + train's per-iteration k×dim means")),
     "graft/operators/Pca.scala" -> ((1, "first-N-in-id-order fit sample (limit(sampleN))")),
     "graft/operators/Pq.scala" -> ((2, "codebook trainer sample (limit(sampleN)) + query-panel LUTs")),
     "graft/queries/QueriesAnalytics.scala" -> ((11, "nation-graph edges/weights (≤ nations² rows), grouping-sets probe (≤ 2³), count-of-count histograms (multiplicity domain), 1-row aggregates; r14: basket_pairs' order-count collect became a lazy broadcast")),
@@ -182,7 +182,7 @@ class PlanLintSpec extends SparkSpec {
     "graft/queries/QueriesPipeline.scala" -> ((3, "1-row max(doc_id) probe + BPE limit(1) best-pair + WordPiece limit(1) best-pair")),
     "graft/queries/QueriesRelationalExt.scala" -> ((1, "jdbc_roundtrip: |regions|-row aggregate materialized inside the withRetry cycle")),
     "graft/queries/QueriesScale.scala" -> ((2, "winsorize/outlier_mad limit(maxHistRows+1) probe-and-collect")),
-    "graft/queries/QueriesSim.scala" -> ((9, "query panels (vec_id < 5/3), panel-bounded truth top-k (queries×k), query-side ADC LUTs, limit(256) sample; r15: sim_beam_search beam ferry (≤ |queries|×2 = 20 rows per hop)")),
+    "graft/queries/QueriesSim.scala" -> ((8, "query panels (vec_id < 5/3), panel-bounded truth top-k (queries×k, one panelTruth helper for ann_recall/ann_nprobe_sweep), query-side ADC LUTs, limit(256) sample; r15: sim_beam_search beam ferry (≤ |queries|×2 = 20 rows per hop)")),
     "graft/queries/QueriesText.scala" -> ((1, "unigram trainer: distinct words of the limit(256)-doc id-ordered sample")),
     "graft/queries/QueriesTrain.scala" -> ((2, "limit(QcSample) trainer sample + per-source domain aggregate (|sources| rows)"))
   )

@@ -35,8 +35,8 @@ class PqSpec extends SparkSpec {
     val books = Pq.train(vecs, "vec_id", "embedding", m = 2, k = 2, maxIters = 8)
     val enc = Pq.encode(vecs, "vec_id", "embedding", books)
     val q = vecs.where(col("vec_id") === 0L)
-      .select(col("vec_id").as("qid"), col("embedding"))
-    val got = Pq.search(enc, "vec_id", q, "qid", "embedding", books, 4)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val got = Pq.search(enc, q, books, 4)
       .orderBy(col("rank")).select(col("vec_id"), col("dist2")).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // exact distances from (0,0,5,5): self 0, to (4,4,5,5) 32, to (0,0,9,9)
@@ -50,7 +50,7 @@ class PqSpec extends SparkSpec {
     val enc = Pq.encode(emb, "vec_id", "embedding", books)
     val q = emb.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val approx = Pq.search(enc, "vec_id", q, "qid", "qe", books, 10)
+    val approx = Pq.search(enc, q, books, 10)
       .select(col("qid"), col("vec_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
     val a = SimFns.toDouble(col("embedding")); val b = SimFns.toDouble(col("qe"))
@@ -94,7 +94,7 @@ class PqSpec extends SparkSpec {
     val enc = Pq.encode(vecs, "vec_id", "embedding", books)
     val q = vecs.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val approx = Pq.search(enc, "vec_id", q, "qid", "qe", books, 10)
+    val approx = Pq.search(enc, q, books, 10)
       .select(col("qid"), col("vec_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
     // within a cluster of 50 near-identical members, WHICH 10 are the exact

@@ -92,6 +92,8 @@ class PropertiesSpec extends SparkSpec {
   test("property: TopK-ranked cards are invariant under shuffle partitions") {
     val cards = Seq("sim_topk", "sim_ivf", "sim_lsh_multiprobe", "sim_hamming_rerank",
       "sim_ivfpq", "knn_eval", "retrieval_mrr", "ann_nprobe_sweep",
+      "sim_ivf_kmeans", "sim_filtered", "sim_range_search", "sim_lsh", "ann_recall",
+      "sim_pq", "mmr_diversify", "ivf_retrain_trigger", "semdedup", "knn_eval_sampled",
       "rrf_fusion", "tfidf_top", "bm25_prf", "bm25_search", "bm25_incremental",
       "token_zipf", "length_tail", "session_paths", "graph_lpa_users", "trending_topk",
       "inverted_index", "review_sample", "corpus_assembly", "corpus_assembly_incremental",
@@ -126,8 +128,8 @@ class PropertiesSpec extends SparkSpec {
     val idx = graft.operators.Ivf.index(vecs, centroids, "vec_id", "embedding")
     val qs = vecs.where(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    def hits(np: Int) = graft.operators.Ivf.search(idx, centroids, qs,
-        "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = np)
+    def hits(np: Int) = graft.operators.Ivf.search(idx, centroids, qs, "embedding",
+        topK = 10, nprobe = np)
       .select("qid", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val h1 = hits(1); val h8 = hits(8)
     assert(h1.size <= h8.size)

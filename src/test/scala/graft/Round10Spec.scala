@@ -53,7 +53,7 @@ class Round10Spec extends SparkSpec {
     // corpus ∪ batch encoded in ONE pass with no snapshot layout, same search
     val e = graft.queries.Tables.t(spark, dir, "embeddings")
       .where(col("embedding").isNotNull).select(col("vec_id"), col("embedding"))
-    val ca = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val ca = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
     val union = e.unionByName(e.where(col("vec_id") % 50 === 0)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))

@@ -158,8 +158,8 @@ class Round11Spec extends SparkSpec {
     val idx = Ivf.index(e, cents, "vec_id", "embedding")
     val q = e.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val fil = Ivf.search(idx.where(col("label") % 3 === 0), cents, q,
-      "vec_id", "embedding", "qid", "qe", topK = 10, nprobe = 3)
+    val fil = Ivf.search(idx.where(col("label") % 3 === 0), cents, q, "embedding",
+      topK = 10, nprobe = 3)
     val exec = fil.queryExecution.executedPlan
     val plan = exec.collectFirst {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

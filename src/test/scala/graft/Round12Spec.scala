@@ -269,8 +269,7 @@ class Round12Spec extends SparkSpec {
       .join(tomb, Seq("vec_id"), "left_anti") // search-time exclusion
     val q = e.where(col("vec_id") < 5 && col("vec_id") % 30 =!= 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val logical = Ivf.search(union, cents, q, "vec_id", "embedding",
-        "qid", "qe", topK = 10, nprobe = 3)
+    val logical = Ivf.search(union, cents, q, "embedding", topK = 10, nprobe = 3)
       .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cos"),
         col("rank").cast("long").as("rank"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))

@@ -352,8 +352,7 @@ class Round8Spec extends SparkSpec {
     val e = graft.queries.Tables.t(spark, dir, "embeddings")
       .where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(
-      Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val vecs = e.collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
     val agg = scala.collection.mutable.Map[Int, (Long, Long, Long)]()
     vecs.foreach { v =>

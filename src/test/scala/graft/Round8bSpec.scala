@@ -30,8 +30,7 @@ class Round8bSpec extends SparkSpec {
     import graft.operators.{Ivf, Pq}
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .where(col("embedding").isNotNull).select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(
-      Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
     val sub = books.map(_.head.length).sum / books.length
     val vecs = e.collect()
@@ -81,8 +80,7 @@ class Round8bSpec extends SparkSpec {
     import graft.operators.{Ivf, Pq}
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .where(col("embedding").isNotNull).select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(
-      Ivf.trainSampled(e, "vec_id", "embedding", k = 8))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
     val vecs = e.collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
       .sortBy(_._1)

@@ -486,7 +486,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Ivf
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .where(col("embedding").isNotNull).select(col("vec_id"), col("embedding"))
-    val cents = Ivf.collectCentroids(Ivf.trainSampled(e, "vec_id", "embedding", k = 4))
+    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 4)
     val rows = e.orderBy("vec_id").limit(64).collect()
     val vecs = rows.map(r => Streams.VecIn(r.getLong(0),
       r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq
@@ -511,9 +511,8 @@ class StreamingSpec extends SparkSpec {
     // cross-check against the BATCH path: the stream's cell choice must
     // equal the native NearestCells assignment, and the quantized residual
     // sums must match a driver recompute over those assignments
-    val batchCells = Ivf.assign(e.orderBy("vec_id").limit(64), cents.zipWithIndex.map {
-        case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "centroid"),
-      "vec_id", "embedding").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val batchCells = Ivf.index(e.orderBy("vec_id").limit(64), cents, "vec_id", "embedding")
+      .select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val expected = vecs.groupBy(v => batchCells(v.vec_id)).view.mapValues { vs =>
       val n = vs.length.toLong
       val sq = vs.map { v =>

@@ -46,4 +46,16 @@ class TopKSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), "rank filter not pushed to WindowGroupLimit")
   }
+
+  test("byCosine ranks by cosine desc then vec_id and keeps the named columns") {
+    val q = Seq((7L, Seq(1f, 0f))).toDF("qid", "qe")
+    // ids 1 and 3 tie at cos 1 (same direction), id 2 is orthogonal
+    val corpus = Seq((3L, Seq(2f, 0f), "c"), (2L, Seq(0f, 1f), "b"),
+      (1L, Seq(1f, 0f), "a"), (4L, Seq(1f, 1f), "d")).toDF("vec_id", "v", "tag")
+    val out = TopK.byCosine(corpus.crossJoin(q).repartition(3), 3, "v", "tag")
+    assert(out.columns.toSeq == Seq("qid", "vec_id", "tag", "cos", "rank"))
+    val got = out.select("vec_id", "tag", "rank").as[(Long, String, Int)]
+      .collect().sortBy(_._3).toSeq
+    assert(got == Seq((1L, "a", 1), (3L, "c", 2), (4L, "d", 3)))
+  }
 }
