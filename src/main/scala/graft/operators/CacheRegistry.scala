@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Session-end cleanup for the handful of DELIBERATE session-lifetime
   * persists (minhash shingle sets, packed-simhash signatures, bloom-probe
@@ -17,10 +18,15 @@ object CacheRegistry {
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[Dataset[_], java.lang.Boolean]())
 
-  /** Persist `ds` (MEMORY_AND_DISK) and register it for the next sweep. */
+  /** Persist `ds` (MEMORY_AND_DISK) and register it for the next sweep.
+    * A plan that is already cached (CacheManager matches by canonicalized
+    * plan, so a shared builder called once per consumer card hits this) is
+    * returned as is: the entry registered first releases it on sweep. */
   def track[T](ds: Dataset[T]): Dataset[T] = {
-    ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    live.add(ds)
+    if (ds.storageLevel == StorageLevel.NONE) {
+      ds.persist(StorageLevel.MEMORY_AND_DISK)
+      live.add(ds)
+    }
     ds
   }
 

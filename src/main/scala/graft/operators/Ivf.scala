@@ -120,8 +120,7 @@ object Ivf {
     * cell — one codegen'd projection, no join, no shuffle. In production
     * this is written out partitioned by `cell` so probes become
     * partition-pruned scans. */
-  def index(vectors: DataFrame, cents: Array[Array[Double]], idCol: String,
-            vecCol: String): DataFrame =
+  def index(vectors: DataFrame, cents: Array[Array[Double]], vecCol: String): DataFrame =
     vectors.withColumn("cell", element_at(nearestCells(col(vecCol), cents, 1), 1))
 
   /** The probe side of every IVF search: each query row (`qid`, `qe`, …)
@@ -184,7 +183,7 @@ object Ivf {
     val spark = vectors.sparkSession
     import spark.implicits._
     val bound = occSlack * targetOcc
-    var assigned = index(vectors, cents, idCol, vecCol)
+    var assigned = index(vectors, cents, vecCol)
       .select(col(idCol), col(vecCol), col("cell").cast("long").as("cell"))
       .localCheckpoint(false) // re-read per depth by the occupancy probe
     var depth = 0

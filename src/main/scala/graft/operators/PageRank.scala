@@ -17,29 +17,35 @@ import org.apache.spark.sql.functions._
   * probabilities pre-quantized to 1e-6 units, each contribution term
   * (r12·p6) DIV 1e6 ≤ 1e18 at any scale — integer sums commute, so an
   * unrolled SQL oracle running the same recurrence matches bit-for-bit
-  * with no floating-point ordering care:
+  * with no floating-point ordering care. The teleport AND the dangling-mass
+  * redistribution both target the SEED set S (Haveliwala's topic-sensitive
+  * variant — the recommendation / trust-propagation primitive; scores
+  * measure proximity to the seeds):
   *
-  *   r12'(v) = (15·base) DIV 100
-  *           + (85·(Σ_{(u,v)∈E} (r12(u)·p6(u,v)) DIV 1e6  +  D12 DIV N)) DIV 100
+  *   r12'(v) = [v∈S]·(15·base) DIV 100
+  *           + (85·(Σ_{(u,v)∈E} (r12(u)·p6(u,v)) DIV 1e6  +  [v∈S]·(D12 DIV |S|))) DIV 100
   *
-  * where base = 1e12 DIV N (uniform init and teleport mass) and D12 is the
-  * dangling-node score sum, redistributed uniformly (the standard treatment;
-  * without it the damped total mass drains toward the teleport floor).
+  * where base = 1e12 DIV |S| (the init of every seed; non-seeds start at 0)
+  * and D12 is the dangling-node score sum (without its redistribution the
+  * damped total mass drains toward the teleport floor). Plain PageRank is
+  * the case S = every node: base = 1e12 DIV N, uniform teleport and
+  * D12 DIV N.
   */
 object PageRank {
 
-  /** @param edges (src, dst, p6) — p6 = (w·1e6) DIV wout(src), a per-edge
-    *              constant the caller computes once (and should persist:
-    *              it is scanned every round)
-    * @param nodes (id) — distinct node universe (should also be persisted)
-    * @param n     node count (the caller's one collected scalar)
-    * @param k     fixed synchronous rounds (fixed, never "to convergence":
-    *              a convergence test on doubles would reintroduce
-    *              engine-dependent ordering into the oracle contract)
+  /** @param edges  (src, dst, p6) — p6 = (w·1e6) DIV wout(src), a per-edge
+    *               constant the caller computes once (and should persist:
+    *               it is scanned every round)
+    * @param nodes  (id, seed) — distinct node universe (should also be
+    *               persisted) and the boolean seed indicator
+    * @param nSeeds seed count |S| (the caller's one collected scalar)
+    * @param k      fixed synchronous rounds (fixed, never "to convergence":
+    *               a convergence test on doubles would reintroduce
+    *               engine-dependent ordering into the oracle contract)
     * @return (id, r12) — scores in 1e-12 units after k rounds */
-  def run(edges: DataFrame, nodes: DataFrame, n: Long, k: Int): DataFrame = {
-    require(n > 0, "PageRank over an empty node set")
-    val base = 1000000000000L / n
+  def run(edges: DataFrame, nodes: DataFrame, nSeeds: Long, k: Int): DataFrame = {
+    require(nSeeds > 0, "PageRank over an empty seed set")
+    val base = 1000000000000L / nSeeds
     val teleport = (15L * base) / 100L
     // the dangling flag (no outgoing edge) rides IN the score table, so
     // each round's dangling-mass sum is a plain conditional aggregate over
@@ -48,9 +54,9 @@ object PageRank {
     val nodesF = nodes
       .join(edges.select(col("src").as("id")).distinct()
         .withColumn("hasOut", lit(true)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("hasOut"), lit(false)).as("out"))
+      .select(col("id"), col("seed"), coalesce(col("hasOut"), lit(false)).as("out"))
       .localCheckpoint(false)
-    var r = nodesF.withColumn("r12", lit(base))
+    var r = nodesF.withColumn("r12", when(col("seed"), lit(base)).otherwise(lit(0L)))
     for (_ <- 1 to k) {
       // 1-row dangling mass. shuffle_replicate_nl forces a CartesianProduct
       // instead of a BroadcastNestedLoopJoin: a broadcast exchange would
@@ -58,46 +64,6 @@ object PageRank {
       // 1-row side executes inside the SAME job as the round's checkpoint
       // (pure scheduling overhead on tiny per-round data, and at real
       // scale the 1-row side is free either way)
-      val d12 = r.agg(coalesce(sum(when(!col("out"), col("r12"))), lit(0L)).as("d12"))
-      val in = edges
-        .join(r.select(col("id").as("src"), col("r12")), Seq("src"))
-        .select(col("dst"), expr("(r12 * p6) DIV 1000000").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in12"))
-      r = nodesF.join(in.withColumnRenamed("dst", "id"), Seq("id"), "left")
-        .crossJoin(d12.hint("shuffle_replicate_nl"))
-        .select(col("id"), col("out"), (lit(teleport) +
-          expr(s"(85 * (coalesce(in12, CAST(0 AS BIGINT)) + d12 DIV ${n}L)) DIV 100"))
-          .as("r12"))
-        .localCheckpoint(false)
-    }
-    r.select(col("id"), col("r12"))
-  }
-
-  /** Personalized PageRank (Haveliwala's topic-sensitive variant — the
-    * recommendation / trust-propagation primitive): the teleport AND the
-    * dangling-mass redistribution both target the SEED set instead of the
-    * whole node universe, so scores measure proximity TO the seeds. Same
-    * exact fixed-point integer recurrence as [[run]], with base_s =
-    * 1e12 DIV nSeeds and the seed indicator gating both mass sources:
-    *
-    *   r12'(v) = [v∈S]·(15·base_s) DIV 100
-    *           + (85·(Σ in12 + [v∈S]·(D12 DIV nSeeds))) DIV 100
-    *
-    * `nodes` must carry a boolean `seedCol`; non-seed nodes start at 0. */
-  def runPersonalized(edges: DataFrame, nodes: DataFrame, seedCol: String,
-                      nSeeds: Long, k: Int): DataFrame = {
-    require(nSeeds > 0, "personalized PageRank over an empty seed set")
-    val baseS = 1000000000000L / nSeeds
-    val teleport = (15L * baseS) / 100L
-    val nodesF = nodes
-      .join(edges.select(col("src").as("id")).distinct()
-        .withColumn("hasOut", lit(true)), Seq("id"), "left")
-      .select(col("id"), col(seedCol).as("seed"),
-        coalesce(col("hasOut"), lit(false)).as("out"))
-      .localCheckpoint(false)
-    var r = nodesF.withColumn("r12",
-      when(col("seed"), lit(baseS)).otherwise(lit(0L)))
-    for (_ <- 1 to k) {
       val d12 = r.agg(coalesce(sum(when(!col("out"), col("r12"))), lit(0L)).as("d12"))
       val in = edges
         .join(r.select(col("id").as("src"), col("r12")), Seq("src"))

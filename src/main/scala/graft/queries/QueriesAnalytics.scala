@@ -568,19 +568,8 @@ object QueriesAnalytics {
     // edge list in the driver with contributions folded in sorted edge
     // order; the oracle unrolls the identical recurrence.
     "graph_hits" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val supp = t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey").cast(LongType).as("src"))
-      val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey").cast(LongType).as("dst"))
-      val edges = li.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val nations = t(s, dir, "nation")
-        .select(col("n_nationkey").cast(LongType)).collect().map(_.getLong(0)).sorted
+      val edges = collectEdges(nationTradeEdges(s, dir))
+      val nations = nationIds(s, dir)
       val nN = nations.length
       // round-9 (advice item): the fold runs in EXACT fixed-point integers —
       // scores in 1e-12 units, contributions w·h12 and the L1 normalization
@@ -821,14 +810,6 @@ object QueriesAnalytics {
           |ORDER BY event_id""".stripMargin)
     }),
 
-    // Nation-level trade-flow PageRank: the DISTRIBUTED work is collapsing
-    // the corpus to the graph (lineitem joins supplier/customer nations —
-    // broadcast dims, one co-partitioned orderkey shuffle, then a
-    // 25x25-bounded aggregate); the solve runs on that config-sized matrix
-    // at the driver (5 damped iterations, deterministic src-sorted
-    // accumulation), the same corpus-to-config split as mix_temperature.
-    // A doc-scale graph would instead iterate as DataFrame joins — that
-    // fixpoint pattern is dedup_clusters' connected components.
     // Supplier operational scorecard: volume, exact-cents revenue, return
     // rate and late-shipment rate per supplier — the vendor-management
     // card. ONE fact⋈fact join on orderkey (the only data-sized movement,
@@ -857,8 +838,9 @@ object QueriesAnalytics {
     // graph algorithm family (components = connectivity, pagerank =
     // centrality, LPA = mesoscale structure). Same scale shape as
     // graph_pagerank: the corpus collapses DISTRIBUTEDLY to the ≤nations²
-    // weighted edge list (broadcast dims, one orderkey shuffle), then 5
-    // synchronous LPA rounds run on the config-sized graph in the driver.
+    // edge list of [[sparsifiedNationGraph]] (the `sp` its oracle reads),
+    // then 5 synchronous LPA rounds run on that config-sized graph in the
+    // driver.
     // Everything is exact-integer: edges sparsify by the strict
     // above-average rule w·|E| > Σw (no float threshold), and each round's
     // relabel is argmax by (Σ neighbor weight DESC, label ASC) — the
@@ -869,30 +851,8 @@ object QueriesAnalytics {
     // RECOVER the regions from edge weights alone (community purity vs
     // n_regionkey verified at all three SFs, exact 5×5 regions at sf0.1).
     "graph_communities" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val supp = t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey").cast(LongType).as("src"))
-      val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey").cast(LongType).as("dst"))
-      val regions = t(s, dir, "nation")
-        .select(col("n_nationkey").cast(LongType), col("n_regionkey").cast(LongType))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val directed = li.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .where(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getLong(2) * (if (regions(r.getLong(0)) == regions(r.getLong(1))) 5L else 1L)))
-      val und = (directed.map(e => ((e._1, e._2), e._3)) ++
-          directed.map(e => ((e._2, e._1), e._3)))
-        .groupBy(_._1).map { case (k, es) => (k._1, k._2, es.map(_._2).sum) }.toSeq
-      val (ne, tw) = (und.size.toLong, und.map(_._3).sum)
-      val sp = und.filter(e => e._3 * ne > tw)
-      val nbrs = sp.groupBy(_._1)
-      val nations = t(s, dir, "nation")
-        .select(col("n_nationkey").cast(LongType)).collect().map(_.getLong(0)).sorted
+      val nbrs = collectEdges(sparsifiedNationGraph(s, dir)).groupBy(_._1)
+      val nations = nationIds(s, dir)
       var label = nations.map(n => n -> n).toMap
       for (_ <- 1 to 5) {
         label = nations.map { n =>
@@ -912,20 +872,17 @@ object QueriesAnalytics {
         .orderBy(col("nation"))
     }),
 
+    // Nation-level trade-flow PageRank: the DISTRIBUTED work is collapsing
+    // the corpus to the graph ([[nationTradeEdges]]: broadcast dims, one
+    // co-partitioned orderkey shuffle, then a 25x25-bounded aggregate);
+    // the solve runs on that config-sized matrix at the driver (5 damped
+    // iterations, deterministic src-sorted accumulation), the same
+    // corpus-to-config split as mix_temperature. A doc-scale graph instead
+    // iterates as DataFrame joins — graph_pagerank_users (operators/PageRank).
     "graph_pagerank" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val supp = t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey").cast(LongType).as("src"))
-      val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey").cast(LongType).as("dst"))
-      val edges = li.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2).toDouble))
-      val nations = t(s, dir, "nation")
-        .select(col("n_nationkey").cast(LongType)).collect().map(_.getLong(0)).sorted
+      val edges = collectEdges(nationTradeEdges(s, dir))
+        .map { case (src, dst, w) => (src, dst, w.toDouble) }
+      val nations = nationIds(s, dir)
       val nN = nations.length
       val outW = edges.groupBy(_._1).map { case (k, es) => k -> es.map(_._3).sum }
       // deterministic accumulation: contributions folded in (src, dst) order
@@ -959,56 +916,21 @@ object QueriesAnalytics {
     // with SF: 15 / 150 / 1500 across the test SFs); operators/PageRank
     // then runs 5 synchronous distributed rounds in exact fixed-point
     // integers (scores 1e-12, edge probabilities 1e-6), so the unrolled
-    // 5-round SQL oracle matches bit-for-bit. Top-100 by final score,
-    // TakeOrderedAndProject-planned; rank is assigned AFTER the top-k (a
-    // global row_number over the full node domain would single-partition
-    // the corpus-sized score table).
-    "graph_pagerank_users" -> ((s, dir) => {
-      import graft.operators.{CacheRegistry, PageRank}
-      val (e0, nodes0) = successorGraph(s, dir)
-      // out-weight via a window over the SAME src exchange (a groupBy+join
-      // would recompute the whole window pipeline for the second consumer);
-      // edges are scanned every round — persist once (session-lifetime,
-      // swept by the harness mains); p6 is the per-edge 1e-6 transition
-      // probability, a constant across rounds
-      val edges = CacheRegistry.track(e0
-        .withColumn("wo", sum(col("w")).over(Window.partitionBy(col("src"))))
-        .select(col("src"), col("dst"), expr("(w * 1000000) DIV wo").as("p6")))
-      val nodes = nodes0 // persisted inside successorGraph
-      val n = nodes.count()
-      PageRank.run(edges, nodes, n, 5)
-        .orderBy(col("r12").desc, col("id")).limit(100)
-        .select(col("id").as("user_id"), col("r12").as("score12"))
-        .withColumn("rnk", row_number()
-          .over(Window.orderBy(col("score12").desc, col("user_id"))).cast(LongType))
-        .orderBy(col("rnk"))
-    }),
+    // 5-round SQL oracle matches bit-for-bit. Top-100 by final score
+    // ([[rankUsers]], every node a seed).
+    "graph_pagerank_users" -> ((s, dir) => rankUsers(s, dir, lit(true))),
 
     // Personalized PageRank from the seed set — the sixth data-scale graph
     // member and the RECOMMENDATION primitive (scores = proximity to the
     // seeds, Haveliwala's topic-sensitive teleport): every 25th user (the
     // BFS seed convention, data-scale) receives the teleport AND the
-    // dangling mass; everything else is graph_pagerank_users' machinery
-    // verbatim — the SAME persisted p6 edge table (CacheManager dedups by
+    // dangling mass; everything else is graph_pagerank_users' [[rankUsers]]
+    // — the SAME persisted p6 edge table (CacheManager matches by
     // canonicalized plan, so the events window sort still runs once per
-    // session across the four user-graph queries), 5 synchronous rounds,
-    // exact 1e-12 fixed-point integers, unrolled bit-exact SQL oracle.
+    // session across the user-graph queries), 5 synchronous rounds, exact
+    // 1e-12 fixed-point integers, unrolled bit-exact SQL oracle.
     // Declared output: top-100 by proximity score.
-    "graph_ppr_users" -> ((s, dir) => {
-      import graft.operators.{CacheRegistry, PageRank}
-      val (e0, nodes0) = successorGraph(s, dir)
-      val edges = CacheRegistry.track(e0
-        .withColumn("wo", sum(col("w")).over(Window.partitionBy(col("src"))))
-        .select(col("src"), col("dst"), expr("(w * 1000000) DIV wo").as("p6")))
-      val nodes = nodes0.select(col("id"), (col("id") % 25 === 0).as("seed"))
-      val nSeeds = nodes.where(col("seed")).count()
-      PageRank.runPersonalized(edges, nodes, "seed", nSeeds, 5)
-        .orderBy(col("r12").desc, col("id")).limit(100)
-        .select(col("id").as("user_id"), col("r12").as("score12"))
-        .withColumn("rnk", row_number()
-          .over(Window.orderBy(col("score12").desc, col("user_id"))).cast(LongType))
-        .orderBy(col("rnk"))
-    }),
+    "graph_ppr_users" -> ((s, dir) => rankUsers(s, dir, col("id") % 25 === 0)),
 
     // Label-propagation communities on the SAME data-sized user graph —
     // the second distributed-iteration member beside graph_pagerank_users
@@ -1172,15 +1094,7 @@ object QueriesAnalytics {
     // edges, never the corpus. Node order a<b<c counts each triangle once;
     // C = 3·triangles / Σ d(d−1)/2 is a ratio of exact integers.
     "graph_triangles" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val supp = t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey").cast(LongType).as("src"))
-      val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey").cast(LongType).as("dst"))
-      val und = li.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      val und = nationTradeEdges(s, dir)
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .where(col("u") =!= col("v"))
@@ -1225,10 +1139,8 @@ object QueriesAnalytics {
     // round-7 plan: 946 nodes, 288 parquet scans). ≤nations² rows.
     "graph_link_predict" -> ((s, dir) => {
       import s.implicits._
-      val sp = sparsifiedNationGraph(s, dir) // symmetric (a, b, w)
-        .select(col("a"), col("b")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        .toDF("a", "b")
+      val sp = collectEdges(sparsifiedNationGraph(s, dir)) // symmetric (a, b, w)
+        .map(e => (e._1, e._2)).toSeq.toDF("a", "b")
       val deg = sp.groupBy(col("a")).agg(count(lit(1)).as("d"))
         .withColumnRenamed("a", "node")
       val lcm = 5354228880L // LCM(1..24)
@@ -1264,9 +1176,7 @@ object QueriesAnalytics {
     // horizon are absent by the same rule on both sides. Undirected ⇒ one
     // (src < dst) row per reachable pair; everything is exact integers.
     "graph_shortest_paths" -> ((s, dir) => {
-      val edges = sparsifiedNationGraph(s, dir)
-        .select(col("a"), col("b")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+      val edges = collectEdges(sparsifiedNationGraph(s, dir))
       val nbrs = edges.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       nbrs.keys.toSeq.sorted.foreach { src =>
@@ -1878,30 +1788,46 @@ object QueriesAnalytics {
       |nodes AS (SELECT CAST(n_nationkey AS BIGINT) AS node FROM nation),
       |r0 AS (SELECT node, node AS label FROM nodes)""".stripMargin
 
-  /** The Spark twin of [[nationGraphSql]]'s `sp`: symmetric (a, b, w)
-    * sparsified edges, computed distributedly — broadcast dims around ONE
-    * orderkey-shuffled fact⋈fact join, then nations²-bounded aggregates. */
-  private def sparsifiedNationGraph(
-      s: org.apache.spark.sql.SparkSession, dir: String) = {
+  /** The directed nation trade graph every nation-graph card starts from:
+    * (src = supplier nation, dst = customer nation, w = lineitem count),
+    * self-loops kept. Broadcast dims around ONE orderkey-shuffled fact⋈fact
+    * join, then a ≤nations² aggregate — the corpus is touched here only. */
+  private def nationTradeEdges(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
     val supp = t(s, dir, "supplier")
       .select(col("s_suppkey"), col("s_nationkey").cast(LongType).as("src"))
     val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
     val cust = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey").cast(LongType).as("dst"))
+    li.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
+      .join(ord, col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+  }
+
+  /** The nation node set, sorted (the driver-side folds iterate in it). */
+  private def nationIds(s: org.apache.spark.sql.SparkSession, dir: String): Array[Long] =
+    t(s, dir, "nation").select(col("n_nationkey").cast(LongType))
+      .collect().map(_.getLong(0)).sorted
+
+  /** A ≤nations² (x, y, w) BIGINT edge list, collected to the driver. */
+  private def collectEdges(edges: org.apache.spark.sql.DataFrame): Array[(Long, Long, Long)] =
+    edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+
+  /** The Spark twin of [[nationGraphSql]]'s `sp`: symmetric (a, b, w)
+    * sparsified edges — [[nationTradeEdges]] without self-loops, ×5
+    * intra-region boost, symmetrized, kept by w·|E| > Σw — all
+    * nations²-bounded aggregates after the one corpus collapse. */
+  private def sparsifiedNationGraph(
+      s: org.apache.spark.sql.SparkSession, dir: String) = {
     val nat = t(s, dir, "nation")
       .select(col("n_nationkey").cast(LongType).as("nk"),
         col("n_regionkey").cast(LongType).as("rk"))
-    val raw = li.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .where(col("src") =!= col("dst"))
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w0"))
-    val boosted = raw
+    val boosted = nationTradeEdges(s, dir).where(col("src") =!= col("dst"))
       .join(broadcast(nat.select(col("nk").as("src"), col("rk").as("r_src"))), Seq("src"))
       .join(broadcast(nat.select(col("nk").as("dst"), col("rk").as("r_dst"))), Seq("dst"))
       .select(col("src"), col("dst"),
-        (col("w0") * when(col("r_src") === col("r_dst"), 5L).otherwise(1L)).as("w"))
+        (col("w") * when(col("r_src") === col("r_dst"), 5L).otherwise(1L)).as("w"))
     val und = boosted.select(col("src").as("a"), col("dst").as("b"), col("w"))
       .unionByName(boosted.select(col("dst").as("a"), col("src").as("b"), col("w")))
       .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
@@ -1966,6 +1892,32 @@ object QueriesAnalytics {
       .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("src"))
     (graft.operators.CacheRegistry.track(e0),
       graft.operators.CacheRegistry.track(ev.select(col("user_id").as("id")).distinct()))
+  }
+
+  /** graph_pagerank_users / graph_ppr_users: [[PageRank]] over the
+    * successor graph, teleporting to the nodes where `seed` holds (every
+    * node for plain PageRank), then the top-100 by score. The p6 edge
+    * table (per-edge 1e-6 transition probability, a constant across
+    * rounds) takes its out-weight from a window over successorGraph's src
+    * partitioning (a groupBy+join would recompute the window pipeline for
+    * the second consumer) and is persisted once: every round scans it.
+    * TakeOrderedAndProject cuts the top-100, and the rank is assigned
+    * after it (a global row_number over the full node domain would
+    * single-partition the corpus-sized score table). */
+  private def rankUsers(s: org.apache.spark.sql.SparkSession, dir: String,
+      seed: org.apache.spark.sql.Column) = {
+    import graft.operators.{CacheRegistry, PageRank}
+    val (e0, nodes0) = successorGraph(s, dir)
+    val edges = CacheRegistry.track(e0
+      .withColumn("wo", sum(col("w")).over(Window.partitionBy(col("src"))))
+      .select(col("src"), col("dst"), expr("(w * 1000000) DIV wo").as("p6")))
+    val nodes = nodes0.select(col("id"), seed.as("seed"))
+    PageRank.run(edges, nodes, nodes.where(col("seed")).count(), 5)
+      .orderBy(col("r12").desc, col("id")).limit(100)
+      .select(col("id").as("user_id"), col("r12").as("score12"))
+      .withColumn("rnk", row_number()
+        .over(Window.orderBy(col("score12").desc, col("user_id"))).cast(LongType))
+      .orderBy(col("rnk"))
   }
 
   /** Exact unordered within-group pairs over (l_orderkey, l_partkey) rows →

@@ -573,7 +573,7 @@ object QueriesSim {
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
       val centroids = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-      val idx = Ivf.index(e, centroids, "vec_id", "embedding")
+      val idx = Ivf.index(e, centroids, "embedding")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       Ivf.search(idx, centroids, q, "embedding", topK = 10, nprobe = 3)
@@ -785,7 +785,7 @@ object QueriesSim {
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
       val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-      val idx = Ivf.index(e, cents, "vec_id", "embedding")
+      val idx = Ivf.index(e, cents, "embedding")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val hits = idx.join(Ivf.probe(q, cents, 3), "cell")
@@ -866,7 +866,7 @@ object QueriesSim {
         .select(col("vec_id"), col("label"), col("embedding"))
       val pred = col("label") % 3 === 0
       val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-      val idx = Ivf.index(e, cents, "vec_id", "embedding")
+      val idx = Ivf.index(e, cents, "embedding")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val fil = Ivf.search(idx.where(pred), cents, q, "embedding", topK = 10, nprobe = 3)
@@ -1049,7 +1049,7 @@ object QueriesSim {
       val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
       val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-      val assigned = Ivf.index(e, cents, "vec_id", "embedding")
+      val assigned = Ivf.index(e, cents, "embedding")
       val q = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val (truth, nTruth) =
@@ -1190,7 +1190,7 @@ object QueriesSim {
         "semdedup_state_v1", s"$dir/embeddings.parquet")
       graft.operators.DiskCache.ensure(state,
           Seq("idx/_SUCCESS", "counts/_SUCCESS", "drops/_SUCCESS")) { tmp =>
-        val baseA = Ivf.index(e, cents, "vec_id", "embedding")
+        val baseA = Ivf.index(e, cents, "embedding")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         Ivf.writeIndex(baseA, s"$tmp/idx")
         baseA.groupBy(col("cell")).agg(count(lit(1)).as("n_base"))
@@ -1203,7 +1203,7 @@ object QueriesSim {
       val baseDrops = s.read.parquet(s"$state/drops")
       val batch = e.where(col("vec_id") % 25 === 0)
         .select((col("vec_id") + off).as("vec_id"), col("embedding"))
-      val batchA = Ivf.index(batch, cents, "vec_id", "embedding")
+      val batchA = Ivf.index(batch, cents, "embedding")
         .localCheckpoint(false)
       // batch rows dropped by a base row, then by a lower-id batch row;
       // x.vec_id < b.vec_id is implied for the vs-base family (off > every
@@ -1860,12 +1860,12 @@ object QueriesSim {
     val base = graft.operators.DiskCache.keyedPath(
       "ivf_idx_v1", s"$dir/embeddings.parquet")
     graft.operators.DiskCache.ensure(s"$base/corpus") { tmp =>
-      Ivf.writeIndex(Ivf.index(e, cents, "vec_id", "embedding"), tmp)
+      Ivf.writeIndex(Ivf.index(e, cents, "embedding"), tmp)
     }
     val batch = e.where(col("vec_id") % 50 === 0)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
     graft.operators.DiskCache.ensure(s"$base/batch_1") { tmp =>
-      Ivf.writeIndex(Ivf.index(batch, cents, "vec_id", "embedding"), tmp)
+      Ivf.writeIndex(Ivf.index(batch, cents, "embedding"), tmp)
     }
     (e, cents, base)
   }

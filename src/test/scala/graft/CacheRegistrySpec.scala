@@ -25,6 +25,19 @@ class CacheRegistrySpec extends SparkSpec {
     assert(a.count() == 3)
   }
 
+  test("tracking an already-cached plan registers it once and sweep still releases it") {
+    CacheRegistry.sweep()
+    val a = CacheRegistry.track(spark.range(10).selectExpr("id * 3 AS x"))
+    val b = CacheRegistry.track(spark.range(10).selectExpr("id * 3 AS x"))
+    assert(CacheRegistry.liveCount == 1)
+    assert(b.storageLevel != StorageLevel.NONE)
+    assert(b.count() == 10)
+    CacheRegistry.sweep()
+    assert(CacheRegistry.liveCount == 0)
+    assert(a.storageLevel == StorageLevel.NONE)
+    assert(b.storageLevel == StorageLevel.NONE)
+  }
+
   test("operators register their session-lifetime caches with the registry") {
     CacheRegistry.sweep()
     import spark.implicits._

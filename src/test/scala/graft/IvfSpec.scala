@@ -17,7 +17,7 @@ class IvfSpec extends SparkSpec {
     val c1 = Ivf.train(vecs, "vec_id", "embedding", k = 8)
     val c2 = Ivf.train(vecs, "vec_id", "embedding", k = 8)
     assert(c1.map(_.toSeq).toSeq == c2.map(_.toSeq).toSeq)
-    val cells = Ivf.index(vecs, c1, "vec_id", "embedding")
+    val cells = Ivf.index(vecs, c1, "embedding")
     assert(cells.count() == vecs.count())
     assert(cells.select("cell").distinct().count() <= 8)
   }
@@ -41,7 +41,7 @@ class IvfSpec extends SparkSpec {
     val c1 = Ivf.trainSampled(vecs, "vec_id", "embedding", k = 8)
     val c2 = Ivf.trainSampled(vecs, "vec_id", "embedding", k = 8)
     assert(c1.map(_.toSeq).toSeq == c2.map(_.toSeq).toSeq)
-    val cells = Ivf.index(vecs, c1, "vec_id", "embedding")
+    val cells = Ivf.index(vecs, c1, "embedding")
     assert(cells.count() == vecs.count())
     assert(cells.select("cell").distinct().count() <= 8)
 
@@ -55,7 +55,7 @@ class IvfSpec extends SparkSpec {
       .withColumn("rank", row_number().over(w)).where(col("rank") <= 10)
       .select("qid", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recallOf(centroids: Array[Array[Double]]): Double = {
-      val approx = Ivf.search(Ivf.index(vecs, centroids, "vec_id", "embedding"),
+      val approx = Ivf.search(Ivf.index(vecs, centroids, "embedding"),
         centroids, queries, "embedding", topK = 10, nprobe = 3)
         .select("qid", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       approx.count(exactSet.contains).toDouble / exactSet.size
@@ -68,7 +68,7 @@ class IvfSpec extends SparkSpec {
 
   test("search finds the query itself and beats 50% recall@10 at nprobe=3/8") {
     val centroids = Ivf.train(vecs, "vec_id", "embedding", k = 8)
-    val idx = Ivf.index(vecs, centroids, "vec_id", "embedding")
+    val idx = Ivf.index(vecs, centroids, "embedding")
     val queries = vecs.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val approx = Ivf.search(idx, centroids, queries, "embedding", topK = 10, nprobe = 3)
@@ -104,7 +104,7 @@ class IvfSpec extends SparkSpec {
     }.sorted
     assert(got == expected)
     // the query's own cell is its nearest: an index probe at crank 1 finds it
-    val own = Ivf.index(vecs.where(col("vec_id") < 5), cents, "vec_id", "embedding")
+    val own = Ivf.index(vecs.where(col("vec_id") < 5), cents, "embedding")
       .select(col("vec_id"), col("cell")).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got.filter(_._2 == 1).forall { case (q, _, c) => own(q) == c })
   }
@@ -112,7 +112,7 @@ class IvfSpec extends SparkSpec {
   test("on-disk index is cell-partitioned and probes prune partitions (DPP)") {
     val centroids = Ivf.train(vecs, "vec_id", "embedding", k = 8)
     val path = "target/tmp_ivf_index"
-    Ivf.writeIndex(Ivf.index(vecs, centroids, "vec_id", "embedding"), path)
+    Ivf.writeIndex(Ivf.index(vecs, centroids, "embedding"), path)
     // layout: one directory per cell
     val dirs = new java.io.File(path).listFiles().filter(_.isDirectory).map(_.getName)
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("cell=")), dirs.mkString(","))
@@ -120,7 +120,7 @@ class IvfSpec extends SparkSpec {
     val queries = vecs.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val fromDisk = Ivf.search(onDisk, centroids, queries, "embedding", topK = 10, nprobe = 3)
-    val inMem = Ivf.search(Ivf.index(vecs, centroids, "vec_id", "embedding"), centroids,
+    val inMem = Ivf.search(Ivf.index(vecs, centroids, "embedding"), centroids,
       queries, "embedding", topK = 10, nprobe = 3)
     assert(fromDisk.orderBy("qid", "rank").collect().map(_.toSeq).toSeq ==
       inMem.orderBy("qid", "rank").collect().map(_.toSeq).toSeq)

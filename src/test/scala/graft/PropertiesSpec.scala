@@ -89,6 +89,8 @@ class PropertiesSpec extends SparkSpec {
 
   // DiskCache-backed cards (bm25_*, corpus_assembly_incremental) read at 7
   // partitions the entry built at 1, so for them this checks the query side only.
+  // The graph cards ride along: neither their driver-side folds nor their
+  // distributed rounds may depend on the partition count.
   test("property: TopK-ranked cards are invariant under shuffle partitions") {
     val cards = Seq("sim_topk", "sim_ivf", "sim_lsh_multiprobe", "sim_hamming_rerank",
       "sim_ivfpq", "knn_eval", "retrieval_mrr", "ann_nprobe_sweep",
@@ -97,7 +99,10 @@ class PropertiesSpec extends SparkSpec {
       "rrf_fusion", "tfidf_top", "bm25_prf", "bm25_search", "bm25_incremental",
       "token_zipf", "length_tail", "session_paths", "graph_lpa_users", "trending_topk",
       "inverted_index", "review_sample", "corpus_assembly", "corpus_assembly_incremental",
-      "stratified_sample", "source_quota", "window_rank")
+      "stratified_sample", "source_quota", "window_rank",
+      "graph_hits", "graph_communities", "graph_pagerank", "graph_pagerank_users",
+      "graph_ppr_users", "graph_bfs_users", "graph_densest_users", "graph_triangles",
+      "graph_link_predict", "graph_shortest_paths")
     def hashes(partitions: Int) = {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
@@ -125,7 +130,7 @@ class PropertiesSpec extends SparkSpec {
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val centroids = graft.operators.Ivf.train(vecs, "vec_id", "embedding", k = 8)
-    val idx = graft.operators.Ivf.index(vecs, centroids, "vec_id", "embedding")
+    val idx = graft.operators.Ivf.index(vecs, centroids, "embedding")
     val qs = vecs.where(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     def hits(np: Int) = graft.operators.Ivf.search(idx, centroids, qs, "embedding",

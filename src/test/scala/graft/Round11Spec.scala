@@ -80,7 +80,7 @@ class Round11Spec extends SparkSpec {
     val e = graft.queries.Tables.t(spark, dir, "embeddings")
       .where(col("embedding").isNotNull).select(col("vec_id"), col("embedding"))
     val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-    val base = Ivf.index(e, cents, "vec_id", "embedding")
+    val base = Ivf.index(e, cents, "embedding")
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
     val got = Ivf.assignBounded(e, cents, "vec_id", "embedding")
       .select(col("vec_id"), col("cell"))
@@ -142,7 +142,7 @@ class Round11Spec extends SparkSpec {
         .select((col("vec_id") + off).as("vec_id"), col("embedding")))
       val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = k,
         sampleN = math.max(2048, 8 * k))
-      val maxOcc = Ivf.index(corpus, cents, "vec_id", "embedding")
+      val maxOcc = Ivf.index(corpus, cents, "embedding")
         .groupBy(col("cell")).count().agg(max(col("count"))).head().getLong(0)
       assert(maxOcc * 16 <= 2048 * 10, // maxOcc <= 1280 = bound/1.6
         s"$d: max cell occupancy $maxOcc within 1.6x of the 2048 split bound")
@@ -155,7 +155,7 @@ class Round11Spec extends SparkSpec {
       .where(col("embedding").isNotNull && col("label").isNotNull)
       .select(col("vec_id"), col("label"), col("embedding"))
     val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-    val idx = Ivf.index(e, cents, "vec_id", "embedding")
+    val idx = Ivf.index(e, cents, "embedding")
     val q = e.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val fil = Ivf.search(idx.where(col("label") % 3 === 0), cents, q, "embedding",

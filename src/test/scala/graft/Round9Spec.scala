@@ -17,7 +17,7 @@ class Round9Spec extends SparkSpec {
       .withColumn("wo", sum(col("w")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .select(col("src"), col("dst"), expr("(w * 1000000) DIV wo").as("p6"))
-    val nodes = Seq(1L, 2L, 3L).toDF("id")
+    val nodes = Seq(1L, 2L, 3L).toDF("id").withColumn("seed", lit(true))
     val got = PageRank.run(edges, nodes, 3L, 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 

@@ -511,7 +511,7 @@ class StreamingSpec extends SparkSpec {
     // cross-check against the BATCH path: the stream's cell choice must
     // equal the native NearestCells assignment, and the quantized residual
     // sums must match a driver recompute over those assignments
-    val batchCells = Ivf.index(e.orderBy("vec_id").limit(64), cents, "vec_id", "embedding")
+    val batchCells = Ivf.index(e.orderBy("vec_id").limit(64), cents, "embedding")
       .select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val expected = vecs.groupBy(v => batchCells(v.vec_id)).view.mapValues { vs =>
       val n = vs.length.toLong
