@@ -20,8 +20,9 @@ import org.apache.spark.sql.types._
   */
 object Dedup {
 
-  /** Distinct token-`n`-gram shingle set per document. */
-  def shingleSets(docs: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
+  /** Distinct token-`n`-gram shingle set per document (by default the
+    * MinHash-LSH layout's trigrams). */
+  def shingleSets(docs: DataFrame, idCol: String, textCol: String, n: Int = ShingleN): DataFrame =
     docs.select(col(idCol), array_distinct(TextFns.shingles(TextFns.tokens(col(textCol)), n)).as("shingles"))
 
   /** Jaccard similarity of two distinct-element array columns. */
@@ -46,61 +47,102 @@ object Dedup {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(xxhash64(value))))
   }
 
-  /** `numHashes` min-hashes per document, computed as explode → codegen'd
-    * hash aggregate with `numHashes` min() columns. Spark's higher-order
-    * functions are interpreted (no codegen), so a fold over the shingle
-    * array is ~10× slower than this shape; the aggregate also map-side
-    * combines, so only one tiny signature row per document ever shuffles. */
-  def minhashSignatures(sh: DataFrame, idCol: String, numHashes: Int): DataFrame = {
+  // The one MinHash-LSH layout: 3-gram shingles, 64 xxhash64 minhashes,
+  // 16 bands × 4 rows. Every index is written with it and read with it.
+  private val ShingleN = 3
+  private val NumHashes = 64
+  private val NumBands = 16
+  private val RowsPerBand = NumHashes / NumBands
+
+  /** The 64 min-hashes per document, computed as explode → codegen'd hash
+    * aggregate with 64 min() columns. Spark's higher-order functions are
+    * interpreted (no codegen), so a fold over the shingle array is ~10×
+    * slower than this shape; the aggregate also map-side combines, so only
+    * one tiny signature row per document ever shuffles. A document with no
+    * shingle has no row. */
+  def minhashSignatures(sh: DataFrame, idCol: String): DataFrame = {
     val exploded = sh.select(col(idCol), explode(col("shingles")).as("_sh"))
-    val aggs = (0 until numHashes).map(i => min(xxhash64(lit(i), col("_sh"))).as(s"_mh_$i"))
+    val aggs = (0 until NumHashes).map(i => min(xxhash64(lit(i), col("_sh"))).as(s"_mh_$i"))
     exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-      .select(col(idCol), array((0 until numHashes).map(i => col(s"_mh_$i")): _*).as("mh"))
+      .select(col(idCol), array((0 until NumHashes).map(i => col(s"_mh_$i")): _*).as("mh"))
   }
 
-  /** Band the minhash signature: `numBands` hashes, each over a contiguous
-    * slice of `rowsPerBand` minhashes. */
-  def bandHashes(mh: Column, numBands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(numBands - 1)),
-      b => xxhash64(slice(mh, b * rowsPerBand + 1, lit(rowsPerBand))))
+  /** Per-row form of [[minhashSignatures]] over a shingle-array column, for
+    * streams, which cannot aggregate per document: the same xxhash64(i,
+    * shingle) minima (interpreted, fine at per-document stream rates). An
+    * empty shingle array gives 64 nulls — callers drop those rows, as the
+    * batch form does. */
+  def minhashSignature(shingles: Column): Column =
+    transform(sequence(lit(0), lit(NumHashes - 1)),
+      i => array_min(transform(shingles, s => xxhash64(i, s))))
 
-  private def requireBandParams(numHashes: Int, numBands: Int): Unit =
-    require(numBands >= 1 && numBands <= numHashes && numHashes % numBands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of numBands ($numBands) — " +
-        "zero-length band slices would make every document collide in every band (all-pairs blowup)")
+  /** Band the minhash signature: 16 hashes, each over a contiguous slice of
+    * 4 minhashes. */
+  def bandHashes(mh: Column): Column =
+    transform(sequence(lit(0), lit(NumBands - 1)),
+      b => xxhash64(slice(mh, b * RowsPerBand + 1, lit(RowsPerBand))))
 
   /** The ONE (id, band, bh) band-key construction — shared by the in-memory
-    * pair search, the index writer and the incremental reader, so hash/band
-    * layout can never silently diverge between an index and its probes. */
-  private def bandedKeys(sh: DataFrame, idCol: String,
-                         numHashes: Int, numBands: Int): DataFrame = {
-    requireBandParams(numHashes, numBands)
-    minhashSignatures(sh, idCol, numHashes)
-      .select(col(idCol), posexplode(bandHashes(col("mh"), numBands, numHashes / numBands)))
+    * pair search, the index writer and the incremental reader. */
+  private def bandedKeys(sh: DataFrame, idCol: String): DataFrame =
+    minhashSignatures(sh, idCol)
+      .select(col(idCol), posexplode(bandHashes(col("mh"))))
       .toDF(idCol, "band", "bh")
+
+  /** The one exact verify: (a, b, jaccard) rows with jaccard ≥ `threshold`. */
+  private def verify(pairs: DataFrame, a: String, b: String, shA: String, shB: String,
+                     threshold: Double): DataFrame =
+    pairs.select(col(a), col(b), jaccard(col(shA), col(shB)).as("jaccard"))
+      .where(col("jaccard") >= threshold)
+
+  /** Band self-join of one frame's band keys (idA < idB, multi-band
+    * collisions collapsed), verified against its shingle sets. */
+  private def selfPairs(sh: DataFrame, bands: DataFrame, idCol: String,
+                        threshold: Double): DataFrame = {
+    val cand = bands.as("x").join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+          col(s"x.$idCol") < col(s"y.$idCol"))
+      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
+      .distinct()
+    verify(cand.join(sh.toDF("id_a", "sh_a"), "id_a").join(sh.toDF("id_b", "sh_b"), "id_b"),
+      "id_a", "id_b", "sh_a", "sh_b", threshold)
   }
+
+  /** The one index probe: (id_new, band, bh, …) rows equi-joined on
+    * (band, bh) against `indexPath/bands`; adds `id_idx`, keeps the rest. */
+  private[graft] def indexCandidates(bands: DataFrame, indexPath: String): DataFrame =
+    bands.join(bands.sparkSession.read.parquet(s"$indexPath/bands").toDF("id_idx", "band", "bh"),
+        Seq("band", "bh"))
+      .drop("band", "bh")
+
+  /** The index-side verify: (id_new, id_idx, sh_new) candidates against
+    * `indexPath/shingles`. A stream, which cannot join back to its own
+    * shingles, carries `sh_new` on its band rows. */
+  private[graft] def verifyAgainstIndex(cand: DataFrame, indexPath: String,
+                                        threshold: Double): DataFrame =
+    verify(cand.join(cand.sparkSession.read.parquet(s"$indexPath/shingles")
+        .toDF("id_idx", "sh_idx"), "id_idx"),
+      "id_new", "id_idx", "sh_new", "sh_idx", threshold)
+
+  /** Batch form of the probe: candidates collapsed to distinct (id_new,
+    * id_idx) before they pick up their shingle sets. */
+  private def indexPairs(sh: DataFrame, bands: DataFrame, indexPath: String,
+                         threshold: Double): DataFrame =
+    verifyAgainstIndex(
+      indexCandidates(bands.toDF("id_new", "band", "bh"), indexPath).distinct()
+        .join(sh.toDF("id_new", "sh_new"), "id_new"),
+      indexPath, threshold)
 
   /** MinHash-LSH candidate pairs (idA < idB), verified with exact Jaccard ≥
     * `threshold`. Output: (id_a, id_b, jaccard). */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      threshold: Double, numHashes: Int = 64, numBands: Int = 16,
-                      shingleN: Int = 3): DataFrame = {
+                      threshold: Double): DataFrame = {
     // shingle sets feed the signature path AND both sides of the verify join
     // — persist once instead of recomputing the tokenize+shingle pass 3×.
     // (The operator returns a lazy plan over the cache, so it can't
     // unpersist here; CacheRegistry hands lifetime to the harness sweep.)
-    val sh = CacheRegistry.track(shingleSets(docs, idCol, textCol, shingleN))
-    val bands = bandedKeys(sh, idCol, numHashes, numBands)
-    val cand = bands.as("x").join(bands.as("y"),
-        col(s"x.band") === col(s"y.band") && col(s"x.bh") === col(s"y.bh") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-      .distinct()
-    cand
-      .join(sh.withColumnRenamed(idCol, "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed(idCol, "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
-      .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    val sh = CacheRegistry.track(shingleSets(docs, idCol, textCol))
+    selfPairs(sh, bandedKeys(sh, idCol), idCol, threshold)
   }
 
   /** Persist a corpus's MinHash-LSH index: `path/bands` holds one
@@ -108,54 +150,32 @@ object Dedup {
     * for exact verification. This is the production append-batch shape: the
     * corpus is signature-scanned ONCE, and every future incoming batch
     * joins against the stored buckets instead of recomputing 100 TB of
-    * signatures. */
-  def writeMinhashIndex(docs: DataFrame, idCol: String, textCol: String, path: String,
-                        numHashes: Int = 64, numBands: Int = 16, shingleN: Int = 3): Unit = {
-    requireBandParams(numHashes, numBands)
-    val sh = shingleSets(docs, idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.write.mode("overwrite").parquet(s"$path/shingles")
-    bandedKeys(sh, idCol, numHashes, numBands)
+    * signatures. The bands are computed from the shingle sets just written,
+    * so the tokenize pass runs once without a cache. */
+  def writeMinhashIndex(docs: DataFrame, idCol: String, textCol: String, path: String): Unit = {
+    shingleSets(docs, idCol, textCol).write.mode("overwrite").parquet(s"$path/shingles")
+    bandedKeys(docs.sparkSession.read.parquet(s"$path/shingles"), idCol)
       .write.mode("overwrite").parquet(s"$path/bands")
-    sh.unpersist()
   }
 
   /** Build the index only if `path` doesn't already hold a completed one —
     * the append-batch loop indexes the corpus ONCE and reuses it for every
     * subsequent batch (and every subsequent bench run). Callers must key
     * `path` by the corpus identity (e.g. its source directory). */
-  def ensureMinhashIndex(docs: DataFrame, idCol: String, textCol: String, path: String,
-                         numHashes: Int = 64, numBands: Int = 16, shingleN: Int = 3): Unit =
+  def ensureMinhashIndex(docs: DataFrame, idCol: String, textCol: String, path: String): Unit =
     DiskCache.ensure(path, Seq("bands/_SUCCESS", "shingles/_SUCCESS")) { tmp =>
-      writeMinhashIndex(docs, idCol, textCol, tmp, numHashes, numBands, shingleN)
+      writeMinhashIndex(docs, idCol, textCol, tmp)
     }
 
   /** Near-dups of an `incoming` batch AGAINST a stored [[writeMinhashIndex]]
     * only — no corpus recompute and no incoming×incoming pairs. Work scales
     * with |incoming| × bucket collision rate; the corpus-side cost is a
-    * band-key equi-join against the index parquet. Hash parameters must
-    * match the ones the index was written with. Output:
+    * band-key equi-join against the index parquet. Output:
     * (id_new, id_idx, jaccard ≥ threshold). */
   def incrementalNearDups(incoming: DataFrame, idCol: String, textCol: String,
-                          indexPath: String, threshold: Double,
-                          numHashes: Int = 64, numBands: Int = 16,
-                          shingleN: Int = 3): DataFrame = {
-    val spark = incoming.sparkSession
-    val sh = CacheRegistry.track(shingleSets(incoming, idCol, textCol, shingleN))
-    val newBands = bandedKeys(sh, idCol, numHashes, numBands)
-    val idxBands = spark.read.parquet(s"$indexPath/bands")
-      .toDF("_idx_id", "band", "bh")
-    val cand = newBands.join(idxBands, Seq("band", "bh"))
-      .select(col(idCol).as("id_new"), col("_idx_id").as("id_idx"))
-      .distinct()
-    val idxSh = spark.read.parquet(s"$indexPath/shingles")
-      .toDF("id_idx", "sh_idx")
-    cand
-      .join(sh.withColumnRenamed(idCol, "id_new").withColumnRenamed("shingles", "sh_new"), "id_new")
-      .join(idxSh, "id_idx")
-      .select(col("id_new"), col("id_idx"),
-        jaccard(col("sh_new"), col("sh_idx")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+                          indexPath: String, threshold: Double): DataFrame = {
+    val sh = CacheRegistry.track(shingleSets(incoming, idCol, textCol))
+    indexPairs(sh, bandedKeys(sh, idCol), indexPath, threshold)
   }
 
   /** [[incrementalNearDups]] + the batch's OWN near-dup pairs from ONE
@@ -164,34 +184,10 @@ object Dedup {
     * batch twice). Returns (newVsIndex: (id_new, id_idx, jaccard),
     * newVsNew: (id_a, id_b, jaccard)), both exact-verified ≥ `threshold`. */
   def batchNearDups(incoming: DataFrame, idCol: String, textCol: String,
-                    indexPath: String, threshold: Double,
-                    numHashes: Int = 64, numBands: Int = 16,
-                    shingleN: Int = 3): (DataFrame, DataFrame) = {
-    val spark = incoming.sparkSession
-    val sh = CacheRegistry.track(shingleSets(incoming, idCol, textCol, shingleN))
-    val newBands = CacheRegistry.track(bandedKeys(sh, idCol, numHashes, numBands))
-    val idxBands = spark.read.parquet(s"$indexPath/bands")
-      .toDF("_idx_id", "band", "bh")
-    val idxSh = spark.read.parquet(s"$indexPath/shingles")
-      .toDF("id_idx", "sh_idx")
-    val newVsIdx = newBands.join(idxBands, Seq("band", "bh"))
-      .select(col(idCol).as("id_new"), col("_idx_id").as("id_idx"))
-      .distinct()
-      .join(sh.withColumnRenamed(idCol, "id_new").withColumnRenamed("shingles", "sh_new"), "id_new")
-      .join(idxSh, "id_idx")
-      .select(col("id_new"), col("id_idx"),
-        jaccard(col("sh_new"), col("sh_idx")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-    val newVsNew = newBands.as("x").join(newBands.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-      .distinct()
-      .join(sh.withColumnRenamed(idCol, "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed(idCol, "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
-      .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-    (newVsIdx, newVsNew)
+                    indexPath: String, threshold: Double): (DataFrame, DataFrame) = {
+    val sh = CacheRegistry.track(shingleSets(incoming, idCol, textCol))
+    val bands = CacheRegistry.track(bandedKeys(sh, idCol))
+    (indexPairs(sh, bands, indexPath, threshold), selfPairs(sh, bands, idCol, threshold))
   }
 
   /** 64-bit SimHash signatures per document as a 0/1 int array (the
@@ -227,38 +223,32 @@ object Dedup {
   def hamming(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => when(x === y, 0L).otherwise(1L)), lit(0L), (acc, v) => acc + v)
 
-  /** SimHash near-dup pairs: block on `numChunks` signature chunks (pairs
-    * within hamming < numChunks always share a chunk), verify exact hamming
-    * ≤ maxHamming. Signatures are packed BIGINTs end-to-end
-    * ([[packedHammingNearDups]]). Output: (id_a, id_b, hamming). */
-  def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3, numChunks: Int = 4, shingleN: Int = 3): DataFrame = {
-    val sh = shingleSets(docs, idCol, textCol, shingleN)
-    packedHammingNearDups(simhashSignaturesPacked(sh, idCol), idCol, "sig",
-      maxHamming, numChunks)
-  }
+  // SimHash blocking: 4 chunks × 16 bits, complete for hamming ≤ 3 < 4
+  // (pigeonhole) and keeps bucket collisions (and thus candidate pairs)
+  // ~256× rarer than 8-bit chunks.
+  private val MaxHamming = 3
+  private val NumChunks = 4
+  private val ChunkLen = 64 / NumChunks
+
+  /** SimHash near-dup pairs over trigram shingles: block on the 4 signature
+    * chunks, verify exact hamming ≤ 3. Signatures are packed BIGINTs
+    * end-to-end ([[packedHammingNearDups]]). Output: (id_a, id_b, hamming). */
+  def simhashNearDups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    packedHammingNearDups(simhashSignaturesPacked(shingleSets(docs, idCol, textCol), idCol),
+      idCol, "sig")
 
   /** Banded hamming self-join over ANY packed 64-bit signature column
-    * (SimHash text signatures, perceptual image hashes, …): block on
-    * `numChunks` bit slices (pigeonhole — pairs within hamming < numChunks
-    * always share a slice), verify with the codegen'd `bit_count(x ^ y)`.
-    * Chunk keys are shift/mask slices of the single BIGINT — no arrays
-    * shuffle, no interpreted fold per candidate pair (round-4 verdict
-    * item 2). Output: (id_a, id_b, hamming ≤ maxHamming), complete. */
-  def packedHammingNearDups(sigs0: DataFrame, idCol: String, sigCol: String,
-                            maxHamming: Int, numChunks: Int = 4): DataFrame = {
-    require(maxHamming < numChunks,
-      s"chunk blocking is only complete for hamming < numChunks ($numChunks); got maxHamming=$maxHamming")
-    require(numChunks >= 1 && numChunks <= 64 && 64 % numChunks == 0,
-      s"numChunks ($numChunks) must divide 64 — zero-length chunks would collide every signature")
-    // 4 chunks × 16 bits: complete for hamming < 4 and keeps bucket
-    // collisions (and thus candidate pairs) ~256× rarer than 8-bit chunks.
-    val chunkLen = 64 / numChunks
-    val mask = if (chunkLen == 64) -1L else (1L << chunkLen) - 1L
+    * (SimHash text signatures, perceptual image hashes, …): block on the 4
+    * 16-bit slices (pigeonhole — pairs within hamming ≤ 3 always share a
+    * slice), verify with the codegen'd `bit_count(x ^ y)`. Chunk keys are
+    * shift/mask slices of the single BIGINT — no arrays shuffle, no
+    * interpreted fold per candidate pair (round-4 verdict item 2). Output:
+    * (id_a, id_b, hamming ≤ 3), complete. */
+  def packedHammingNearDups(sigs0: DataFrame, idCol: String, sigCol: String): DataFrame = {
     val sigs = CacheRegistry.track(
       sigs0.select(col(idCol), col(sigCol).as("sig")))
-    val chunkKeys = array((0 until numChunks).map(k =>
-      shiftright(col("sig"), k * chunkLen).bitwiseAND(lit(mask))): _*)
+    val chunkKeys = array((0 until NumChunks).map(k =>
+      shiftright(col("sig"), k * ChunkLen).bitwiseAND(lit((1L << ChunkLen) - 1L))): _*)
     val chunks = sigs
       .select(col(idCol), col("sig"), posexplode(chunkKeys))
       .toDF(idCol, "sig", "chunk", "ch")
@@ -268,6 +258,6 @@ object Dedup {
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
         bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).cast("long").as("hamming"))
       .distinct()
-      .where(col("hamming") <= maxHamming)
+      .where(col("hamming") <= MaxHamming)
   }
 }

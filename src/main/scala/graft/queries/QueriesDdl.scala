@@ -450,8 +450,7 @@ object QueriesDdl {
         .unionByName(ids.select((col("doc_id") + 200000L).as("img_id"),
           col("doc_id").as("base"), lit(0).as("bright")))
       val hashed = Multimodal.aHashBmp(s, Multimodal.renderBmpVariants(s, imgs))
-      graft.operators.Dedup.packedHammingNearDups(hashed, "img_id", "phash",
-          maxHamming = 3)
+      graft.operators.Dedup.packedHammingNearDups(hashed, "img_id", "phash")
         .orderBy(col("id_a"), col("id_b"))
     }),
 

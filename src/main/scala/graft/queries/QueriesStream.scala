@@ -169,13 +169,8 @@ object QueriesStream {
     // Streams.ingestNearDupGate, batch-equivalent to
     // Dedup.incrementalNearDups) is pinned by Round12Spec.
     "stream_neardup_gate" -> ((s, dir) => {
-      import graft.operators.Dedup
+      val idxPath = QueriesDedup.existingCorpusIndex(s, dir)
       val docs = t(s, dir, "documents")
-      val existing = docs.where(col("doc_id") >= 100)
-        .select(col("doc_id"), col("text"))
-      val idxPath = graft.operators.DiskCache.keyedPath(
-        "minhash_idx_v1", s"$dir/documents.parquet")
-      Dedup.ensureMinhashIndex(existing, "doc_id", "text", idxPath)
       val arrivals = docs.where(col("doc_id") >= 100 && col("doc_id") % 20 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           concat(col("text"), lit(" x")).as("text"))
@@ -183,7 +178,7 @@ object QueriesStream {
           .select((col("doc_id") + 1100000L).as("doc_id"),
             concat_ws(" ", reverse(graft.functions.TextFns.tokens(col("text"))))
               .as("text")))
-      val hits = Dedup.incrementalNearDups(
+      val hits = graft.operators.Dedup.incrementalNearDups(
         arrivals, "doc_id", "text", idxPath, threshold = 0.8)
       arrivals.select(col("doc_id"))
         .join(hits.groupBy(col("id_new").as("doc_id"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
+import graft.operators.Dedup
 
 /** Structured-Streaming surface (SURVEY.md §2.8 streaming). The reference has
   * no streaming at all; this is the Spark-native extension: every transform
@@ -311,16 +312,16 @@ object Streams {
     * (the batch sibling of this shape is Dedup.incrementalNearDups over a
     * persisted index).
     *
-    * Shape: per-row minhash signature (composed HOFs — interpreted, which
-    * is fine at per-document stream rates; batch jobs use Dedup's
-    * explode→aggregate form), explode to `numBands` band buckets, then
-    * `flatMapGroupsWithState` KEYED BY BUCKET holds the signatures seen in
-    * that bucket and emits a hit when an arriving signature agrees with a
-    * stored one on ≥ `threshold` of the minhashes (the standard unbiased
-    * LSH Jaccard estimate — state stays a fixed 8·numHashes bytes per doc
-    * per band, never the shingle sets). State is partitioned by bucket:
-    * the 1000-executor shape, skew-free because duplicate-heavy buckets
-    * split across band indexes.
+    * Shape: Dedup's shingle sets, per-row minhash signature
+    * ([[graft.operators.Dedup.minhashSignature]]) and band keys
+    * ([[graft.operators.Dedup.bandHashes]]), explode to the 16 band
+    * buckets, then `flatMapGroupsWithState` KEYED BY BUCKET holds the
+    * signatures seen in that bucket and emits a hit when an arriving
+    * signature agrees with a stored one on ≥ `threshold` of the minhashes
+    * (the standard unbiased LSH Jaccard estimate — state stays a fixed
+    * 8·64 bytes per doc per band, never the shingle sets). State is
+    * partitioned by bucket: the 1000-executor shape, skew-free because
+    * duplicate-heavy buckets split across band indexes.
     *
     * Caveats, deliberate: a pair colliding in k bands emits k identical
     * hits — dedup downstream (`dropDuplicates` on the ids; kept outside so
@@ -328,24 +329,12 @@ object Streams {
     * expires here (finite test streams) — production ingest bounds it with
     * an event-time TTL exactly like [[runningUserTotals]]'s timeout. */
   def nearDupStream(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
-                    threshold: Double = 0.8, numHashes: Int = 64, numBands: Int = 16,
-                    shingleN: Int = 3): Dataset[NearDupHit] = {
+                    threshold: Double = 0.8): Dataset[NearDupHit] = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    require(numBands >= 1 && numHashes % numBands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of numBands ($numBands)")
-    val rowsPerBand = numHashes / numBands
-    val sh = array_distinct(graft.functions.TextFns.shingles(
-      graft.functions.TextFns.tokens(col(textCol)), shingleN))
-    val mhCol = transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(col("_sh"), s => xxhash64(i, s))))
-    val banded = docs
-      .select(col(idCol).cast("long").as("doc_id"), sh.as("_sh"))
-      .where(size(col("_sh")) > 0)
-      .withColumn("_mh", mhCol)
-      .select(col("doc_id"), col("_mh"),
-        posexplode(transform(sequence(lit(0), lit(numBands - 1)),
-          b => xxhash64(slice(col("_mh"), b * rowsPerBand + 1, lit(rowsPerBand))))))
+    val banded = shingled(docs, idCol, textCol, "doc_id")
+      .withColumn("_mh", Dedup.minhashSignature(col("_sh")))
+      .select(col("doc_id"), col("_mh"), posexplode(Dedup.bandHashes(col("_mh"))))
       .select(col("doc_id"), concat_ws(":", col("pos"), col("col")).as("bucket"),
         col("_mh").as("mh"))
       .as[DocSig]
@@ -358,8 +347,8 @@ object Streams {
         if (!seen.exists(_._1 == d.doc_id)) {
           seen.foreach { case (pid, pmh) =>
             var agree = 0; var i = 0
-            while (i < numHashes) { if (pmh(i) == d.mh(i)) agree += 1; i += 1 }
-            val est = agree.toDouble / numHashes
+            while (i < pmh.length) { if (pmh(i) == d.mh(i)) agree += 1; i += 1 }
+            val est = agree.toDouble / pmh.length
             if (est >= threshold) out += NearDupHit(d.doc_id, pid, est)
           }
           seen = (d.doc_id, d.mh) :: seen
@@ -380,15 +369,15 @@ object Streams {
     * probes the DiskCache'd MinHash band index written by
     * `Dedup.ensureMinhashIndex`:
     *
-    *   - per-arrival minhash signature in the per-row HOF form (interpreted
-    *     — fine at per-document stream rates; the index side was built with
-    *     the explode→aggregate batch shape, and the two agree bit-for-bit:
-    *     same xxhash64(i, shingle) stream, min vs array_min);
-    *   - band keys via the SAME [[graft.operators.Dedup.bandHashes]] the
-    *     index writer used (one definition — layouts cannot drift);
-    *   - a STREAM-STATIC equi-join on (band, bh) against `path/bands`, then
-    *     exact Jaccard verification against `path/shingles` — both
-    *     stateless, so state is only the final dedup;
+    *   - per-arrival signature and band keys from Dedup's per-row form
+    *     ([[graft.operators.Dedup.minhashSignature]],
+    *     [[graft.operators.Dedup.bandHashes]]) — the layout the index
+    *     writer used, defined only there;
+    *   - Dedup's index probe, a STREAM-STATIC equi-join on (band, bh)
+    *     against `path/bands`, then its index-side Jaccard verify against
+    *     `path/shingles`, fed the shingle column each arrival carries (a
+    *     stream cannot join back to itself) — both stateless, so state is
+    *     only the final dedup;
     *   - `dropDuplicates(id_new, id_idx)` collapses multi-band collisions
     *     (a pair colliding in k bands would emit k identical verified hits).
     *
@@ -400,33 +389,21 @@ object Streams {
     * [[runningUserTotals]]. Scale shape: the probe cost per micro-batch is
     * |arrivals| × bucket collision rate; the corpus index is read, never
     * recomputed. */
-  def ingestNearDupGate(spark: SparkSession, arrivals: DataFrame,
-                        idCol: String, textCol: String, indexPath: String,
-                        threshold: Double = 0.8, numHashes: Int = 64,
-                        numBands: Int = 16, shingleN: Int = 3): DataFrame = {
-    require(numBands >= 1 && numHashes % numBands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of numBands ($numBands)")
-    val rowsPerBand = numHashes / numBands
-    val sh = array_distinct(graft.functions.TextFns.shingles(
-      graft.functions.TextFns.tokens(col(textCol)), shingleN))
-    val mhCol = transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(col("_sh"), s => xxhash64(i, s))))
-    val banded = arrivals
-      .select(col(idCol).cast("long").as("id_new"), sh.as("_sh"))
-      .where(size(col("_sh")) > 0)
-      .select(col("id_new"), col("_sh"),
-        posexplode(graft.operators.Dedup.bandHashes(mhCol, numBands, rowsPerBand))
-          .as(Seq("band", "bh")))
-    val idxBands = spark.read.parquet(s"$indexPath/bands").toDF("id_idx", "band", "bh")
-    val idxSh = spark.read.parquet(s"$indexPath/shingles").toDF("id_idx", "sh_idx")
-    banded.join(idxBands, Seq("band", "bh"))
-      .select(col("id_new"), col("id_idx"), col("_sh"))
-      .join(idxSh, "id_idx")
-      .select(col("id_new"), col("id_idx"),
-        graft.operators.Dedup.jaccard(col("_sh"), col("sh_idx")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+  def ingestNearDupGate(arrivals: DataFrame, idCol: String, textCol: String,
+                        indexPath: String, threshold: Double = 0.8): DataFrame = {
+    val banded = shingled(arrivals, idCol, textCol, "id_new")
+      .select(col("id_new"), col("_sh").as("sh_new"),
+        posexplode(Dedup.bandHashes(Dedup.minhashSignature(col("_sh")))).as(Seq("band", "bh")))
+    Dedup.verifyAgainstIndex(Dedup.indexCandidates(banded, indexPath), indexPath, threshold)
       .dropDuplicates("id_new", "id_idx")
   }
+
+  /** (`idAs` long, `_sh`) rows of Dedup's shingle sets; documents with no
+    * shingle are dropped, as they have no batch signature either. */
+  private def shingled(docs: DataFrame, idCol: String, textCol: String, idAs: String): DataFrame =
+    Dedup.shingleSets(docs, idCol, textCol)
+      .select(col(idCol).cast("long").as(idAs), col("shingles").as("_sh"))
+      .where(size(col("_sh")) > 0)
 
   /** Streaming Gopher quality gate — gopher_rules' ingest-time twin
     * (round-12 verdict #6; stream_neardup_gate is the template): a fully
@@ -595,7 +572,7 @@ object Streams {
   /** Streaming contamination guard — the ingest-time twin of the batch
     * `contamination_bloom` query: every arriving TRAIN document probes a
     * FROZEN broadcast Bloom filter of the eval suite's distinct token
-    * `shingleN`-grams, and per-SOURCE state tracks exact BIGINT ingest
+    * 8-grams (the batch contamination cards' shingles), and per-SOURCE state tracks exact BIGINT ingest
     * totals (docs seen, docs flagged, shingle hits). A rising flagged rate
     * in one source is the leak signal that quarantines the feed before the
     * batch decontaminate pass runs.
@@ -611,9 +588,10 @@ object Streams {
     * differently-chunked streams land bit-identical state (spec-pinned) —
     * the 1000-executor shape, partitioned by source. */
   def contaminationGuardStream(spark: SparkSession, evalDocs: DataFrame,
-                               train: Dataset[TrainDoc], shingleN: Int = 8,
+                               train: Dataset[TrainDoc],
                                fpp: Double = 0.001): Dataset[ContamStat] = {
     import spark.implicits._
+    val shingleN = 8
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     def shinglesOf(text: String): Iterator[String] = {
       if (text == null) return Iterator.empty // nullable column, like the batch twin

@@ -70,6 +70,28 @@ class LlmOpsSpec extends SparkSpec {
     assert(pairs.find(p => (p._1, p._2) == (1L, 2L)).get._3 == 1.0)
   }
 
+  test("minhash: the per-row signature equals the batch aggregate, 64 longs and band keys") {
+    val docs = Seq(
+      (1L, (1 to 40).map(i => s"tok$i").mkString(" ")),
+      (2L, "a b c d e"),
+      (3L, "the cat sat on the mat and the cat sat"),
+      (4L, "too short")).toDF("doc_id", "text")
+    val sh = Dedup.shingleSets(docs, "doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (r.getSeq[Any](1), r.getSeq[Any](2))).toMap
+    val batch = rows(Dedup.minhashSignatures(sh, "doc_id")
+      .select(col("doc_id"), col("mh"), Dedup.bandHashes(col("mh"))))
+    val perRow = rows(sh.select(col("doc_id"),
+        Dedup.minhashSignature(col("shingles")).as("mh"))
+      .select(col("doc_id"), col("mh"), Dedup.bandHashes(col("mh"))))
+    assert(batch.keySet == Set(1L, 2L, 3L), "a doc with no trigram has no batch signature")
+    batch.foreach { case (id, (mh, bands)) =>
+      assert(mh.length == 64 && bands.length == 16)
+      assert(perRow(id) == ((mh, bands)), s"doc $id: per-row and batch signatures differ")
+    }
+    assert(perRow(4L)._1.forall(_ == null), "no shingle ⇒ every per-row minhash is null")
+  }
+
   test("incremental dedup: stored index matches incoming batch, never incoming×incoming") {
     val text = (1 to 40).map(i => s"tok$i").mkString(" ")
     val other = (100 to 140).map(i => s"tok$i").mkString(" ")
@@ -94,7 +116,7 @@ class LlmOpsSpec extends SparkSpec {
     val text = (1 to 40).map(i => s"tok$i").mkString(" ")
     val other = (100 to 140).map(i => s"tok$i").mkString(" ")
     val docs = Seq((1L, text), (2L, text), (3L, other)).toDF("doc_id", "text")
-    val pairs = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 3)
+    val pairs = Dedup.simhashNearDups(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.toSeq == Seq((1L, 2L, 0L)))
   }

@@ -202,6 +202,18 @@ class PlanLintSpec extends SparkSpec {
     "graft/queries/QueriesText.scala" -> ((4, "search_ndcg: two full ranks feeding the NDCG aggregate; rake_keywords: run id (pos - rn) and the global rank after limit(10)"))
   )
 
+  /** Session-lifetime persists go through `CacheRegistry.track` (the
+    * harness sweeps them at exit, and a plan already cached is not cached
+    * twice). Every direct `.persist(` is a build-scoped cache, unpersisted
+    * by the code that made it, audited per file like `collectBudget`. */
+  private val persistBudget: Map[String, (Int, String)] = Map(
+    "graft/operators/CacheRegistry.scala" -> ((1, "CacheRegistry.track itself")),
+    "graft/operators/HeavyHitters.scala" -> ((1, "per-partition MG summaries read by two actions, unpersisted in the finally")),
+    "graft/queries/QueriesPipeline.scala" -> ((1, "corpus_assembly_incremental's DiskCache build: flagged base feeds three writes, unpersisted at build end")),
+    "graft/queries/QueriesSim.scala" -> ((2, "DiskCache builds: semdedup_incremental's base index (three writes) and sparse_cosine_join's weighted postings (two consumers), each unpersisted at build end")),
+    "graft/queries/QueriesText.scala" -> ((3, "bm25 DiskCache builds: bm25Index's terms and doc lengths, bm25_incremental's base-slice terms, each unpersisted at build end"))
+  )
+
   /** Exact per-file counts of `pattern` in main source against an audited
     * budget: a new site fails until it is audited, a removed one until its
     * budget is lowered. */
@@ -240,6 +252,12 @@ class PlanLintSpec extends SparkSpec {
       rowNumberBudget)
     assert(problems.isEmpty, s"${problems.size} row_number lint failures (per-key top-k " +
       "goes through TopK.perKey):\n  " + problems.mkString("\n  "))
+  }
+
+  test("direct .persist( sites stay within the audited per-file budget") {
+    val problems = budgetProblems("\\.persist\\(".r, ".persist(", persistBudget)
+    assert(problems.isEmpty, s"${problems.size} persist lint failures (session-lifetime " +
+      "caches go through CacheRegistry.track):\n  " + problems.mkString("\n  "))
   }
 
   test("the window allowlist names only live queries (no stale entries)") {

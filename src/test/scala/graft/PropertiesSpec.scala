@@ -87,10 +87,11 @@ class PropertiesSpec extends SparkSpec {
     assert(dt.contentHash == shuffled.contentHash)
   }
 
-  // DiskCache-backed cards (bm25_*, corpus_assembly_incremental) read at 7
-  // partitions the entry built at 1, so for them this checks the query side only.
-  // The graph cards ride along: neither their driver-side folds nor their
-  // distributed rounds may depend on the partition count.
+  // DiskCache-backed cards (bm25_*, corpus_assembly_incremental, the
+  // MinHash index and cluster-label cards) read at 7 partitions the entry
+  // built at 1, so for them this checks the query side only.
+  // The graph and near-dup cards ride along: neither their driver-side folds
+  // nor their distributed rounds may depend on the partition count.
   test("property: TopK-ranked cards are invariant under shuffle partitions") {
     val cards = Seq("sim_topk", "sim_ivf", "sim_lsh_multiprobe", "sim_hamming_rerank",
       "sim_ivfpq", "knn_eval", "retrieval_mrr", "ann_nprobe_sweep",
@@ -102,7 +103,9 @@ class PropertiesSpec extends SparkSpec {
       "stratified_sample", "source_quota", "window_rank",
       "graph_hits", "graph_communities", "graph_pagerank", "graph_pagerank_users",
       "graph_ppr_users", "graph_bfs_users", "graph_densest_users", "graph_triangles",
-      "graph_link_predict", "graph_shortest_paths")
+      "graph_link_predict", "graph_shortest_paths",
+      "minhash_dedup", "simhash_dedup", "phash_neardup", "dedup_clusters",
+      "dedup_incremental", "dedup_clusters_incremental", "stream_neardup_gate")
     def hashes(partitions: Int) = {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)

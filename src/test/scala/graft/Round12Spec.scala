@@ -232,8 +232,7 @@ class Round12Spec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, String)]
     val gate = graft.streaming.Streams.ingestNearDupGate(
-      spark, ms.toDF().toDF("doc_id", "text"), "doc_id", "text", idxPath,
-      threshold = 0.8)
+      ms.toDF().toDF("doc_id", "text"), "doc_id", "text", idxPath, threshold = 0.8)
     val q = gate.writeStream.format("memory").queryName("gate_hits")
       .outputMode("append").start()
     try {

@@ -51,9 +51,9 @@ class Round13Spec extends SparkSpec {
         .select(col("id_new"), col("id_idx"))
       // banded candidates, the SAME 64-hash/16-band layout the gate uses
       def bandKeys(sh: DataFrame, idAlias: String): DataFrame =
-        Dedup.minhashSignatures(sh.toDF("id", "shingles"), "id", 64)
+        Dedup.minhashSignatures(sh.toDF("id", "shingles"), "id")
           .select(col("id").as(idAlias),
-            posexplode(Dedup.bandHashes(col("mh"), 16, 4)))
+            posexplode(Dedup.bandHashes(col("mh"))))
           .toDF(idAlias, "band", "bh")
       val cand = bandKeys(arSh, "id_new")
         .join(bandKeys(exSh, "id_idx"), Seq("band", "bh"))
