@@ -55,7 +55,8 @@ object QueriesDedup {
     (c, s.read.parquet(path))
   }
 
-  /** The corpus index `dedup_incremental` and `stream_neardup_gate` probe:
+  /** The corpus index `dedup_incremental` and `stream_neardup_gate` probe
+    * (and the streaming-gate spec, so no second definition fills the key):
     * existing = doc_id ≥ 100, signature-indexed ON DISK once, keyed by
     * source dir so concurrent Verify (sf0.01) and Bench (sf0.1) runs never
     * share an index, and REUSED — the timed cost converges to the
@@ -65,7 +66,7 @@ object QueriesDedup {
     * in documents.parquet's data fingerprint so REGENERATED testdata at the
     * same path re-indexes instead of serving the old corpus. Returns the
     * index path. */
-  private[queries] def existingCorpusIndex(s: SparkSession, dir: String): String = {
+  private[graft] def existingCorpusIndex(s: SparkSession, dir: String): String = {
     val existing = t(s, dir, "documents").where(col("doc_id") >= 100)
       .select(col("doc_id"), col("text"))
     val idxPath = graft.operators.DiskCache.keyedPath(
@@ -684,32 +685,31 @@ object QueriesDedup {
     // DECLARED path is LSH-banded (the 100 TB shape): 4 bands × 4
     // hyperplanes hash each vector ONCE; candidates are pairs agreeing on
     // all 4 bits of ≥1 band (shuffle equi-join on the exploded band keys
-    // — NO all-pairs/cartesian anywhere in the plan), then ONE exact
-    // cosine per distinct candidate pair verifies against the threshold.
-    // Exact copies have identical sign bits in every band, so recall on
-    // the oracle's answer set is exact; the brute-force all-pairs form
-    // survives only as the differential spec at sf0.001
-    // (LlmOpsSpec "embed_neardup LSH path ≡ brute force").
+    // — NO all-pairs/cartesian anywhere in the plan). Each band row
+    // carries its vector, so the exact cosine verifies inside the join
+    // output: no join back to the vectors, and only the pairs that pass
+    // 0.9 are made distinct (a pair colliding in several bands yields the
+    // same double each time). Exact copies have identical sign bits in
+    // every band, so recall on the oracle's answer set is exact; the
+    // brute-force all-pairs form survives only as the differential spec
+    // at sf0.001 (LlmOpsSpec "embed_neardup LSH path ≡ brute force").
     "embed_neardup" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings").where(col("vec_id") % 25 === 0)
-        .select(col("vec_id"), col("embedding"))
-      val all = base.unionByName(
-        base.select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))
-      val keyed = all.select(col("vec_id"),
+      // one scan: each sampled vector and its planted copy at +100000
+      val all = t(s, dir, "embeddings").where(col("vec_id") % 25 === 0)
+        .select(col("vec_id"), col("embedding"),
+          explode(array(lit(0L), lit(100000L))).as("off"))
+        .select((col("vec_id") + col("off")).as("vec_id"), col("embedding"))
+      val keyed = all.select(col("vec_id"), col("embedding"),
         posexplode(SimFns.bandedLshKeys(col("embedding"),
           nBands = 4, rowsPerBand = 4, dim = 64)).as(Seq("band", "key")))
-      val cand = keyed.as("a").join(keyed.as("b"),
+      keyed.as("a").join(keyed.as("b"),
           col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
             col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-        .distinct()
-      cand
-        .join(all.select(col("vec_id").as("id_a"), col("embedding").as("va")), "id_a")
-        .join(all.select(col("vec_id").as("id_b"), col("embedding").as("vb")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          SimFns.cosine(col("va"), col("vb")).as("cos"))
+        .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
+          SimFns.cosine(col("a.embedding"), col("b.embedding")).as("cos"))
         .where(col("cos") >= 0.9)
         .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
+        .distinct()
         .orderBy(col("id_a"), col("id_b"))
     }),
 

@@ -239,17 +239,37 @@ object QueriesText {
     base
   }
 
-  /** Per-doc bigram count (the BM25 document length over width-2
-    * shingles) without building the term table: size(tokens) − 1 per row,
-    * rows with fewer than 2 tokens dropped (no bigram, so no doc), summed
-    * per doc_id. Equals sum(tf) over the doc's (doc_id, term, tf) rows. */
-  private[graft] def bigramDocLens(docs: org.apache.spark.sql.DataFrame) = docs
-    .select(col("doc_id"), (size(TextFns.tokens(col("text"))) - 1).cast(LongType).as("dl"))
+  /** One row per doc, its text tokenized ONCE: (doc_id, dl, qt) with
+    * dl = size(tokens) − 1, the doc's bigram count (the BM25 document
+    * length over width-2 shingles), and qt = its bigrams among the bm25
+    * query terms, in text order with repeats (one element per occurrence).
+    * qt equals filtering every bigram of the doc, but only positions whose
+    * token starts a query term build a bigram string: lambdas run
+    * interpreted per element, and the cheap first-word test halves the
+    * batch pass at ScaleGen x10. */
+  private[graft] def bigramRows(docs: DataFrame): DataFrame = {
+    val tk = col("tk")
+    val firsts = Bm25Terms.map(_.takeWhile(_ != ' ')).distinct
+    val qt = when(size(tk) > 1,
+      filter(
+        transform(filter(sequence(lit(1), size(tk) - 1), i => element_at(tk, i).isin(firsts: _*)),
+          i => concat_ws(" ", element_at(tk, i), element_at(tk, i + 1))),
+        _.isin(Bm25Terms: _*)))
+      .otherwise(array().cast(ArrayType(StringType)))
+    docs.select(col("doc_id"), TextFns.tokens(col("text")).as("tk"))
+      .select(col("doc_id"), (size(tk) - 1).cast(LongType).as("dl"), qt.as("qt"))
+  }
+
+  /** Per-doc bigram count from [[bigramRows]] without building the term
+    * table: rows with fewer than 2 tokens dropped (no bigram, so no doc),
+    * summed per doc_id. Equals sum(tf) over the doc's (doc_id, term, tf)
+    * rows. */
+  private[graft] def bigramDocLens(rows: DataFrame) = rows
     .where(col("dl") > 0)
     .groupBy(col("doc_id")).agg(sum(col("dl")).as("dl"))
 
   /** Bigram term frequencies (doc_id, term, tf): the postings rows of both
-    * BM25 indexes (bm25_idx_v1 and bm25_base_v1). */
+    * BM25 indexes (bm25_idx_v1 and bm25_base_v2). */
   private def bigramTerms(docs: DataFrame) = docs
     .select(col("doc_id"), TextFns.shingleExplode(TextFns.tokens(col("text")), 2).as("term"))
     .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -915,12 +935,13 @@ object QueriesText {
     // Incremental BM25 index maintenance — the text-retrieval member of
     // the IVM family (agg_incremental merges algebraic partials,
     // hll_incremental merges sketches; THIS merges postings): the base
-    // era's postings/doclens/dfs persist ONCE under the fingerprint-keyed
+    // era's postings/doclens persist ONCE under the fingerprint-keyed
     // DiskCache, a corpus refresh tokenizes ONLY the appended batch
     // (doc_id >= 400), and the merged statistics are delta-sized unions —
-    // df per term = base ⊎ batch summed, doclens a union, corpus stats
-    // one aggregate over the doc-domain doclens table. Search over the
-    // merged index must EQUAL the full-corpus rebuild: the oracle
+    // postings and doclens unions, df per term the count of the merged
+    // query-term postings (one postings row is one (doc, term)), corpus
+    // stats one aggregate over the doc-domain doclens table. Search over
+    // the merged index must EQUAL the full-corpus rebuild: the oracle
     // recomputes from scratch, so a drifted merge fails the hash. The
     // base-era TEXT is never re-tokenized — that is the 100-TB contract
     // (re-tokenizing the corpus per refresh is the cost this kills).
@@ -942,36 +963,34 @@ object QueriesText {
         .agg(count(lit(1)), bit_xor(xxhash64(col("doc_id"), col("text")))).head()
       val baseKey = java.lang.Long.toHexString(
         bRow.getLong(0) ^ (if (bRow.isNullAt(1)) 0L else bRow.getLong(1)))
-      val base = s"${DiskCache.root}/bm25_base_v1_$baseKey"
-      DiskCache.ensure(base, Seq("postings/_SUCCESS", "dfs/_SUCCESS",
-        "doclens/_SUCCESS")) { tmp =>
+      val base = s"${DiskCache.root}/bm25_base_v2_$baseKey"
+      DiskCache.ensure(base, Seq("postings/_SUCCESS", "doclens/_SUCCESS")) { tmp =>
         val terms = bigramTerms(docs.where(col("doc_id") < 400))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         terms.write.parquet(s"$tmp/postings")
-        terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .write.parquet(s"$tmp/dfs")
         terms.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
           .write.parquet(s"$tmp/doclens")
         terms.unpersist(): Unit
       }
-      // the refresh tokenizes the BATCH only. Filter before the aggregate:
-      // only query-term bigrams reach the (doc_id, term) shuffle, and only
-      // that small table is tracked (postings union + batch df). Batch doc
-      // lengths are derived per row from token counts, not from terms.
-      val batch = docs.where(col("doc_id") >= 400)
-      val batchTerms = CacheRegistry.track(
-        bigramTerms(batch).where(col("term").isin(Bm25Terms: _*)))
-      val postings = s.read.parquet(s"$base/postings").unionByName(batchTerms)
-      val dfs = s.read.parquet(s"$base/dfs").where(col("term").isin(Bm25Terms: _*))
-        .unionByName(batchTerms.groupBy(col("term")).agg(count(lit(1)).as("df")))
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
+      // the refresh tokenizes the BATCH once: one tracked row per doc
+      // carries its bigram count and only its query-term bigrams, so both
+      // the batch postings and the batch doc lengths come from that cache
+      // and no unfiltered batch bigram is shuffled or held. The entry is
+      // read with the schema it was written with (no inference job).
+      val batch = CacheRegistry.track(bigramRows(docs.where(col("doc_id") >= 400)))
+      val postings = s.read.schema("doc_id BIGINT, term STRING, tf BIGINT")
+        .parquet(s"$base/postings").where(col("term").isin(Bm25Terms: _*))
+        .unionByName(batch.select(col("doc_id"), explode(col("qt")).as("term"))
+          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
+      val dfs = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
       // merged doclens: compact per-doc metadata, two consumers → tracked
       val dlen = CacheRegistry.track(
-        s.read.parquet(s"$base/doclens").unionByName(bigramDocLens(batch)))
+        s.read.schema("doc_id BIGINT, dl BIGINT").parquet(s"$base/doclens")
+          .unionByName(bigramDocLens(batch)))
       val stats = broadcast(
         dlen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len")))
       val qdf = broadcast(Bm25Queries.toDF("qid", "term").join(dfs, "term"))
-      bm25Top10(postings.where(col("term").isin(Bm25Terms: _*)), qdf, dlen, stats)
+      bm25Top10(postings, qdf, dlen, stats)
     }),
 
     // Fixed-size token chunking with overlap (64-token windows, stride 48) —

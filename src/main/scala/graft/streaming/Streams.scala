@@ -588,10 +588,10 @@ object Streams {
     * differently-chunked streams land bit-identical state (spec-pinned) —
     * the 1000-executor shape, partitioned by source. */
   def contaminationGuardStream(spark: SparkSession, evalDocs: DataFrame,
-                               train: Dataset[TrainDoc],
-                               fpp: Double = 0.001): Dataset[ContamStat] = {
+                               train: Dataset[TrainDoc]): Dataset[ContamStat] = {
     import spark.implicits._
     val shingleN = 8
+    val fpp = 0.001 // the Bloom filter's false-positive rate
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     def shinglesOf(text: String): Iterator[String] = {
       if (text == null) return Iterator.empty // nullable column, like the batch twin

@@ -331,6 +331,17 @@ class LlmOpsSpec extends SparkSpec {
     val plan = declared.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"declared embed_neardup plan contains an all-pairs join:\n$plan")
+    // the cosine verifies inside the band join: ONE join, and none on the
+    // candidate ids (no join back to the vectors)
+    val joins = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(declared.queryExecution.executedPlan) {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }
+    assert(joins.size == 1, s"expected one band join, got ${joins.size}:\n$plan")
+    joins.foreach { j =>
+      val keys = (j.leftKeys ++ j.rightKeys ++ j.condition).flatMap(_.references.map(_.name))
+      assert(!keys.exists(Set("id_a", "id_b")), s"join back on candidate ids:\n$j")
+    }
   }
 
   test("ngram_novelty: every shingle is novel exactly once, first doc fully novel") {

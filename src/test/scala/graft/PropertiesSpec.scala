@@ -105,7 +105,8 @@ class PropertiesSpec extends SparkSpec {
       "graph_ppr_users", "graph_bfs_users", "graph_densest_users", "graph_triangles",
       "graph_link_predict", "graph_shortest_paths",
       "minhash_dedup", "simhash_dedup", "phash_neardup", "dedup_clusters",
-      "dedup_incremental", "dedup_clusters_incremental", "stream_neardup_gate")
+      "dedup_incremental", "dedup_clusters_incremental", "stream_neardup_gate",
+      "embed_neardup")
     def hashes(partitions: Int) = {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)

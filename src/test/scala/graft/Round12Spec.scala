@@ -214,10 +214,7 @@ class Round12Spec extends SparkSpec {
     // the SAME appends dedup_incremental gates in batch mode, against the
     // SAME persisted ensure-once band index
     val docs = graft.queries.Tables.t(spark, dir, "documents")
-    val existing = docs.where(col("doc_id") >= 100).select(col("doc_id"), col("text"))
-    val idxPath = graft.operators.DiskCache.keyedPath(
-      "minhash_idx_v1", s"$dir/documents.parquet")
-    Dedup.ensureMinhashIndex(existing, "doc_id", "text", idxPath)
+    val idxPath = graft.queries.QueriesDedup.existingCorpusIndex(spark, dir)
     val incoming = docs.where(col("doc_id") >= 100 && col("doc_id") % 25 === 0)
       .select((col("doc_id") + 300000L).as("doc_id"),
         concat(col("text"), lit(" xtra xtra")).as("text"))

@@ -162,39 +162,49 @@ class Round9Spec extends SparkSpec {
     assert(inc.nonEmpty)
   }
 
-  test("bm25_incremental: every cached (doc_id, term) aggregate has the query-term filter below it") {
-    // a filter on a tracked frame cannot reach below its cache: caching the
-    // unfiltered batch term stream would shuffle and hold every bigram of
-    // the batch on each refresh
-    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+  test("bm25_incremental: one tracked batch frame of query-term bigrams") {
+    // caching the unfiltered batch bigrams would shuffle and hold every
+    // bigram of the batch on each refresh; a second tokenize pass would
+    // split every batch text twice
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
-    // every node of a physical plan, through AQE wrappers and nested caches
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // every node of a physical plan, through AQE wrappers and into each
+    // cached plan once
+    val seen = scala.collection.mutable.HashSet.empty[SparkPlan]
     def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect {
       case a: AdaptiveSparkPlanExec => nodes(a.inputPlan)
-      case m: InMemoryTableScanExec => m +: nodes(m.relation.cacheBuilder.cachedPlan)
+      case m: InMemoryTableScanExec =>
+        val c = m.relation.cacheBuilder.cachedPlan
+        m +: (if (seen.add(c)) nodes(c) else Nil)
       case n => Seq(n)
     }.flatten
-    val cachedPlans = graft.queries.QueriesText.queries("bm25_incremental")(spark, dir)
-      .queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r.cacheBuilder.cachedPlan }
-    val termAggs = cachedPlans.flatMap(nodes).collect {
-      case a: BaseAggregateExec if a.groupingExpressions.flatMap(_.references.map(_.name)).toSet ==
-        Set("doc_id", "term") => a
+    def shallow(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case a: AdaptiveSparkPlanExec => shallow(a.inputPlan)
+      case n => Seq(n)
+    }.flatten
+    val card = graft.queries.QueriesText.queries("bm25_incremental")(spark, dir)
+    val all = nodes(card.queryExecution.executedPlan)
+    // the tracked frames that read the documents text themselves
+    val batchFrames = seen.toSeq.filter(c => shallow(c).exists(_.output.exists(_.name == "text")))
+    assert(batchFrames.size == 1, s"expected one tracked batch frame:\n${seen.mkString("\n")}")
+    val frame = batchFrames.head
+    val qt = frame.output.indexWhere(_.name == "qt")
+    assert(qt >= 0, s"tracked batch frame has no qt column:\n$frame")
+    val rows = frame.executeCollect()
+    val nBatch = graft.queries.Tables.t(spark, dir, "documents").where(col("doc_id") >= 400).count()
+    assert(rows.length == nBatch, "the batch frame holds one row per batch doc")
+    val terms = rows.toSeq.flatMap { r =>
+      val a = r.getArray(qt)
+      (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
     }
-    assert(termAggs.nonEmpty, s"no cached (doc_id, term) aggregate in:\n${cachedPlans.mkString("\n")}")
-    termAggs.foreach { a =>
-      val filtered = nodes(a.child).exists {
-        case f: FilterExec => f.condition.exists {
-          case i: In => i.value.references.exists(_.name == "term")
-          case i: InSet => i.child.references.exists(_.name == "term")
-          case _ => false
-        }
-        case _ => false
-      }
-      assert(filtered, s"cached (doc_id, term) aggregate without a term filter below it:\n$a")
-    }
+    assert(terms.nonEmpty, "no query-term bigram in the batch")
+    val bm25Terms = Set("hash join", "table scan", "merge sort", "batch stream",
+      "slow query", "fast scan")
+    assert(terms.forall(bm25Terms), s"non-query bigrams cached: ${terms.filterNot(bm25Terms).distinct.take(5)}")
+    val splits = all.flatMap(_.expressions.flatMap(_.collect { case e: StringSplit => e }))
+    assert(splits.size == 1, s"documents.text tokenized ${splits.size} times:\n${all.mkString("\n")}")
   }
 
   test("bigramDocLens: per-row size(tokens) - 1 equals sum(tf) over the bigram term table") {
@@ -208,10 +218,24 @@ class Round9Spec extends SparkSpec {
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val perRow = graft.queries.QueriesText.bigramDocLens(docs)
+    val perRow = graft.queries.QueriesText.bigramDocLens(graft.queries.QueriesText.bigramRows(docs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(perRow == viaTerms)
     assert(perRow == Map(4L -> 3L, 5L -> 2L, 6L -> 3L))
+    // qt equals filtering every bigram of the doc: one element per
+    // occurrence, in text order
+    val qtDocs = docs.unionByName(Seq[(Long, String)]((8L, "Table  scan table\tscan fast"),
+      (9L, "fast scan hash"), (10L, "slow"), (11L, "merge\nsort slow query")).toDF("doc_id", "text"))
+    val bm25Terms = Seq("hash join", "table scan", "merge sort", "batch stream", "slow query", "fast scan")
+    def qts(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    val qt = qts(graft.queries.QueriesText.bigramRows(qtDocs).select(col("doc_id"), col("qt")))
+    val allBigrams = qts(qtDocs.select(col("doc_id"), filter(graft.functions.TextFns.shingles(
+      graft.functions.TextFns.tokens(col("text")), 2), _.isin(bm25Terms: _*))))
+    assert(qt == allBigrams)
+    assert(qt.filter(_._2.nonEmpty) == Map(5L -> Seq("hash join"),
+      8L -> Seq("table scan", "table scan"), 9L -> Seq("fast scan"),
+      11L -> Seq("merge sort", "slow query")))
   }
 
   test("ann_nprobe_sweep: recall is monotone in nprobe and exactly 1.0 at full probe") {
