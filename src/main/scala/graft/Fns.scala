@@ -58,6 +58,6 @@ object Fns {
     // reach the SQL parser as \\s+, which unescapes to the regex \s+.
     spark.sql(
       """CREATE OR REPLACE TEMPORARY FUNCTION ws_token_count(s STRING) RETURNS BIGINT
-        |RETURN size(filter(split(lower(s), '\\s+'), x -> x <> ''))""".stripMargin)
+        |RETURN size(array_remove(split(lower(s), '\\s+'), ''))""".stripMargin)
   }
 }

@@ -17,9 +17,11 @@ object TextFns {
     * `\s` (ASCII whitespace) only — NBSP is deliberately NOT a separator
     * here, unlike the type-inference trimbag: the DuckDB oracles use RE2
     * `\s` with identical ASCII semantics, keeping tokenization cross-engine
-    * exact. */
+    * exact. The empties (from a leading or trailing separator) drop through
+    * the native `array_remove`: `split` never yields a null element, so it
+    * removes exactly the empty tokens. */
   def tokens(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => t =!= "")
+    array_remove(split(lower(c), "\\s+"), "")
 
   /** Whitespace token count. `regexp_count` of non-space runs ≡ counting
     * [[tokens]]' non-empty splits, but stays codegen'd and never

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.functions.SimFns
-import graft.operators.{Pq, TopK}
+import graft.operators.{Ivf, Pq, TopK}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,8 +44,7 @@ object QueriesSim {
     * centroids (a labels×64 posexplode aggregate, centroid re-assembled in
     * pos order) — ONE definition so the three views and their shared oracle
     * formula text cannot drift apart (review-caught triplication). */
-  private def labeledWithCentroids(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def labeledWithCentroids(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val e = t(s, dir, "embeddings")
       .where(col("embedding").isNotNull && col("label").isNotNull)
       .select(col("vec_id"), col("label"),
@@ -59,8 +59,7 @@ object QueriesSim {
 
   /** The ranked-output tail of the top-k cards: (qid, vec_id, `keep`…,
     * `score` rounded to 6 places, rank as BIGINT), ordered by (qid, rank). */
-  private def ranked(df: org.apache.spark.sql.DataFrame, score: String, keep: String*)
-      : org.apache.spark.sql.DataFrame =
+  private def ranked(df: DataFrame, score: String, keep: String*): DataFrame =
     df.select(Seq(col("qid"), col("vec_id")) ++ keep.map(col) ++
         Seq(round(col(score), 6).as(score), col("rank").cast(LongType).as("rank")): _*)
       .orderBy(col("qid"), col("rank"))
@@ -69,9 +68,7 @@ object QueriesSim {
     * Σᵢ maxⱼ pair(qᵢ, dⱼ). The 4-way max is order-free (max commutes) and
     * the outer sum folds in fixed ascending part order, so both engines
     * walk the identical tree. */
-  private def maxSim(q: org.apache.spark.sql.Column, d: org.apache.spark.sql.Column,
-                     pair: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-                       org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def maxSim(q: Column, d: Column, pair: (Column, Column) => Column): Column =
     (0 until 4).map { i =>
       greatest((0 until 4).map { j =>
         pair(slice(q, i * 16 + 1, 16), slice(d, j * 16 + 1, 16))
@@ -82,12 +79,8 @@ object QueriesSim {
     * volume, hits of the reranked top-5 `rer` in the brute-force top-5
     * `truth` (both (qid, vec_id)), and recall in µ-units. `extra`, a
     * one-row frame, is cross-joined in; its columns follow qid. */
-  private def candRecall(qids: org.apache.spark.sql.DataFrame,
-                         cand: org.apache.spark.sql.DataFrame,
-                         rer: org.apache.spark.sql.DataFrame,
-                         truth: org.apache.spark.sql.DataFrame,
-                         extra: Option[org.apache.spark.sql.DataFrame])
-      : org.apache.spark.sql.DataFrame = {
+  private def candRecall(qids: DataFrame, cand: DataFrame, rer: DataFrame, truth: DataFrame,
+                         extra: Option[DataFrame]): DataFrame = {
     val card = qids
       .join(cand.groupBy(col("qid")).agg(count(lit(1)).as("n_cand")), Seq("qid"), "left")
       .join(rer.join(truth, Seq("qid", "vec_id"), "left_semi")
@@ -104,8 +97,7 @@ object QueriesSim {
     * qe): the 10 nearest neighbors (cosine, self excluded) vote on each
     * query's label, ties → smaller label, and per-label accuracy is an
     * exact count ratio. */
-  private def knnVote(e: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private def knnVote(e: DataFrame, q: DataFrame): DataFrame = {
     val nn = TopK.byCosine(e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid")),
       10, "embedding", "qlbl", "lbl")
     val pred = nn.groupBy(col("qid"), col("qlbl"), col("lbl"))
@@ -125,8 +117,7 @@ object QueriesSim {
     * broadcast local relation instead of persisted — a cached RDD would sit
     * in executor storage for the rest of the session (the Verify sweep runs
     * every card in one SparkSession). */
-  private def panelTruth(cand: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Long) = {
+  private def panelTruth(cand: DataFrame): (DataFrame, Long) = {
     val plan = TopK.byCosine(cand, 10, "embedding").select(col("qid"), col("vec_id"))
     val rows = plan.collect()
     val s = cand.sparkSession
@@ -146,14 +137,12 @@ object QueriesSim {
     * the graph is built ONCE and searched many times; before the cache
     * each of the two queries re-paid the ~6 s construction per sweep).
     * Returns (corpus-with-buckets, n0, n1). */
-  private def dualLshKnnGraph(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame) = {
+  private def dualLshKnnGraph(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     val pa = SimFns.fixedPlanes(nPlanes = 6, dim = 64)
     val pb = SimFns.fixedPlanes(nPlanes = 6, dim = 64, seed = 777L)
     val e = graft.operators.CacheRegistry.track(
-      t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"),
+      vectors(s, dir).select(col("vec_id"), col("embedding"),
           SimFns.rpLshKey(col("embedding"), pa).as("bka"),
           SimFns.rpLshKey(col("embedding"), pb).as("bkb")))
       // read by 2 init joins, 2 fetches, truth — tracked (not a per-call
@@ -163,7 +152,7 @@ object QueriesSim {
       "knn_graph_v1", s"$dir/embeddings.parquet")
     graft.operators.DiskCache.ensure(base,
         Seq("n0/_SUCCESS", "n1/_SUCCESS")) { tmp =>
-      def topPerV(df: org.apache.spark.sql.DataFrame, k: Int) =
+      def topPerV(df: DataFrame, k: Int) =
         TopK.perKey(df, col("v"))(k, col("cos").desc, col("u"))
           .select(col("v"), col("u"), col("cos"))
       def bucketTop3(bk: String) = {
@@ -195,21 +184,71 @@ object QueriesSim {
     (e, s.read.parquet(s"$base/n0"), s.read.parquet(s"$base/n1"))
   }
 
+  /** The similarity family's corpus: every non-null (vec_id, embedding). */
+  private def vectors(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").where(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding"))
+
+  /** sim_filtered's corpus (card and oracle): labeled non-null vectors. */
+  private def labeledVectors(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").where(col("embedding").isNotNull && col("label").isNotNull)
+      .select(col("vec_id"), col("label"), col("embedding"))
+
+  /** The query panel of the top-k cards: vec_id < 5 as (qid, qe). */
+  private def panel(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < 5).select(col("vec_id").as("qid"), col("embedding").as("qe"))
+
+  /** The same panel driver-side, as (qid, qv) in qid order — what the ADC
+    * paths table (sim_ivfpq_residual's probes, the sim_pq / sim_ivfpq
+    * oracles). Panel-bounded: one collect of ≤ 5 rows. */
+  private def queryPanel(e: DataFrame): Array[(Long, Array[Double])] =
+    panel(e).select(col("qid"), SimFns.toDouble(col("qe"))).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+
+  /** The coarse k=8 quantizer of every 8-cell card and its refit oracle: a
+    * pure function of `e`'s first (vec_id, embedding) rows in id order. */
+  private def coarseCents(e: DataFrame): Array[Array[Double]] =
+    Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+
+  /** The raw m=8/k=16 PQ codebooks (sim_pq, sim_ivfpq, sim_ivfpq_append). */
+  private def rawPqBooks(e: DataFrame): Seq[Array[Array[Double]]] =
+    Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
+
+  /** PLAID's sub-vector stream: each vector sliced into 4×16, as
+    * (vec_id, pos, sub). */
+  private def subVectors(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), posexplode(array((0 until 4).map(i =>
+      slice(col("embedding"), i * 16 + 1, 16)): _*)).as(Seq("pos", "sub")))
+
+  /** The shared k=32 sub-vector quantizer (maxsim_ivf, maxsim_pq and their
+    * oracles), trained on the id-ordered slice stream (sid = vec_id·4+pos). */
+  private def subCents(e: DataFrame): Array[Array[Double]] =
+    Ivf.trainSampled(subVectors(e).select((col("vec_id") * 4 + col("pos")).as("sid"),
+      col("sub")), "sid", "sub", k = 32)
+
+  /** embed_whitening's model (card and oracle): the 4-component sample PCA
+    * as (mean, whitening rows comp_c/√λ_c — scaled ON THE DRIVER, so no
+    * sqrt runs in either engine — and the eigenvalues in µ-units). */
+  private def whiteningFit(e: DataFrame): (Array[Double], Seq[Array[Double]], Seq[Long]) = {
+    val (mu, comps, lams) = graft.operators.Pca.fitSampledFull(e, "vec_id", "embedding",
+      nComponents = 4)
+    val rows = comps.zip(lams).map { case (w, l) =>
+      val s2 = math.sqrt(l); w.map(_ / s2) }
+    (mu, rows, lams.map(l => math.floor(l * 1e6 + 0.5).toLong))
+  }
+
   /** sim_ivfpq_residual's shared model construction (query + trained-oracle
-    * generator call the SAME function — the kcenterFit pattern): coarse
-    * quantizer from the sampled trainer, then PQ codebooks trained on the
+    * generator call the SAME function — the kcenterFit pattern): the coarse
+    * quantizer, then PQ codebooks trained on the
     * RESIDUALS v − centroid[cell] (FAISS's by_residual=true default — the
     * codebooks only have to cover the within-cell spread, a much tighter
     * distribution than the raw corpus). The residual column materializes in
     * its own projection so the interpreted zip_with runs ONCE per row and
     * the 8 downstream NearestCells probes read the materialized array.
     * Returns (centroids, codebooks, (vec_id, cell, rv) frame). */
-  private def ivfpqResidualParts(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (Array[Array[Double]], Seq[Array[Array[Double]]], org.apache.spark.sql.DataFrame) = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+  private def ivfpqResidualParts(e: DataFrame)
+      : (Array[Array[Double]], Seq[Array[Array[Double]]], DataFrame) = {
+    val cents = coarseCents(e)
     val centLit = array(cents.map(c => typedLit(c.toSeq)): _*)
     val res = e.select(col("vec_id"),
         element_at(Ivf.nearestCells(col("embedding"), cents, 1), 1).as("cell"),
@@ -221,35 +260,23 @@ object QueriesSim {
     (cents, books, res)
   }
 
-  /** Per-query probe cells and per-(query, cell) residual ADC tables for
-    * sim_ivfpq_residual — driver-side, shared by query and oracle. */
-  private def ivfpqResidualLuts(s: org.apache.spark.sql.SparkSession, dir: String,
-                                cents: Array[Array[Double]],
-                                books: Seq[Array[Array[Double]]])
-      : (Seq[(Long, Int)], Seq[(Long, Int, Int, Int, Double)]) = {
-    val qs = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .where(col("vec_id") < 5)
-      .select(col("vec_id"), SimFns.toDouble(col("embedding"))).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val sub = books.map(_.head.length).sum / books.length
-    val probes = qs.flatMap { case (qid, qv) =>
+  /** sim_ivfpq_residual's probes — driver-side, shared by query and oracle:
+    * each panel query's 3 nearest cells by (dist, cell), with the query's
+    * residual against that cell (whose ADC table, Pq.adcTable, scores the
+    * cell's codes), as (qid, cell, residual). */
+  private def ivfpqResidualProbes(e: DataFrame, cents: Array[Array[Double]])
+      : Seq[(Long, Int, Array[Double])] =
+    queryPanel(e).toSeq.flatMap { case (qid, qv) =>
       cents.indices.map(c => (Pq.sqL2(qv, cents(c)), c)).sorted.take(3)
-        .map { case (_, c) => (qid, c) }
-    }.toSeq
-    val luts = probes.flatMap { case (qid, cell) =>
-      val qv = qs.find(_._1 == qid).get._2
-      val rq = qv.indices.map(i => qv(i) - cents(cell)(i)).toArray
-      books.zipWithIndex.flatMap { case (book, j) =>
-        book.indices.map(c => (qid, cell, j, c, Pq.sqL2(rq, book(c), off = j * sub)))
-      }
+        .map { case (_, c) => (qid, c, qv.indices.map(i => qv(i) - cents(c)(i)).toArray) }
     }
-    (probes, luts)
-  }
 
-  /** semdedup's data-dependent knobs, computed IDENTICALLY by the query and
-    * its oracle refit (one shared definition so they cannot drift): ONE
-    * (count, max) aggregate over the natural corpus — a single cheap probe
-    * job reading only vec_id.
+  /** semdedup's model, fit IDENTICALLY by semdedup, semdedup_incremental
+    * and their oracle refit (one shared definition so they cannot drift):
+    * the data-dependent knobs from ONE (count, max) aggregate over the
+    * natural corpus — a single cheap probe job reading only vec_id — then
+    * the `k`-cell quantizer from the sampled trainer on max(2048, 8·k)
+    * id-ordered vectors. Returns (centroids, planted-copy offset).
     *
     *  - `k` targets a bounded expected cell occupancy of ~512 vectors, so
     *    the within-cell pairwise prune does ≤ occupancy × N total pair work
@@ -271,23 +298,21 @@ object QueriesSim {
     *    max(vec_id) (and ≥ 100000, the historical convention), so planted
     *    ids can never alias real ones once the corpus passes 100k vectors
     *    (advice round 9). */
-  private def semdedupParams(e: org.apache.spark.sql.DataFrame): (Int, Long) = {
+  private def semdedupFit(e: DataFrame): (Array[Array[Double]], Long) = {
     val r = e.agg(count(lit(1)), max(col("vec_id"))).head
     val n = r.getLong(0)
     val mx = if (r.isNullAt(1)) 0L else r.getLong(1)
     val k = math.min(math.max(8L, (n + 511L) / 512L), 4096L).toInt
     var off = 100000L
     while (off <= mx) off *= 10
-    (k, off)
+    (Ivf.trainSampled(e, "vec_id", "embedding", k = k, sampleN = math.max(2048, 8 * k)), off)
   }
 
   /** SemDeDup's drop rule between two cell-assigned (vec_id, embedding,
     * cell) frames: every row of `b` that has a lower-id row of `x` in its
     * cell above cos 0.95, as (cell, did). One row per dropping pair —
     * callers take the distinct set. */
-  private def semdedupDrops(x: org.apache.spark.sql.DataFrame,
-                            b: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
+  private def semdedupDrops(x: DataFrame, b: DataFrame): DataFrame =
     x.as("x").join(b.as("b"),
         col("x.cell") === col("b.cell") && col("x.vec_id") < col("b.vec_id") &&
           SimFns.cosine(col("x.embedding"), col("b.embedding")) > 0.95)
@@ -300,10 +325,9 @@ object QueriesSim {
     * FARTHEST from its nearest selected center (classic 2-approx k-center
     * greedy; ties to the lower id). Distances are left-assoc ascending-dim
     * folds (the NearestCells loop order). */
-  private def kcenterFit(s: org.apache.spark.sql.SparkSession, dir: String,
+  private def kcenterFit(s: SparkSession, dir: String,
                          k: Int = 8): Array[(Long, Array[Double])] = {
-    val sample = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .orderBy(col("vec_id")).limit(256)
+    val sample = vectors(s, dir).orderBy(col("vec_id")).limit(256)
       .select(col("vec_id"), SimFns.toDouble(col("embedding"))).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     require(sample.nonEmpty, "no vectors to fit on")
@@ -331,10 +355,8 @@ object QueriesSim {
     // exact micro-unit BIGINTs. Oracle refits the deterministic sampled
     // trainer and inlines the centroids (sim_ivf_kmeans pattern).
     "cluster_silhouette" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+      val e = vectors(s, dir)
+      val cents = coarseCents(e)
       // one native k×dim loop per row (NearestCellDists) — the explicit
       // 8×dim column-chain alternative compiled to 9.9 MiB task binaries
       // and ~6× the runtime; distances add in ascending element order, so
@@ -434,14 +456,14 @@ object QueriesSim {
     // Product quantization ANN: 64-dim float vectors compress to 8 one-byte
     // codes (operators/Pq); search touches ONLY the codes via ADC table
     // lookups (the query's m×k distance table broadcasts; no float vector is
-    // read at query time). Codebooks are Lloyd-trained → rows-only; PqSpec
-    // pins recall vs the exact-L2 oracle and the ADC arithmetic itself.
+    // read at query time). The oracle refits the Lloyd-trained codebooks
+    // (rawPqBooks) and inlines them; PqSpec pins recall vs the exact-L2
+    // oracle and the ADC arithmetic itself.
     "sim_pq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
+      val e = vectors(s, dir)
+      val books = rawPqBooks(e)
       val enc = Pq.encode(e, "vec_id", "embedding", books)
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       ranked(Pq.search(enc, q, books, 10), "dist2")
     }),
 
@@ -458,8 +480,7 @@ object QueriesSim {
     // candidate-generation stage in front of this re-scorer.
     "maxsim_retrieval" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       val top = e.join(broadcast(q))
         .select(col("qid"), col("vec_id"),
           maxSim(col("qe"), col("embedding"), SimFns.cosine).as("ms"))
@@ -482,17 +503,10 @@ object QueriesSim {
     // self-retrieval guarantees hits ≥ 1 (spec). Oracle: trained pattern,
     // 8 centroids × 4 position offsets inlined as distance chains.
     "maxsim_ivf" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val d = 16
-      val slices = e.select(col("vec_id"),
-          posexplode(array((0 until 4).map(i =>
-            slice(col("embedding"), i * d + 1, d)): _*)).as(Seq("pos", "sub")))
-        .select((col("vec_id") * 4 + col("pos")).as("sid"), col("sub"))
-      val cents = Ivf.trainSampled(slices, "sid", "sub", k = 32)
+      val e = vectors(s, dir)
+      val cents = subCents(e)
       val cellsArr = array((0 until 4).map(i =>
-        element_at(Ivf.nearestCells(slice(col("embedding"), i * d + 1, d), cents, 1), 1)): _*)
+        element_at(Ivf.nearestCells(slice(col("embedding"), i * 16 + 1, 16), cents, 1), 1)): _*)
       val docs = e.select(col("vec_id"), col("embedding"), cellsArr.as("cells"))
         .localCheckpoint(false) // postings, queries, rerank, truth all read it
       val q = docs.where(col("vec_id") < 5)
@@ -502,7 +516,7 @@ object QueriesSim {
       val cand = dcell.join(broadcast(qcell), "cell")
         .select(col("qid"), col("vec_id")).distinct()
         .localCheckpoint(false) // counted AND re-ranked
-      def top5(pairs: org.apache.spark.sql.DataFrame) = pairs
+      def top5(pairs: DataFrame) = pairs
         .select(col("qid"), col("vec_id"),
           maxSim(col("qe"), col("embedding"), SimFns.cosine).as("ms"))
         .transform(TopK.perKey(_, col("qid"))(5, col("ms").desc, col("vec_id")))
@@ -546,8 +560,7 @@ object QueriesSim {
 
     "sim_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       TopK.byCosine(e.join(broadcast(q)), 10, "embedding")
         .transform(ranked(_, "cos"))
     }),
@@ -566,16 +579,13 @@ object QueriesSim {
     // 3 nearest of 8 cells. Training is SAMPLE-based (one bounded collect +
     // driver Lloyd — corpus-size-independent, the FAISS convention; the
     // distributed corpus-wide Ivf.train stays available for ragged data).
-    // Training has no SQL twin → rows-only check; recall vs brute force and
-    // sampled-vs-distributed parity are pinned by IvfSpec.
+    // The oracle refits the quantizer (coarseCents) and inlines it; recall
+    // vs brute force and sampled-vs-distributed parity are pinned by IvfSpec.
     "sim_ivf_kmeans" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val centroids = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+      val e = vectors(s, dir)
+      val centroids = coarseCents(e)
       val idx = Ivf.index(e, centroids, "embedding")
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       Ivf.search(idx, centroids, q, "embedding", topK = 10, nprobe = 3)
         .transform(ranked(_, "cos"))
     }),
@@ -591,14 +601,12 @@ object QueriesSim {
     // corpus ∪ batch — the oracle regenerates that ground truth with the
     // inlined trained centroids.
     "sim_ivf_append" -> ((s, dir) => {
-      import graft.operators.Ivf
       // both snapshots publish atomically ensure-once (round-11 ADVICE) via
       // the ONE shared lifecycle construction
       val (e, cents, base) = ivfLifecycleSnapshots(s, dir)
       val idx = Ivf.readIndex(s, s"$base/corpus")
         .unionByName(Ivf.readIndex(s, s"$base/batch_1"))
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       Ivf.search(idx, cents, q, "embedding", topK = 10, nprobe = 3)
         .transform(ranked(_, "cos"))
     }),
@@ -615,7 +623,6 @@ object QueriesSim {
     // declared output is the same probe search, checked against the
     // sim_ivf_append oracle (full recompute over corpus ∪ batch).
     "ivf_compact" -> ((s, dir) => {
-      import graft.operators.Ivf
       val (e, cents, base) = ivfLifecycleSnapshots(s, dir)
       // the compaction: snapshot union → ONE partitioned-by-cell rewrite,
       // atomically published (ensure-once: the union is a pure function of
@@ -625,8 +632,7 @@ object QueriesSim {
           .unionByName(Ivf.readIndex(s, s"$base/batch_1")), tmp)
       }
       val idx = Ivf.readIndex(s, s"$base/compacted_1")
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       Ivf.search(idx, cents, q, "embedding", topK = 10, nprobe = 3)
         .transform(ranked(_, "cos"))
     }),
@@ -647,7 +653,6 @@ object QueriesSim {
     // (anti-join) and physical (compacted) delete paths search
     // identically.
     "ivf_delete" -> ((s, dir) => {
-      import graft.operators.Ivf
       val (e, cents, base) = ivfLifecycleSnapshots(s, dir)
       // the tombstone set: forgotten users' corpus rows AND their batch
       // copies — id-only (a tombstone never stores the vector)
@@ -705,13 +710,11 @@ object QueriesSim {
     // ~3e8 µ-units at this geometry); past that the sums move to
     // DECIMAL(38) like the checksum precedent.
     "ivf_retrain_trigger" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+      val e = vectors(s, dir)
+      val cents = coarseCents(e)
       val k = cents.length
       val ev = e.select(col("vec_id"), SimFns.toDouble(col("embedding")).as("v"))
-      def assigned(df: org.apache.spark.sql.DataFrame) = {
+      def assigned(df: DataFrame) = {
         val cd = element_at(Ivf.nearestCellDists(col("v"), cents, 1), 1)
         df.select(col("vec_id"), col("v"), cd.getField("cell").as("cell"),
           floor(cd.getField("d2") * 1e6 + 0.5).cast(LongType).as("d2u"))
@@ -721,14 +724,14 @@ object QueriesSim {
       // as the index itself — writeIndex — so the baseline is free there)
       val corpusA = assigned(ev).localCheckpoint(false)
       val cellDom = s.range(0, k).select(col("id").cast("int").as("cell"))
-      def occ(a: org.apache.spark.sql.DataFrame, n: String) =
+      def occ(a: DataFrame, n: String) =
         cellDom.join(a.groupBy(col("cell")).agg(count(lit(1)).as(n)), Seq("cell"), "left")
           .select(col("cell"), coalesce(col(n), lit(0L)).as(n))
-      def tot(a: org.apache.spark.sql.DataFrame, np: String, sp: String) =
+      def tot(a: DataFrame, np: String, sp: String) =
         a.agg(count(lit(1)).as(np), sum(col("d2u")).as(sp))
       val cOcc = occ(corpusA, "cn")
       val cTot = tot(corpusA, "nc", "csum")
-      def card(name: String, batch: org.apache.spark.sql.DataFrame, off: Long) = {
+      def card(name: String, batch: DataFrame, off: Long) = {
         val ba = assigned(batch).localCheckpoint(false)
         val met = occ(ba, "bn").join(cOcc, "cell")
           .crossJoin(broadcast(tot(ba, "nb", "bsum"))).crossJoin(broadcast(cTot))
@@ -781,13 +784,10 @@ object QueriesSim {
     // (counts, id checksums, recalls) — bit-exact compare. Oracle:
     // trained-oracle pattern with the threshold inlined.
     "sim_range_search" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+      val e = vectors(s, dir)
+      val cents = coarseCents(e)
       val idx = Ivf.index(e, cents, "embedding")
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       val hits = idx.join(Ivf.probe(q, cents, 3), "cell")
         .where(col("vec_id") =!= col("qid") &&
           SimFns.cosine(col("qe"), col("embedding")) >= 0.3)
@@ -860,15 +860,11 @@ object QueriesSim {
     // Spark/DuckDB compare is bit-exact. Oracle: trained-oracle pattern
     // (refit + inlined centroid distance chains + the same predicate).
     "sim_filtered" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings")
-        .where(col("embedding").isNotNull && col("label").isNotNull)
-        .select(col("vec_id"), col("label"), col("embedding"))
+      val e = labeledVectors(s, dir)
       val pred = col("label") % 3 === 0
-      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+      val cents = coarseCents(e)
       val idx = Ivf.index(e, cents, "embedding")
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       val fil = Ivf.search(idx.where(pred), cents, q, "embedding", topK = 10, nprobe = 3)
         .select(col("qid"), col("vec_id"))
         .localCheckpoint(false) // counted AND truth-joined
@@ -884,9 +880,9 @@ object QueriesSim {
       val truth = TopK.byCosine(e.where(pred).crossJoin(broadcast(q)), 10, "embedding")
         .select(col("qid"), col("vec_id"))
         .localCheckpoint(false)
-      def cnt(df: org.apache.spark.sql.DataFrame, name: String) =
+      def cnt(df: DataFrame, name: String) =
         df.groupBy(col("qid")).agg(count(lit(1)).as(name))
-      def hits(df: org.apache.spark.sql.DataFrame, name: String) =
+      def hits(df: DataFrame, name: String) =
         df.join(truth, Seq("qid", "vec_id"), "left_semi")
           .groupBy(col("qid")).agg(count(lit(1)).as(name))
       q.select(col("qid"))
@@ -921,9 +917,8 @@ object QueriesSim {
     // the shared kcenterFit re-runs at dump time and the centers inline
     // as literal distance chains.
     "kcenter_coreset" -> ((s, dir) => {
-      import graft.operators.Ivf
       val centers = kcenterFit(s, dir)
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
+      val e = vectors(s, dir)
       val nd = Ivf.nearestCellDists(col("embedding"), centers.map(_._2), 1)
       import s.implicits._
       val ids = broadcast(centers.zipWithIndex
@@ -954,13 +949,16 @@ object QueriesSim {
     // CASE-indexed list_transform residual, PQ chains over rv, per-
     // (query, cell) ADC arrays inlined.
     "sim_ivfpq_residual" -> ((s, dir) => {
-      val (cents, books, res) = ivfpqResidualParts(s, dir)
+      val e = vectors(s, dir)
+      val (cents, books, res) = ivfpqResidualParts(e)
       val enc = res.select(col("vec_id"), col("cell"),
         Pq.codesFor(col("rv"), books).as("codes"))
-      val (probes, luts) = ivfpqResidualLuts(s, dir, cents, books)
+      val probes = ivfpqResidualProbes(e, cents)
       import s.implicits._
-      val probesDF = broadcast(probes.toDF("qid", "cell"))
-      val lut = broadcast(luts.toDF("qid", "cell", "j", "code", "d"))
+      val probesDF = broadcast(probes.map(p => (p._1, p._2)).toDF("qid", "cell"))
+      val lut = broadcast(probes.flatMap { case (qid, cell, rq) =>
+        Pq.adcTable(rq, books).map { case (j, c, d) => (qid, cell, j, c, d) }
+      }.toDF("qid", "cell", "j", "code", "d"))
       enc.join(probesDF, "cell")
         .select(col("qid"), col("cell"), col("vec_id"),
           posexplode(col("codes")).as(Seq("j", "code")))
@@ -990,8 +988,7 @@ object QueriesSim {
     // a single-ulp divergence in a third cosine can no longer flip an
     // argmax pick.
     "mmr_diversify" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val q = e.where(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val cand = TopK.byCosine(e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid")),
@@ -1045,13 +1042,10 @@ object QueriesSim {
     // a built-in sanity anchor (matryoshka's dim=64 convention). Oracle:
     // trained-model pattern (refit + inlined centroid distance chains).
     "ann_nprobe_sweep" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+      val e = vectors(s, dir)
+      val cents = coarseCents(e)
       val assigned = Ivf.index(e, cents, "embedding")
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       val (truth, nTruth) =
         panelTruth(e.crossJoin(broadcast(q)).where(col("vec_id") =!= col("qid")))
       val possible = lit(nTruth)
@@ -1125,10 +1119,10 @@ object QueriesSim {
     // the MinHash/LSH family, with the cell as the partitioning key. The
     // cell count is DATA-DEPENDENT (round-9 verdict #1 — a fixed k makes
     // within-cell pairwise (N/k)², quadratic again at scale): k targets a
-    // bounded EXPECTED CELL OCCUPANCY (semdedupParams), so the total
+    // bounded EXPECTED CELL OCCUPANCY (semdedupFit), so the total
     // within-cell pair volume is occupancy × N — LINEAR in the corpus.
     // Corpus = embeddings ∪ planted copies (vec_id%25 re-planted at an
-    // offset semdedupParams derives as a power of ten ABOVE max vec_id,
+    // offset semdedupFit derives as a power of ten ABOVE max vec_id,
     // so planted ids can never alias real ones at any SF — the natural
     // corpus has no pairs above cos 0.7, so the planted near-dups ARE the
     // signal). Drop rule: within a cell, a vector is dropped when any
@@ -1138,14 +1132,10 @@ object QueriesSim {
     // checksum. Oracle: trained-model pattern (refit + inlined centroid
     // distance chains, recomputing the SAME k and offset from the data).
     "semdedup" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val (k, off) = semdedupParams(e)
+      val e = vectors(s, dir)
+      val (cents, off) = semdedupFit(e)
       val corpus = e.unionByName(e.where(col("vec_id") % 25 === 0)
         .select((col("vec_id") + off).as("vec_id"), col("embedding")))
-      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = k,
-        sampleN = math.max(2048, 8 * k))
       // bounded-occupancy assignment: identical to Ivf.index when no cell
       // exceeds 4×target (the shipped SFs — measured margin in
       // Round11Spec), recursive distributed splits past it, so the
@@ -1180,12 +1170,8 @@ object QueriesSim {
     // 4×-target margin, Round11Spec) — at a true 100 TB the split
     // boundaries would persist WITH the era state, same as the centroids.
     "semdedup_incremental" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val (k, off) = semdedupParams(e)
-      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = k,
-        sampleN = math.max(2048, 8 * k))
+      val e = vectors(s, dir)
+      val (cents, off) = semdedupFit(e)
       val state = graft.operators.DiskCache.keyedPath(
         "semdedup_state_v1", s"$dir/embeddings.parquet")
       graft.operators.DiskCache.ensure(state,
@@ -1238,8 +1224,7 @@ object QueriesSim {
     // second reference for the truth set). recall = hits/possible in the
     // ann_recall floor-1e4 form.
     "matryoshka_eval" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val q = e.where(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val dims = Seq(8, 16, 32, 64)
@@ -1275,16 +1260,13 @@ object QueriesSim {
     // refit at dump time, centroids + codebooks + per-query ADC tables
     // inlined as literals (sim_ivf_kmeans / sim_pq patterns combined).
     "sim_ivfpq" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-      val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
+      val e = vectors(s, dir)
+      val cents = coarseCents(e)
+      val books = rawPqBooks(e)
       val enc = e.select(col("vec_id"),
         element_at(Ivf.nearestCells(col("embedding"), cents, 1), 1).as("cell"),
         Pq.codesFor(col("embedding"), books).as("codes"))
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       ranked(Pq.ivfSearch(enc, cents, q, books, nprobe = 3, topk = 10), "dist2")
     }),
 
@@ -1300,12 +1282,10 @@ object QueriesSim {
     // (same frozen models refit, union corpus) and by a Round10Spec
     // differential against the in-memory full re-encode.
     "sim_ivfpq_append" -> ((s, dir) => {
-      import graft.operators.Ivf
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-      val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
-      def enc(df: org.apache.spark.sql.DataFrame) = df.select(col("vec_id"),
+      val e = vectors(s, dir)
+      val cents = coarseCents(e)
+      val books = rawPqBooks(e)
+      def enc(df: DataFrame) = df.select(col("vec_id"),
         element_at(Ivf.nearestCells(col("embedding"), cents, 1), 1).as("cell"),
         Pq.codesFor(col("embedding"), books).as("codes"))
       val base = graft.operators.DiskCache.keyedPath(
@@ -1320,8 +1300,7 @@ object QueriesSim {
       Ivf.writeIndex(enc(batch), s"$base/batch_1")
       val idx = Ivf.readIndex(s, s"$base/corpus")
         .unionByName(Ivf.readIndex(s, s"$base/batch_1"))
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       ranked(Pq.ivfSearch(idx, cents, q, books, nprobe = 3, topk = 10), "dist2")
     }),
 
@@ -1340,8 +1319,8 @@ object QueriesSim {
     // rows. Packing is an unrolled sum of 32 when()s per word — distinct
     // powers of two, an order-free integer sum, bit-exact cross-engine.
     "sim_hamming_rerank" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      def word(off: Int): org.apache.spark.sql.Column = (0 until 32).map(i =>
+      val e = vectors(s, dir)
+      def word(off: Int): Column = (0 until 32).map(i =>
         when(col("embedding")(off + i) > 0f, lit(1L << i)).otherwise(lit(0L)))
         .reduce(_ + _)
       val packed = e.select(col("vec_id"), word(0).as("lo"), word(32).as("hi"))
@@ -1353,8 +1332,7 @@ object QueriesSim {
         .select(col("qid"), col("vec_id"), ham.as("ham"))
         .transform(TopK.perKey(_, col("qid"))(50, col("ham"), col("vec_id")))
         .select(col("qid"), col("vec_id"), col("ham"))
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = panel(e)
       TopK.byCosine(e.join(broadcast(cand), "vec_id").join(broadcast(q), "qid"),
           10, "embedding", "ham")
         .transform(ranked(_, "cos", "ham"))
@@ -1394,10 +1372,10 @@ object QueriesSim {
       val q = broadcast(e.where(col("vec_id").between(1, 10))
         .select(col("vec_id").as("qid"), col("embedding").as("qe")))
       val eu = e.select(col("vec_id").as("u"), col("embedding").as("eu"))
-      def score(cands: org.apache.spark.sql.DataFrame) =
+      def score(cands: DataFrame) =
         cands.join(eu, "u").join(q, "qid")
           .select(col("qid"), col("u"), SimFns.cosine(col("qe"), col("eu")).as("cos"))
-      def beamTop(df: org.apache.spark.sql.DataFrame, k: Int) =
+      def beamTop(df: DataFrame, k: Int) =
         TopK.perKey(df, col("qid"))(k, col("cos").desc, col("u"))
           .select(col("qid"), col("u"), col("cos"))
       // r15 (JobProfile evidence): the checkpointed-frame walk ran 52 jobs /
@@ -1420,7 +1398,7 @@ object QueriesSim {
           org.apache.spark.sql.types.DoubleType, nullable = true)))
       // the ONE audited collect site of the walk (PlanLintSpec budget):
       // ≤ 20 rows per call by the rank <= 2 / |queries| bound
-      def collectBeam(df: org.apache.spark.sql.DataFrame)
+      def collectBeam(df: DataFrame)
           : Seq[org.apache.spark.sql.Row] =
         df.select(col("qid"), col("u"), col("cos")).collect().toSeq
       def beamDF(rows: Seq[org.apache.spark.sql.Row]) =
@@ -1484,7 +1462,7 @@ object QueriesSim {
         .select(col("v"), col("u"))
         .localCheckpoint(false) // read by both stage cards + the count
       val nt = truth.agg(count(lit(1)).as("n_truth")).localCheckpoint(false)
-      def card(stage: String, edges: org.apache.spark.sql.DataFrame) =
+      def card(stage: String, edges: DataFrame) =
         edges.agg(count(lit(1)).as("n_edges"),
             sum(floor(col("cos") * 1e6 + 0.5).cast(LongType)).as("c6"))
           .crossJoin(edges.join(truth, Seq("v", "u"), "left_semi")
@@ -1508,8 +1486,7 @@ object QueriesSim {
     // Oracle refits the identical model and inlines μ/w1/w2 as literals.
     "embed_pca_project" -> ((s, dir) => {
       import graft.operators.Pca
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
+      val e = vectors(s, dir)
       val (mu, comps) = Pca.fitSampled(e, "vec_id", "embedding")
       val muArr = array(mu.map(lit).toSeq: _*)
       val centered = zip_with(SimFns.toDouble(col("embedding")), muArr, (a, b) => a - b)
@@ -1541,14 +1518,8 @@ object QueriesSim {
     // wordpiece HUGEINT-matching precedent): headroom to ~1e26 vectors,
     // and DIV on (DECIMAL, BIGINT) still lands the exact BIGINT.
     "embed_whitening" -> ((s, dir) => {
-      import graft.operators.Pca
-      val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-      val (mu, comps, lams) = Pca.fitSampledFull(e, "vec_id", "embedding",
-        nComponents = 4)
-      val rows = comps.zip(lams).map { case (w, l) =>
-        val s2 = math.sqrt(l); w.map(_ / s2) }
-      val eig6 = lams.map(l => math.floor(l * 1e6 + 0.5).toLong)
+      val e = vectors(s, dir)
+      val (mu, rows, eig6) = whiteningFit(e)
       val muArr = array(mu.map(lit).toSeq: _*)
       val centered = zip_with(SimFns.toDouble(col("embedding")), muArr, (a, b) => a - b)
       def w6(row: Array[Double]) =
@@ -1642,7 +1613,7 @@ object QueriesSim {
           col("label").as("qlabel"), col("bucket").as("qbucket"))
       val (truth, nTruth) = panelTruth(e.join(broadcast(q)))
       val possible = lit(nTruth)
-      def card(method: String, cand: org.apache.spark.sql.DataFrame) =
+      def card(method: String, cand: DataFrame) =
         TopK.byCosine(cand, 10, "embedding").join(truth, Seq("qid", "vec_id"), "left_semi")
           .agg(count(lit(1)).as("hits"))
           .select(lit(method).as("method"), col("hits"), possible.as("possible"),
@@ -1838,10 +1809,6 @@ object QueriesSim {
         .orderBy(col("label"))
     }))
 
-  /** The LSH sign-bit columns as DuckDB SQL: the SAME fixedPlanes(6, 64)
-    * doubles the Spark query uses, inlined as literals (Double.toString is
-    * shortest-round-trip, so DuckDB parses back the identical bits), with
-    * list_dot_product mirroring the sequential left-fold of SimFns.dot. */
   /** The ONE definition of the IVF lifecycle's shared on-disk snapshots —
     * sim_ivf_append, ivf_compact and ivf_delete all read the SAME
     * fingerprint-keyed `corpus` and `batch_1` dirs, and DiskCache.ensure is
@@ -1851,12 +1818,10 @@ object QueriesSim {
     * (review-caught — the block was copy-pasted three times). Returns
     * (corpus, trained centroids, base path); both snapshots are published
     * atomically ensure-once. */
-  private def ivfLifecycleSnapshots(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, Array[Array[Double]], String) = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+  private def ivfLifecycleSnapshots(s: SparkSession, dir: String)
+      : (DataFrame, Array[Array[Double]], String) = {
+    val e = vectors(s, dir)
+    val cents = coarseCents(e)
     val base = graft.operators.DiskCache.keyedPath(
       "ivf_idx_v1", s"$dir/embeddings.parquet")
     graft.operators.DiskCache.ensure(s"$base/corpus") { tmp =>
@@ -1871,9 +1836,7 @@ object QueriesSim {
   }
 
   final case class MaxsimPqParts(
-    corpus: org.apache.spark.sql.DataFrame, queries: org.apache.spark.sql.DataFrame,
-    cand: org.apache.spark.sql.DataFrame, dcodes: org.apache.spark.sql.DataFrame,
-    scored: org.apache.spark.sql.DataFrame,
+    corpus: DataFrame, queries: DataFrame, cand: DataFrame, dcodes: DataFrame, scored: DataFrame,
     cents: Array[Array[Double]], books: Seq[Array[Array[Double]]])
 
   /** Shared construction for maxsim_pq (query + trained oracle +
@@ -1886,23 +1849,16 @@ object QueriesSim {
     * Score determinism: every lut value is a sequential dot fold, the
     * three terms add left-associatively, the per-slice max is
     * order-independent, and the cross-slice sum is a PINNED m0..m3 pivot. */
-  private[graft] def maxsimPqParts(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): MaxsimPqParts = {
-    import graft.operators.Ivf
+  private[graft] def maxsimPqParts(s: SparkSession, dir: String): MaxsimPqParts = {
     import s.implicits._
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
+    val e = vectors(s, dir)
     val d = 16
-    val slices0 = e.select(col("vec_id"),
-      posexplode(array((0 until 4).map(i =>
-        slice(col("embedding"), i * d + 1, d)): _*)).as(Seq("pos", "sub")))
-    val slices = slices0.select((col("vec_id") * 4 + col("pos")).as("sid"), col("sub"))
-    val cents = Ivf.trainSampled(slices, "sid", "sub", k = 32)
+    val cents = subCents(e)
     val centDf = broadcast(cents.toSeq.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "cent"))
     // residual = slice − its cell centroid, via a broadcast join with the
     // stored codebook table (same double values NearestCells embeds)
-    val resid = slices0
+    val resid = subVectors(e)
       .select(col("vec_id"), col("pos"), col("sub"),
         element_at(Ivf.nearestCells(col("sub"), cents, 1), 1).as("cell"))
       .join(centDf, "cell")
@@ -1917,8 +1873,7 @@ object QueriesSim {
       .select(col("vec_id"), col("pos"), col("cell"),
         element_at(col("codes"), 1).as("c0"), element_at(col("codes"), 2).as("c1"))
       .localCheckpoint(false) // the compressed index: every rerank read hits this
-    val q = e.where(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val q = panel(e)
     val dcell = dcodes.select(col("vec_id"), col("cell")).distinct()
     val qcell = dcodes.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("cell")).distinct()
@@ -1957,6 +1912,10 @@ object QueriesSim {
     MaxsimPqParts(e, q, cand, dcodes, scored, cents, books)
   }
 
+  /** The LSH sign-bit columns as DuckDB SQL: the SAME fixedPlanes(6, 64)
+    * doubles the Spark query uses, inlined as literals (Double.toString is
+    * shortest-round-trip, so DuckDB parses back the identical bits), with
+    * list_dot_product mirroring the sequential left-fold of SimFns.dot. */
   private def lshBitsSql: String =
     SimFns.fixedPlanes(nPlanes = 6, dim = 64).zipWithIndex.map { case (p, i) =>
       s"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), " +
@@ -2046,6 +2005,11 @@ object QueriesSim {
   // (v[i]−c)² chains — the same sequential double adds as the JVM loops
   // (NearestCells.nearest / Pq.adcTable), never list_sum (fold order
   // unspecified).
+  // Each oracle refits through its card's fit function and follows the
+  // card's partition → prune → verify steps with one SQL builder per step:
+  // assign (assignCtes), probe (probeCtes), verify (topKSql), plus the PQ
+  // encode (pqEncodeCtes) and ADC scoring (adcTopSql). An oracle writes
+  // only the CTEs of its own card.
 
   /** Σᵢ (vexpr[i] − cent[i])² as a left-associative SQL chain (ascending i,
     * matching NearestCells' loop order bit-for-bit). `off` = 0-based start
@@ -2068,26 +2032,149 @@ object QueriesSim {
     s"CASE ${whens.mkString(" ")} ELSE ${dcols.size - 1} END"
   }
 
-  // every generated-ANN corpus filters NULL embeddings: the Spark side
-  // DROPS a NULL row naturally (NULL cell/codes never join), while
-  // argminCaseSql's ELSE branch would assign it the LAST cell and emit a
-  // phantom NULL-cosine candidate (review-caught, latent — current data
-  // has no NULLs)
-  private def ivfKmeansOracle(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ivfSearchOracle(s, dir,
-      "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL")
+  /** The distance-chain column list: `name`i = the l2ChainSql of `vexpr`
+    * (from `off`) against centroid i, for every centroid. PQ subspaces and
+    * PLAID's sub-vector slices pass their offset and a per-slice `name`
+    * (d0_, d1_, …). */
+  private def distColsSql(cents: Array[Array[Double]], name: String = "d",
+                          vexpr: String = "v", off: Int = 0): String =
+    cents.zipWithIndex.map { case (c, i) => s"${l2ChainSql(vexpr, c, off)} AS $name$i" }
+      .mkString(",\n    ")
 
-  /** The append-batch variant searches corpus ∪ batch (the batch is planted
-    * copies at +100000), with the SAME corpus-trained quantizer — ground
-    * truth is a full recompute over the union, which the snapshot-union
-    * index must reproduce exactly. */
-  private def ivfAppendOracle(s: org.apache.spark.sql.SparkSession, dir: String): String =
+  private def distCols(k: Int, name: String = "d"): Seq[String] = (0 until k).map(i => s"$name$i")
+
+  /** The assign step over the rows of `from` (vector `v`): `d` holds `keep`
+    * and the distances d0…d(k−1) to every centroid; `a` (materialized — the
+    * probe and verify steps both read it) holds `keep`, the nearest `cell`
+    * (ties to the lower cell, as NearestCells) and `extra` columns over the
+    * distances. */
+  private def assignCtes(cents: Array[Array[Double]], from: String, keep: String = "vec_id, v",
+                         extra: String = "", d: String = "d", a: String = "a"): String =
+    s"""$d AS (SELECT $keep,
+       |    ${distColsSql(cents)}
+       |  FROM $from),
+       |$a AS MATERIALIZED (SELECT $keep, ${argminCaseSql(distCols(cents.length))} AS cell$extra
+       |  FROM $d)""".stripMargin
+
+  /** The probe step, the SQL twin of Ivf.probe: the rows of the assign
+    * step's distance CTE `d` that pass `where` become the queries `qd`
+    * (qid, qv and the k distances), `qc` pairs each with every cell, and
+    * `probes` keeps each query's `nprobe` nearest cells as (qid, qv, cell,
+    * crank), ranked by (dist, cell) — NearestCells' tie order. `tag`
+    * prefixes the three CTE names. */
+  private def probeCtes(k: Int, d: String, where: String, nprobe: Int, tag: String = ""): String =
+    s"""${tag}qd AS MATERIALIZED (SELECT vec_id AS qid, v AS qv, ${distCols(k).mkString(", ")}
+       |  FROM $d WHERE $where),
+       |${tag}qc AS (SELECT qid, qv, u.cell,
+       |    CASE u.cell ${(0 until k).map(i => s"WHEN $i THEN d$i").mkString(" ")} END AS dist
+       |  FROM ${tag}qd CROSS JOIN (SELECT unnest(range(0, $k)) AS cell) u),
+       |${tag}probes AS MATERIALIZED (SELECT qid, qv, cell, crank FROM (
+       |  SELECT qid, qv, cell,
+       |    row_number() OVER (PARTITION BY qid ORDER BY dist, cell) AS crank FROM ${tag}qc)
+       |  WHERE crank <= $nprobe)""".stripMargin
+
+  /** The verify step, the SQL twin of TopK.byCosine: over the candidate
+    * join `from` — query side aliased `q` (qid, qv), corpus side `x`
+    * (vec_id, v) — each query's top `k` by (`score` DESC, vec_id) as
+    * (qid, vec_id, c = the score, rn = the rank). The score is the exact
+    * cosine; PLAID's cards rank on their MaxSim score instead. */
+  private def topKSql(from: String, k: Int,
+                      score: String = "list_cosine_similarity(q.qv, x.v)"): String =
+    s"""SELECT qid, vec_id, c, rn FROM (
+       |  SELECT qid, vec_id, c,
+       |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, vec_id) AS rn
+       |  FROM (SELECT q.qid, x.vec_id, $score AS c FROM $from) z0) z
+       |  WHERE rn <= $k""".stripMargin
+
+  /** The PQ encode step, the SQL twin of Pq.codesFor over `vexpr`: `pqd`
+    * holds `keep` and each subspace slice's distance to every codeword
+    * (d{j}_{c}), `enc` holds `keep` and the m codes c0…c(m−1) (ties to the
+    * lower code). */
+  private def pqEncodeCtes(books: Seq[Array[Array[Double]]], vexpr: String, keep: String,
+                           from: String): String = {
+    val sub = books.head.head.length
+    val dists = books.indices.map(j => distColsSql(books(j), s"d${j}_", vexpr, j * sub))
+    val codes = books.indices.map(j =>
+      s"${argminCaseSql(distCols(books(j).length, s"d${j}_"))} AS c$j")
+    s"""pqd AS (SELECT $keep,
+       |    ${dists.mkString(",\n    ")}
+       |  FROM $from),
+       |enc AS (SELECT $keep,
+       |    ${codes.mkString(",\n    ")}
+       |  FROM pqd)""".stripMargin
+  }
+
+  /** The ADC step: `ad` scores each candidate of `from` (which binds `p`
+    * with qid and `enc` with the codes) by the per-query ADC CASE — for each
+    * (condition, query vector) pair, the vector's m×k Pq.adcTable inlined as
+    * literal arrays, looked up by code and summed in ascending-j order
+    * (Pq.search's posexplode-order partial aggregate) — and each query's
+    * top 10 by (dd, vec_id) comes out as (qid, vec_id, dist2, rank). */
+  private def adcTopSql(cases: Seq[(String, Array[Double])], books: Seq[Array[Array[Double]]],
+                        from: String): String = {
+    val whens = cases.map { case (cond, qv) =>
+      val byJC = Pq.adcTable(qv, books).map { case (j, c, d) => (j, c) -> d }.toMap
+      val chain = books.indices.map { j =>
+        books(j).indices.map(c => byJC((j, c))).mkString("([", ", ", s"])[c$j + 1]")
+      }.mkString(" + ")
+      s"WHEN $cond THEN $chain"
+    }
+    s"""ad AS (SELECT p.qid, enc.vec_id,
+       |    CASE
+       |      ${whens.mkString("\n      ")}
+       |    END AS dd
+       |  FROM $from)
+       |SELECT CAST(qid AS BIGINT) AS qid, vec_id, round(dd, 6) AS dist2,
+       |  CAST(rn AS BIGINT) AS rank FROM (
+       |  SELECT qid, vec_id, dd,
+       |    row_number() OVER (PARTITION BY qid ORDER BY dd, vec_id) AS rn FROM ad)
+       |WHERE rn <= 10 ORDER BY qid, rank""".stripMargin
+  }
+
+  /** The oracles' corpus `e` as (vec_id, v DOUBLE[]) — the SQL twin of
+    * [[vectors]]. Every generated-ANN corpus filters NULL embeddings: the
+    * Spark side DROPS a NULL row naturally (NULL cell/codes never join),
+    * while argminCaseSql's ELSE branch would assign it the LAST cell and
+    * emit a phantom NULL-cosine candidate (review-caught, latent — current
+    * data has no NULLs). */
+  private val vectorsSql =
+    "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL"
+
+  /** The append cards' index: the corpus ∪ its batch (every 50th vector
+    * planted again at +100000). */
+  private val appendedSql =
+    s"""$vectorsSql
+       |  UNION ALL
+       |  SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
+       |  FROM embeddings WHERE vec_id % 50 = 0 AND embedding IS NOT NULL""".stripMargin
+
+  /** sim_ivf_kmeans' twin and the IVF lifecycle's: refit the coarse
+    * quantizer on the natural corpus (whatever `corpusSql` indexes — the
+    * frozen-model contract), assign `corpusSql`, probe 3 cells per panel
+    * query and verify the top 10 by exact cosine. */
+  private def ivfSearchOracle(s: SparkSession, dir: String, corpusSql: String): String = {
+    val cents = coarseCents(vectors(s, dir))
+    s"""WITH e AS ($corpusSql),
+       |${assignCtes(cents, "e")},
+       |${probeCtes(cents.length, "d", "vec_id < 5", 3)}
+       |SELECT qid, vec_id, round(c, 6) AS cos, CAST(rn AS BIGINT) AS rank FROM (
+       |${topKSql("probes q JOIN a x ON x.cell = q.cell", 10)})
+       |ORDER BY qid, rank""".stripMargin
+  }
+
+  /** ivf_delete's twin: ground truth is a full recompute over
+    * (corpus ∪ batch) − deleted — the compacted post-delete index must
+    * search exactly like a from-scratch index over the surviving rows
+    * (same corpus-trained quantizer; the forget set is ids ≡ 0 mod 30
+    * plus their +100000 batch copies). */
+  private def ivfDeleteOracle(s: SparkSession, dir: String): String =
     ivfSearchOracle(s, dir,
       """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  WHERE embedding IS NOT NULL
+        |  WHERE embedding IS NOT NULL AND vec_id % 30 <> 0
         |  UNION ALL
         |  SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id % 50 = 0 AND embedding IS NOT NULL""".stripMargin)
+        |  FROM embeddings
+        |  WHERE vec_id % 50 = 0 AND vec_id % 30 <> 0 AND embedding IS NOT NULL""".stripMargin)
 
   /** Scientific-notation double literal: parsed by DuckDB directly as
     * DOUBLE (never DECIMAL — the decimal-literal trap), 18 significant
@@ -2098,6 +2185,57 @@ object QueriesSim {
   private def dlistLit(v: Array[Double]): String =
     v.map(dlit).mkString("CAST([", ", ", "] AS DOUBLE[])")
 
+  /** The SQL twin of [[maxSim]] over the panel query `q.qv` and the corpus
+    * vector `x.v`, with the slice score `pair` (a DuckDB list function). */
+  private def maxSimSql(pair: String): String =
+    (0 until 4).map { i =>
+      (0 until 4).map(j =>
+        s"$pair(q.qv[${i * 16 + 1}:${i * 16 + 16}], x.v[${j * 16 + 1}:${j * 16 + 16}])")
+        .mkString("greatest(", ", ", ")")
+    }.mkString(" + ")
+
+  /** PLAID's assign and candidate steps over the refit k=32 sub-vector
+    * quantizer (maxsim_ivf and maxsim_pq): `cl` holds each vector's four
+    * slice cells c0…c3 (distance chains at slice offsets 0/16/32/48 +
+    * argmin), `dc` the distinct (vec_id, cell) postings, `cand` the
+    * (qid, vec_id) pairs that share a cell with a panel query, and `qe` the
+    * panel as (qid, qv). */
+  private def plaidCandCtes(cents: Array[Array[Double]]): String = {
+    val dists = (0 until 4).map(j => distColsSql(cents, s"d${j}_", off = j * 16))
+    val cells = (0 until 4).map(j =>
+      s"${argminCaseSql(distCols(cents.length, s"d${j}_"))} AS c$j")
+    s"""dd AS (SELECT vec_id, v,
+       |    ${dists.mkString(",\n    ")}
+       |  FROM e),
+       |cl AS MATERIALIZED (SELECT vec_id,
+       |    ${cells.mkString(",\n    ")}
+       |  FROM dd),
+       |dc AS MATERIALIZED (SELECT DISTINCT vec_id, cell FROM (
+       |  SELECT vec_id, unnest([c0, c1, c2, c3]) AS cell FROM cl) z),
+       |qcl AS (SELECT vec_id AS qid, cell FROM dc WHERE vec_id < 5),
+       |cand AS MATERIALIZED (SELECT DISTINCT q.qid, d.vec_id
+       |  FROM qcl q JOIN dc d ON d.cell = q.cell),
+       |qe AS MATERIALIZED (SELECT vec_id AS qid, v AS qv FROM e
+       |  WHERE vec_id < 5)""".stripMargin
+  }
+
+  /** The SQL twin of [[candRecall]] over the panel `qe`, `cand` and the
+    * top-5 (qid, vec_id) sets `rer` (reranked) and `tr` (truth); `extra`
+    * names a one-row CTE whose columns follow qid. */
+  private def candRecallSql(extra: String = ""): String = {
+    val (cols, join) = if (extra.isEmpty) ("", "") else (s"$extra.*, ", s" CROSS JOIN $extra")
+    s"""cc AS (SELECT qid, CAST(count(*) AS BIGINT) AS n_cand FROM cand GROUP BY 1),
+       |hh AS (SELECT rer.qid, CAST(count(*) AS BIGINT) AS hits
+       |  FROM rer JOIN tr USING (qid, vec_id) GROUP BY 1)
+       |SELECT q.qid, ${cols}coalesce(cc.n_cand, 0) AS n_cand,
+       |  coalesce(hh.hits, 0) AS hits,
+       |  CAST((coalesce(hh.hits, 0) * 1000000) // 5 AS BIGINT) AS recall6
+       |FROM (SELECT qid FROM qe) q$join
+       |LEFT JOIN cc ON cc.qid = q.qid
+       |LEFT JOIN hh ON hh.qid = q.qid
+       |ORDER BY q.qid""".stripMargin
+  }
+
   /** maxsim_pq's twin: refit the shared k=32 sub-vector quantizer AND the
     * two m=2/k=16 residual codebooks (all pure functions of id-ordered
     * samples), inline them, and reproduce the code assignment + ADC
@@ -2107,20 +2245,9 @@ object QueriesSim {
     * (list_dot_product ≡ the aggregate/zip_with fold), terms add
     * left-associatively, and the cross-slice sum is the pinned m0..m3
     * pivot. */
-  private def maxsimPqOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+  private def maxsimPqOracle(s: SparkSession, dir: String): String = {
     val p = maxsimPqParts(s, dir)
-    val cents = p.cents
-    val k = cents.length
-    val dDefs = (0 until 4).flatMap { j =>
-      cents.zipWithIndex.map { case (c, i) =>
-        s"${l2ChainSql("v", c, off = j * 16)} AS d${j}_$i" }
-    }.mkString(",\n    ")
-    val cellDefs = (0 until 4).map { j =>
-      s"${argminCaseSql((0 until k).map(i => s"d${j}_$i"))} AS c$j"
-    }.mkString(",\n    ")
-    val centVals = cents.zipWithIndex
-      .map { case (c, i) => s"($i, ${dlistLit(c)})" }.mkString(",\n    ")
-    def bookVals(b: Array[Array[Double]]) = b.zipWithIndex
+    def vals(b: Array[Array[Double]]) = b.zipWithIndex
       .map { case (c, i) => s"($i, ${dlistLit(c)})" }.mkString(",\n    ")
     // residual code distance for (subspace m, code c): Σ_t ((v[pos·16+off+t]
     // − cent[off+t]) − rc_t)² — cent referenced from the joined cv list so
@@ -2134,41 +2261,24 @@ object QueriesSim {
       p.books(m).zipWithIndex.map { case (rc, c) =>
         s"${resChain(m, rc)} AS e${m}_$c" }
     }.mkString(",\n    ")
-    val msDot = (0 until 4).map { i =>
-      "greatest(" + (0 until 4).map { j =>
-        s"list_dot_product(q.qv[${i * 16 + 1}:${i * 16 + 16}], e.v[${j * 16 + 1}:${j * 16 + 16}])"
-      }.mkString(", ") + ")"
-    }.mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |dd AS (SELECT vec_id, v,
-       |    $dDefs
-       |  FROM e),
-       |cl AS MATERIALIZED (SELECT vec_id,
-       |    $cellDefs
-       |  FROM dd),
+    s"""WITH e AS ($vectorsSql),
+       |${plaidCandCtes(p.cents)},
        |pp AS (SELECT vec_id, unnest([0,1,2,3]) AS pos,
        |    unnest([c0, c1, c2, c3]) AS cell FROM cl),
        |cv AS (SELECT * FROM (VALUES
-       |    $centVals) t(cell, cent)),
+       |    ${vals(p.cents)}) t(cell, cent)),
        |rb AS (SELECT p.vec_id, p.pos, p.cell,
        |    $rdDefs
        |  FROM pp p JOIN e ON e.vec_id = p.vec_id JOIN cv ON cv.cell = p.cell),
        |rd AS MATERIALIZED (SELECT vec_id, pos, cell,
-       |    ${argminCaseSql((0 until 16).map(c => s"e0_$c"))} AS cc0,
-       |    ${argminCaseSql((0 until 16).map(c => s"e1_$c"))} AS cc1
+       |    ${argminCaseSql(distCols(16, "e0_"))} AS cc0,
+       |    ${argminCaseSql(distCols(16, "e1_"))} AS cc1
        |  FROM rb),
-       |dc AS MATERIALIZED (SELECT DISTINCT vec_id, cell FROM rd),
-       |qcl AS (SELECT vec_id AS qid, cell FROM dc WHERE vec_id < 5),
-       |cand AS MATERIALIZED (SELECT DISTINCT q.qid, d.vec_id
-       |  FROM qcl q JOIN dc d ON d.cell = q.cell),
-       |qe AS MATERIALIZED (SELECT vec_id AS qid, v AS qv FROM e
-       |  WHERE vec_id < 5),
        |ir AS (SELECT unnest([0,1,2,3]) AS i),
        |rv0 AS (SELECT * FROM (VALUES
-       |    ${bookVals(p.books(0))}) t(code, rc)),
+       |    ${vals(p.books(0))}) t(code, rc)),
        |rv1 AS (SELECT * FROM (VALUES
-       |    ${bookVals(p.books(1))}) t(code, rc)),
+       |    ${vals(p.books(1))}) t(code, rc)),
        |lutc AS MATERIALIZED (SELECT q.qid, ir.i, cv.cell,
        |    list_dot_product(q.qv[(ir.i*16+1):(ir.i*16+16)], cv.cent) AS cd
        |  FROM qe q CROSS JOIN ir CROSS JOIN cv),
@@ -2188,136 +2298,35 @@ object QueriesSim {
        |    JOIN lut0 l0 ON l0.qid = c.qid AND l0.i = ir.i AND l0.code = d.cc0
        |    JOIN lut1 l1 ON l1.qid = c.qid AND l1.i = ir.i AND l1.code = d.cc1
        |  GROUP BY 1, 2),
-       |rer AS (SELECT qid, vec_id FROM (
-       |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-       |      ORDER BY ((m0 + m1) + m2) + m3 DESC, vec_id) AS rn FROM sc) z
-       |  WHERE rn <= 5),
-       |tr AS (SELECT qid, vec_id FROM (
-       |  SELECT q.qid, e.vec_id,
-       |    row_number() OVER (PARTITION BY q.qid ORDER BY $msDot DESC, e.vec_id) AS rn
-       |  FROM e CROSS JOIN qe q) z WHERE rn <= 5),
-       |cc AS (SELECT qid, CAST(count(*) AS BIGINT) AS n_cand FROM cand GROUP BY 1),
-       |hh AS (SELECT rer.qid, CAST(count(*) AS BIGINT) AS hits
-       |  FROM rer JOIN tr USING (qid, vec_id) GROUP BY 1)
-       |SELECT q.qid, coalesce(cc.n_cand, 0) AS n_cand,
-       |  coalesce(hh.hits, 0) AS hits,
-       |  CAST((coalesce(hh.hits, 0) * 1000000) // 5 AS BIGINT) AS recall6
-       |FROM (SELECT qid FROM qe) q
-       |LEFT JOIN cc ON cc.qid = q.qid
-       |LEFT JOIN hh ON hh.qid = q.qid
-       |ORDER BY q.qid""".stripMargin
+       |rer AS (${topKSql("sc x JOIN qe q ON q.qid = x.qid", 5, "((x.m0 + x.m1) + x.m2) + x.m3")}),
+       |tr AS (${topKSql("e x CROSS JOIN qe q", 5, maxSimSql("list_dot_product"))}),
+       |${candRecallSql()}""".stripMargin
   }
-
-  /** ivf_delete's twin: ground truth is a full recompute over
-    * (corpus ∪ batch) − deleted — the compacted post-delete index must
-    * search exactly like a from-scratch index over the surviving rows
-    * (same corpus-trained quantizer; the forget set is ids ≡ 0 mod 30
-    * plus their +100000 batch copies). */
-  private def ivfDeleteOracle(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ivfSearchOracle(s, dir,
-      """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  WHERE embedding IS NOT NULL AND vec_id % 30 <> 0
-        |  UNION ALL
-        |  SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
-        |  FROM embeddings
-        |  WHERE vec_id % 50 = 0 AND vec_id % 30 <> 0 AND embedding IS NOT NULL""".stripMargin)
 
   /** maxsim_ivf's twin: refit the shared sub-vector quantizer (identical
     * id-ordered slice stream), inline 32 centroids × 4 position offsets as
     * distance chains + argmin CASEs, rebuild the cell postings / probe
     * equi-join candidates, and re-rank with the same sliced MaxSim
     * formula maxsim_retrieval's oracle uses. */
-  private def maxsimIvfOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val d = 16
-    val slices = e.select(col("vec_id"),
-        posexplode(array((0 until 4).map(i =>
-          slice(col("embedding"), i * d + 1, d)): _*)).as(Seq("pos", "sub")))
-      .select((col("vec_id") * 4 + col("pos")).as("sid"), col("sub"))
-    val cents = Ivf.trainSampled(slices, "sid", "sub", k = 32)
-    val k = cents.length
-    val dDefs = (0 until 4).flatMap { j =>
-      cents.zipWithIndex.map { case (c, i) =>
-        s"${l2ChainSql("v", c, off = j * d)} AS d${j}_$i" }
-    }.mkString(",\n    ")
-    val cellDefs = (0 until 4).map { j =>
-      s"${argminCaseSql((0 until k).map(i => s"d${j}_$i"))} AS c$j"
-    }.mkString(",\n    ")
-    def lcs(i: Int, j: Int) =
-      s"list_cosine_similarity(q.qv[${i * 16 + 1}:${i * 16 + 16}], " +
-        s"e.v[${j * 16 + 1}:${j * 16 + 16}])"
-    val ms = (0 until 4).map(i =>
-      "greatest(" + (0 until 4).map(j => lcs(i, j)).mkString(", ") + ")")
-      .mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |dd AS (SELECT vec_id, v,
-       |    $dDefs
-       |  FROM e),
-       |cl AS MATERIALIZED (SELECT vec_id,
-       |    $cellDefs
-       |  FROM dd),
-       |dc AS MATERIALIZED (SELECT DISTINCT vec_id, cell FROM (
-       |  SELECT vec_id, unnest([c0, c1, c2, c3]) AS cell FROM cl) z),
-       |qcl AS (SELECT vec_id AS qid, cell FROM dc WHERE vec_id < 5),
-       |cand AS MATERIALIZED (SELECT DISTINCT q.qid, d.vec_id
-       |  FROM qcl q JOIN dc d ON d.cell = q.cell),
-       |qe AS MATERIALIZED (SELECT vec_id AS qid, v AS qv FROM e
-       |  WHERE vec_id < 5),
-       |rer AS (SELECT qid, vec_id FROM (
-       |  SELECT qid, vec_id,
-       |    row_number() OVER (PARTITION BY qid ORDER BY ms DESC, vec_id) AS rn
-       |  FROM (SELECT c.qid, c.vec_id, $ms AS ms
-       |    FROM cand c JOIN e ON e.vec_id = c.vec_id
-       |    JOIN qe q ON q.qid = c.qid) z1) z2 WHERE rn <= 5),
-       |tr AS (SELECT qid, vec_id FROM (
-       |  SELECT qid, vec_id,
-       |    row_number() OVER (PARTITION BY qid ORDER BY ms DESC, vec_id) AS rn
-       |  FROM (SELECT q.qid, e.vec_id, $ms AS ms
-       |    FROM e CROSS JOIN qe q) z1) z2 WHERE rn <= 5),
+  private def maxsimIvfOracle(s: SparkSession, dir: String): String = {
+    val ms = maxSimSql("list_cosine_similarity")
+    s"""WITH e AS ($vectorsSql),
+       |${plaidCandCtes(subCents(vectors(s, dir)))},
+       |rer AS (${topKSql("cand p JOIN e x ON x.vec_id = p.vec_id JOIN qe q ON q.qid = p.qid", 5, ms)}),
+       |tr AS (${topKSql("e x CROSS JOIN qe q", 5, ms)}),
        |nc AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus FROM e),
-       |cc AS (SELECT qid, CAST(count(*) AS BIGINT) AS n_cand FROM cand GROUP BY 1),
-       |hh AS (SELECT rer.qid, CAST(count(*) AS BIGINT) AS hits
-       |  FROM rer JOIN tr USING (qid, vec_id) GROUP BY 1)
-       |SELECT q.qid, nc.n_corpus, coalesce(cc.n_cand, 0) AS n_cand,
-       |  coalesce(hh.hits, 0) AS hits,
-       |  CAST((coalesce(hh.hits, 0) * 1000000) // 5 AS BIGINT) AS recall6
-       |FROM (SELECT qid FROM qe) q CROSS JOIN nc
-       |LEFT JOIN cc ON cc.qid = q.qid
-       |LEFT JOIN hh ON hh.qid = q.qid
-       |ORDER BY q.qid""".stripMargin
+       |${candRecallSql("nc")}""".stripMargin
   }
 
   /** sim_range_search's twin: refit the quantizer, assign the corpus,
     * pick probe cells with inlined distance chains, and reproduce the
     * probe-hit / exact range counts at the same cos >= 0.3 threshold
     * (CAST AS DOUBLE — a bare 0.3 parses as DECIMAL in DuckDB). */
-  private def rangeSearchOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-    val k = cents.length
-    val dDefs = cents.zipWithIndex.map { case (c, i) =>
-      s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
-    val dcols = (0 until k).map(i => s"d$i")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |d AS (SELECT vec_id, v,
-       |    $dDefs
-       |  FROM e),
-       |a AS MATERIALIZED (SELECT vec_id, v, ${argminCaseSql(dcols)} AS cell FROM d),
-       |qd AS (SELECT vec_id AS qid, v AS qv, ${dcols.mkString(", ")}
-       |  FROM d WHERE vec_id < 5),
-       |qc AS (SELECT qid, qv, u.cell,
-       |    CASE u.cell ${(0 until k).map(i => s"WHEN $i THEN d$i").mkString(" ")} END AS dist
-       |  FROM qd CROSS JOIN (SELECT unnest(range(0, $k)) AS cell) u),
-       |probes AS MATERIALIZED (SELECT qid, qv, cell FROM (
-       |  SELECT qid, qv, cell,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dist, cell) AS rn FROM qc)
-       |  WHERE rn <= 3),
+  private def rangeSearchOracle(s: SparkSession, dir: String): String = {
+    val cents = coarseCents(vectors(s, dir))
+    s"""WITH e AS ($vectorsSql),
+       |${assignCtes(cents, "e")},
+       |${probeCtes(cents.length, "d", "vec_id < 5", 3)},
        |hits AS (SELECT p.qid, CAST(count(*) AS BIGINT) AS n_probe,
        |    CAST(sum(a.vec_id) AS BIGINT) AS probe_id_sum
        |  FROM probes p JOIN a ON a.cell = p.cell
@@ -2326,22 +2335,20 @@ object QueriesSim {
        |  GROUP BY 1),
        |ex AS (SELECT q.qid, CAST(count(*) AS BIGINT) AS n_exact,
        |    CAST(sum(a.vec_id) AS BIGINT) AS exact_id_sum
-       |  FROM (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 5) q
-       |    JOIN a ON a.vec_id <> q.qid
+       |  FROM qd q JOIN a ON a.vec_id <> q.qid
        |      AND list_cosine_similarity(q.qv, a.v) >= CAST(0.3 AS DOUBLE)
-       |  GROUP BY 1),
-       |qs AS (SELECT qid FROM qd)
-       |SELECT qs.qid,
+       |  GROUP BY 1)
+       |SELECT qd.qid,
        |  coalesce(ex.n_exact, 0) AS n_exact,
        |  coalesce(ex.exact_id_sum, 0) AS exact_id_sum,
        |  coalesce(hits.n_probe, 0) AS n_probe,
        |  coalesce(hits.probe_id_sum, 0) AS probe_id_sum,
        |  CAST((coalesce(hits.n_probe, 0) * 1000000)
        |    // greatest(coalesce(ex.n_exact, 0), 1) AS BIGINT) AS recall6
-       |FROM qs
-       |LEFT JOIN ex ON ex.qid = qs.qid
-       |LEFT JOIN hits ON hits.qid = qs.qid
-       |ORDER BY qs.qid""".stripMargin
+       |FROM qd
+       |LEFT JOIN ex ON ex.qid = qd.qid
+       |LEFT JOIN hits ON hits.qid = qd.qid
+       |ORDER BY qd.qid""".stripMargin
   }
 
   /** ivf_retrain_trigger's twin: refit the sampled quantizer, inline the 8
@@ -2353,26 +2360,16 @@ object QueriesSim {
     * on ties). The +2.0 drift is CAST AS DOUBLE (a bare 2.0 parses as
     * DECIMAL; CLAUDE.md invariant) and exact in IEEE, so both engines
     * transform bit-identically. */
-  private def ivfRetrainOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+  private def ivfRetrainOracle(s: SparkSession, dir: String): String = {
+    val cents = coarseCents(vectors(s, dir))
     val k = cents.length
-    val dDefs = cents.zipWithIndex.map { case (c, i) =>
-      s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
-    val dcols = (0 until k).map(i => s"d$i")
-    val leastD = s"least(${dcols.mkString(", ")})"
+    val d2u = s",\n    CAST(floor(least(${distCols(k).mkString(", ")}) * 1e6 + 0.5) AS BIGINT) AS d2u"
     // one block per batch: assignment, occupancy/qerr aggregates, and the
     // nprobe=3 / top-10 panel recall against exact truth over corpus ∪ batch
     def batchBlock(tag: String, off: Long, vExpr: String): String =
-      s"""${tag} AS (SELECT vec_id + $off AS vec_id, $vExpr AS v
+      s"""$tag AS (SELECT vec_id + $off AS vec_id, $vExpr AS v
          |  FROM e WHERE vec_id % 5 = 0),
-         |${tag}d AS (SELECT vec_id, v,
-         |    $dDefs
-         |  FROM $tag),
-         |${tag}a AS MATERIALIZED (SELECT vec_id, v, ${argminCaseSql(dcols)} AS cell,
-         |    CAST(floor($leastD * 1e6 + 0.5) AS BIGINT) AS d2u FROM ${tag}d),
+         |${assignCtes(cents, tag, extra = d2u, d = s"${tag}d", a = s"${tag}a")},
          |${tag}occ AS (SELECT cells.cell, coalesce(z.n, 0) AS bn FROM cells
          |  LEFT JOIN (SELECT cell, CAST(count(*) AS BIGINT) AS n
          |             FROM ${tag}a GROUP BY 1) z USING (cell)),
@@ -2387,37 +2384,14 @@ object QueriesSim {
          |  FROM ${tag}occ JOIN cocc USING (cell) CROSS JOIN ${tag}tot CROSS JOIN ctot),
          |${tag}idx AS MATERIALIZED (SELECT vec_id, v, cell FROM ca
          |  UNION ALL SELECT vec_id, v, cell FROM ${tag}a),
-         |${tag}q AS MATERIALIZED (SELECT vec_id AS qid, v AS qv, ${dcols.mkString(", ")}
-         |  FROM ${tag}d WHERE vec_id < ${off + 25L}),
-         |${tag}qc AS (SELECT qid, qv, u.cell,
-         |    CASE u.cell ${(0 until k).map(i => s"WHEN $i THEN d$i").mkString(" ")} END AS dist
-         |  FROM ${tag}q CROSS JOIN cells u),
-         |${tag}probes AS (SELECT qid, qv, cell FROM (
-         |  SELECT qid, qv, cell,
-         |    row_number() OVER (PARTITION BY qid ORDER BY dist, cell) AS rn
-         |  FROM ${tag}qc) WHERE rn <= 3),
-         |${tag}ivf AS (SELECT qid, vec_id FROM (
-         |  SELECT p.qid, i.vec_id,
-         |    row_number() OVER (PARTITION BY p.qid
-         |      ORDER BY list_cosine_similarity(p.qv, i.v) DESC, i.vec_id) AS rn
-         |  FROM ${tag}probes p JOIN ${tag}idx i ON i.cell = p.cell) z
-         |  WHERE rn <= 10),
-         |${tag}tr AS (SELECT qid, vec_id FROM (
-         |  SELECT q.qid, i.vec_id,
-         |    row_number() OVER (PARTITION BY q.qid
-         |      ORDER BY list_cosine_similarity(q.qv, i.v) DESC, i.vec_id) AS rn
-         |  FROM (SELECT qid, qv FROM ${tag}q) q CROSS JOIN ${tag}idx i) z
-         |  WHERE rn <= 10),
+         |${probeCtes(k, s"${tag}d", s"vec_id < ${off + 25L}", 3, tag)},
+         |${tag}ivf AS (${topKSql(s"${tag}probes q JOIN ${tag}idx x ON x.cell = q.cell", 10)}),
+         |${tag}tr AS (${topKSql(s"${tag}qd q CROSS JOIN ${tag}idx x", 10)}),
          |${tag}rec AS (SELECT CAST((count(*) * 1000000)
-         |    // (10 * (SELECT count(*) FROM ${tag}q)) AS BIGINT) AS recall6
+         |    // (10 * (SELECT count(*) FROM ${tag}qd)) AS BIGINT) AS recall6
          |  FROM ${tag}ivf JOIN ${tag}tr USING (qid, vec_id))""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |cd AS (SELECT vec_id, v,
-       |    $dDefs
-       |  FROM e),
-       |ca AS MATERIALIZED (SELECT vec_id, v, ${argminCaseSql(dcols)} AS cell,
-       |    CAST(floor($leastD * 1e6 + 0.5) AS BIGINT) AS d2u FROM cd),
+    s"""WITH e AS ($vectorsSql),
+       |${assignCtes(cents, "e", extra = d2u, d = "cd", a = "ca")},
        |cells AS (SELECT unnest(range(0, $k)) AS cell),
        |cocc AS MATERIALIZED (SELECT cells.cell, coalesce(z.n, 0) AS cn FROM cells
        |  LEFT JOIN (SELECT cell, CAST(count(*) AS BIGINT) AS n
@@ -2441,52 +2415,19 @@ object QueriesSim {
     * filtered-probe / post-filter / exact-filtered-truth top-10s with the
     * same `label % 3 = 0` predicate — every output column is an exact
     * BIGINT (hit counts and µ-unit recalls), so the compare is bit-exact. */
-  private def simFilteredOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings")
-      .where(col("embedding").isNotNull && col("label").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-    val k = cents.length
-    val dDefs = cents.zipWithIndex.map { case (c, i) =>
-      s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
-    val dcols = (0 until k).map(i => s"d$i")
+  private def simFilteredOracle(s: SparkSession, dir: String): String = {
+    val cents = coarseCents(labeledVectors(s, dir))
     s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
        |  FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL),
-       |d AS (SELECT vec_id, label, v,
-       |    $dDefs
-       |  FROM e),
-       |a AS MATERIALIZED (SELECT vec_id, label, v,
-       |  ${argminCaseSql(dcols)} AS cell FROM d),
-       |qd AS (SELECT vec_id AS qid, v AS qv, ${dcols.mkString(", ")}
-       |  FROM d WHERE vec_id < 5),
-       |qc AS (SELECT qid, qv, u.cell,
-       |    CASE u.cell ${(0 until k).map(i => s"WHEN $i THEN d$i").mkString(" ")} END AS dist
-       |  FROM qd CROSS JOIN (SELECT unnest(range(0, $k)) AS cell) u),
-       |probes AS MATERIALIZED (SELECT qid, qv, cell FROM (
-       |  SELECT qid, qv, cell,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dist, cell) AS rn FROM qc)
-       |  WHERE rn <= 3),
-       |fil AS MATERIALIZED (SELECT qid, vec_id FROM (
-       |  SELECT p.qid, a.vec_id,
-       |    row_number() OVER (PARTITION BY p.qid
-       |      ORDER BY list_cosine_similarity(p.qv, a.v) DESC, a.vec_id) AS rn
-       |  FROM probes p JOIN a ON a.cell = p.cell AND a.label % 3 = 0) z
-       |  WHERE rn <= 10),
-       |post AS MATERIALIZED (SELECT qid, vec_id FROM (
-       |  SELECT p.qid, a.vec_id, a.label,
-       |    row_number() OVER (PARTITION BY p.qid
-       |      ORDER BY list_cosine_similarity(p.qv, a.v) DESC, a.vec_id) AS rn
-       |  FROM probes p JOIN a ON a.cell = p.cell) z
-       |  WHERE rn <= 10 AND label % 3 = 0),
-       |truth AS MATERIALIZED (SELECT qid, vec_id FROM (
-       |  SELECT q.qid, a.vec_id,
-       |    row_number() OVER (PARTITION BY q.qid
-       |      ORDER BY list_cosine_similarity(q.qv, a.v) DESC, a.vec_id) AS rn
-       |  FROM (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 5) q
-       |    JOIN a ON a.label % 3 = 0) z WHERE rn <= 10),
-       |qs AS (SELECT qid FROM qd)
-       |SELECT qs.qid,
+       |${assignCtes(cents, "e", keep = "vec_id, label, v")},
+       |${probeCtes(cents.length, "d", "vec_id < 5", 3)},
+       |fil AS MATERIALIZED (
+       |${topKSql("probes q JOIN a x ON x.cell = q.cell AND x.label % 3 = 0", 10)}),
+       |post AS MATERIALIZED (SELECT t.qid, t.vec_id FROM (
+       |${topKSql("probes q JOIN a x ON x.cell = q.cell", 10)}) t
+       |  JOIN a ON a.vec_id = t.vec_id WHERE a.label % 3 = 0),
+       |truth AS MATERIALIZED (${topKSql("qd q JOIN a x ON x.label % 3 = 0", 10)})
+       |SELECT qd.qid,
        |  coalesce(t.c, 0) AS n_truth,
        |  coalesce(f.c, 0) AS n_filtered,
        |  coalesce(fh.c, 0) AS filtered_hits,
@@ -2496,52 +2437,18 @@ object QueriesSim {
        |    // greatest(coalesce(t.c, 0), 1) AS BIGINT) AS recall_filtered6,
        |  CAST((coalesce(ph.c, 0) * 1000000)
        |    // greatest(coalesce(t.c, 0), 1) AS BIGINT) AS recall_post6
-       |FROM qs
+       |FROM qd
        |LEFT JOIN (SELECT qid, CAST(count(*) AS BIGINT) AS c
-       |  FROM truth GROUP BY 1) t ON t.qid = qs.qid
+       |  FROM truth GROUP BY 1) t ON t.qid = qd.qid
        |LEFT JOIN (SELECT qid, CAST(count(*) AS BIGINT) AS c
-       |  FROM fil GROUP BY 1) f ON f.qid = qs.qid
+       |  FROM fil GROUP BY 1) f ON f.qid = qd.qid
        |LEFT JOIN (SELECT fil.qid, CAST(count(*) AS BIGINT) AS c
-       |  FROM fil JOIN truth USING (qid, vec_id) GROUP BY 1) fh ON fh.qid = qs.qid
+       |  FROM fil JOIN truth USING (qid, vec_id) GROUP BY 1) fh ON fh.qid = qd.qid
        |LEFT JOIN (SELECT post.qid, CAST(count(*) AS BIGINT) AS c
-       |  FROM post GROUP BY 1) p ON p.qid = qs.qid
+       |  FROM post GROUP BY 1) p ON p.qid = qd.qid
        |LEFT JOIN (SELECT post.qid, CAST(count(*) AS BIGINT) AS c
-       |  FROM post JOIN truth USING (qid, vec_id) GROUP BY 1) ph ON ph.qid = qs.qid
-       |ORDER BY qs.qid""".stripMargin
-  }
-
-  private def ivfSearchOracle(s: org.apache.spark.sql.SparkSession, dir: String,
-                              corpusSql: String): String = {
-    import graft.operators.Ivf
-    // NULL filter matches the declared sim_ivf_kmeans/sim_ivf_append queries:
-    // the trainer must see the same first-N id-ordered sample as the Spark side
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-    val k = cents.length
-    val dDefs = cents.zipWithIndex.map { case (c, i) =>
-      s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
-    val dcols = (0 until k).map(i => s"d$i")
-    s"""WITH e AS ($corpusSql),
-       |d AS (SELECT vec_id, v,
-       |    $dDefs
-       |  FROM e),
-       |a AS (SELECT vec_id, v, ${argminCaseSql(dcols)} AS cell FROM d),
-       |qd AS (SELECT vec_id AS qid, v AS qv, ${dcols.mkString(", ")}
-       |  FROM d WHERE vec_id < 5),
-       |qc AS (SELECT qid, qv, u.cell,
-       |    CASE u.cell ${(0 until k).map(i => s"WHEN $i THEN d$i").mkString(" ")} END AS dist
-       |  FROM qd CROSS JOIN (SELECT unnest(range(0, $k)) AS cell) u),
-       |probes AS (SELECT qid, qv, cell FROM (
-       |  SELECT qid, qv, cell,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dist, cell) AS rn FROM qc)
-       |  WHERE rn <= 3)
-       |SELECT qid, vec_id, round(c, 6) AS cos, CAST(rn AS BIGINT) AS rank FROM (
-       |  SELECT qid, vec_id, c,
-       |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, vec_id) AS rn
-       |  FROM (SELECT p.qid, a.vec_id, list_cosine_similarity(p.qv, a.v) AS c
-       |    FROM a JOIN probes p ON a.cell = p.cell))
-       |WHERE rn <= 10 ORDER BY qid, rank""".stripMargin
+       |  FROM post JOIN truth USING (qid, vec_id) GROUP BY 1) ph ON ph.qid = qd.qid
+       |ORDER BY qd.qid""".stripMargin
   }
 
   /** ann_nprobe_sweep's twin: refit the sampled trainer, inline the 8
@@ -2549,38 +2456,17 @@ object QueriesSim {
     * ranks, brute-force the truth top-10, and reproduce each nprobe
     * level's recall with the same (dist, cell) / (cos DESC, vec_id)
     * determinism. */
-  private def nprobeSweepOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
+  private def nprobeSweepOracle(s: SparkSession, dir: String): String = {
+    val cents = coarseCents(vectors(s, dir))
     val k = cents.length
-    val dDefs = cents.zipWithIndex.map { case (c, i) =>
-      s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
-    val dcols = (0 until k).map(i => s"d$i")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |  WHERE embedding IS NOT NULL),
-       |d AS (SELECT vec_id, v,
-       |    $dDefs
-       |  FROM e),
-       |a AS MATERIALIZED (SELECT vec_id, v, ${argminCaseSql(dcols)} AS cell FROM d),
-       |qd AS (SELECT vec_id AS qid, v AS qv, ${dcols.mkString(", ")}
-       |  FROM d WHERE vec_id < 5),
-       |qc AS (SELECT qid, qv, u.cell,
-       |    CASE u.cell ${(0 until k).map(i => s"WHEN $i THEN d$i").mkString(" ")} END AS dist
-       |  FROM qd CROSS JOIN (SELECT unnest(range(0, $k)) AS cell) u),
-       |pr AS MATERIALIZED (SELECT qid, qv, cell,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dist, cell) AS crank FROM qc),
-       |truth AS MATERIALIZED (SELECT qid, vec_id FROM (
-       |  SELECT q.qid, a.vec_id,
-       |    row_number() OVER (PARTITION BY q.qid
-       |      ORDER BY list_cosine_similarity(q.qv, a.v) DESC, a.vec_id) AS rn
-       |  FROM a CROSS JOIN (SELECT qid, qv FROM qd) q WHERE a.vec_id <> q.qid)
-       |  WHERE rn <= 10),
+    s"""WITH e AS ($vectorsSql),
+       |${assignCtes(cents, "e")},
+       |${probeCtes(k, "d", "vec_id < 5", k)},
+       |truth AS MATERIALIZED (${topKSql("a x CROSS JOIN qd q WHERE x.vec_id <> q.qid", 10)}),
        |tt AS (SELECT CAST(count(*) AS BIGINT) AS possible FROM truth),
        |cand AS MATERIALIZED (SELECT p.qid, p.crank, a.vec_id,
        |    list_cosine_similarity(p.qv, a.v) AS c
-       |  FROM a JOIN pr p ON a.cell = p.cell WHERE a.vec_id <> p.qid),
+       |  FROM a JOIN probes p ON a.cell = p.cell WHERE a.vec_id <> p.qid),
        |nps(np) AS (VALUES (1), (2), (4), (8)),
        |lev AS (SELECT np, qid, vec_id FROM (
        |  SELECT n.np, cand.qid, cand.vec_id,
@@ -2596,31 +2482,17 @@ object QueriesSim {
        |FROM nps n LEFT JOIN h ON h.np = n.np CROSS JOIN tt ORDER BY nprobe""".stripMargin
   }
 
-  /** semdedup's twin: recompute the SAME data-dependent (k, offset) via
-    * semdedupParams, refit the sampled trainer, assign corpus ∪ planted
-    * copies via the inlined argmin distance chains, and reproduce the
-    * within-cell lower-id cosine prune with list_cosine_similarity (the
-    * sim_topk-pinned pair of SimFns.cosine). */
-  private def semdedupOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val (kk, off) = semdedupParams(e)
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding",
-      k = kk, sampleN = math.max(2048, 8 * kk))
-    val k = cents.length
-    val dDefs = cents.zipWithIndex.map { case (c, i) =>
-      s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
-    val dcols = (0 until k).map(i => s"d$i")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |    WHERE embedding IS NOT NULL
+  /** semdedup's twin: refit the SAME data-sized model via semdedupFit,
+    * assign corpus ∪ planted copies via the inlined argmin distance chains,
+    * and reproduce the within-cell lower-id cosine prune with
+    * list_cosine_similarity (the sim_topk-pinned pair of SimFns.cosine). */
+  private def semdedupOracle(s: SparkSession, dir: String): String = {
+    val (cents, off) = semdedupFit(vectors(s, dir))
+    s"""WITH e AS ($vectorsSql
        |  UNION ALL
        |  SELECT vec_id + $off, CAST(embedding AS DOUBLE[]) FROM embeddings
        |    WHERE vec_id % 25 = 0 AND embedding IS NOT NULL),
-       |d AS (SELECT vec_id, v,
-       |    $dDefs
-       |  FROM e),
-       |a AS MATERIALIZED (SELECT vec_id, v, ${argminCaseSql(dcols)} AS cell FROM d),
+       |${assignCtes(cents, "e")},
        |dropped AS (SELECT DISTINCT b.cell, b.vec_id AS did
        |  FROM a x JOIN a b ON x.cell = b.cell AND x.vec_id < b.vec_id
        |  WHERE list_cosine_similarity(x.v, b.v) > 0.95),
@@ -2637,23 +2509,12 @@ object QueriesSim {
     * centroids, and reproduce (d₁, cell, d₂) with least / argmin-CASE /
     * list_sort — tie semantics match the Spark struct-sort (lower cell
     * wins; a tied d₂ equals d₁ either way, so sil agrees bit-for-bit). */
-  private def silhouetteOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-    val k = cents.length
-    val dDefs = cents.zipWithIndex.map { case (c, i) =>
-      s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
-    val dcols = (0 until k).map(i => s"d$i")
-    s"""WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |  WHERE embedding IS NOT NULL),
-       |d AS (SELECT
-       |    $dDefs
-       |  FROM e),
-       |a AS (SELECT ${argminCaseSql(dcols)} AS cell,
-       |    least(${dcols.mkString(", ")}) AS d1,
-       |    list_sort([${dcols.mkString(", ")}])[2] AS d2 FROM d),
+  private def silhouetteOracle(s: SparkSession, dir: String): String = {
+    val cents = coarseCents(vectors(s, dir))
+    val dcols = distCols(cents.length).mkString(", ")
+    val d12 = s", least($dcols) AS d1,\n    list_sort([$dcols])[2] AS d2"
+    s"""WITH e AS ($vectorsSql),
+       |${assignCtes(cents, "e", keep = "vec_id", extra = d12)},
        |sil AS (SELECT cell, d1,
        |    CASE WHEN greatest(d1, d2) > 0 THEN (d2 - d1) / greatest(d1, d2)
        |      ELSE 0.0 END AS sil FROM a)
@@ -2665,146 +2526,51 @@ object QueriesSim {
        |FROM sil GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  private def pqOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-    val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
-    val m = books.length
-    val sub = books.map(_.head.length).sum / m
-    // per-subspace code assignment: 16 literal-centroid distances + argmin
-    val dDefs = books.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (cent, c) =>
-        s"${l2ChainSql("v", cent, off = j * sub)} AS d${j}_$c" }
-    }.mkString(",\n    ")
-    val codeDefs = (0 until m).map { j =>
-      s"${argminCaseSql(books(j).indices.map(c => s"d${j}_$c"))} AS c$j"
-    }.mkString(",\n    ")
-    // query-side ADC tables as literal 16-element arrays, dist2 summed in
-    // ascending-j order (matching Pq.search's posexplode-order partial agg)
-    val qs = e.where(col("vec_id") < 5)
-      .select(col("vec_id"), SimFns.toDouble(col("embedding")))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val distCases = qs.map { case (qid, qv) =>
-      val byJC = Pq.adcTable(qv, books).map { case (j, c, d) => (j, c) -> d }.toMap
-      val chain = (0 until m).map { j =>
-        val arr = books(j).indices.map(c => byJC((j, c))).mkString("[", ", ", "]")
-        s"($arr)[c$j + 1]"
-      }.mkString(" + ")
-      s"WHEN $qid THEN $chain"
-    }.mkString("\n      ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |  WHERE embedding IS NOT NULL),
-       |d AS (SELECT vec_id,
-       |    $dDefs
-       |  FROM e),
-       |enc AS (SELECT vec_id,
-       |    $codeDefs
-       |  FROM d),
-       |ad AS (SELECT q.qid, enc.vec_id,
-       |    CASE q.qid
-       |      $distCases
-       |    END AS dd
-       |  FROM enc CROSS JOIN (SELECT unnest([${qs.map(_._1).mkString(", ")}]) AS qid) q)
-       |SELECT CAST(qid AS BIGINT) AS qid, vec_id, round(dd, 6) AS dist2,
-       |  CAST(rn AS BIGINT) AS rank FROM (
-       |  SELECT qid, vec_id, dd,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dd, vec_id) AS rn FROM ad)
-       |WHERE rn <= 10 ORDER BY qid, rank""".stripMargin
+  /** sim_pq's twin: refit the raw codebooks, encode the corpus with the
+    * inlined codeword chains, and score every vector for each panel query
+    * with the query's literal ADC table. */
+  private def pqOracle(s: SparkSession, dir: String): String = {
+    val e = vectors(s, dir)
+    val books = rawPqBooks(e)
+    val qs = queryPanel(e)
+    val cases = qs.toSeq.map { case (qid, qv) => (s"p.qid = $qid", qv) }
+    val from = s"enc CROSS JOIN (SELECT unnest([${qs.map(_._1).mkString(", ")}]) AS qid) p"
+    s"""WITH e AS ($vectorsSql),
+       |${pqEncodeCtes(books, "v", "vec_id", "e")},
+       |${adcTopSql(cases, books, from)}""".stripMargin
   }
 
   /** sim_ivfpq's twin: BOTH trained models refit at dump time — the 8
-    * coarse centroids select the probe cells (ivfSearchOracle's chains +
-    * argmin-CASE) and the 8×16 codebooks encode + ADC-score the candidates
-    * (pqOracle's chains + literal tables). Candidates are the probe-cell
-    * join; each vector has exactly one cell so the join cannot duplicate
-    * a (qid, vec_id) pair. `corpusSql` parameterizes WHICH vectors are
-    * indexed (sim_ivfpq_append unions the planted batch) while the models
-    * ALWAYS refit on the natural corpus — the frozen-model contract. */
-  private def ivfpqOracle(s: org.apache.spark.sql.SparkSession, dir: String,
-      corpusSql: String =
-        """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-          |  WHERE embedding IS NOT NULL""".stripMargin): String = {
-    import graft.operators.Ivf
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val cents = Ivf.trainSampled(e, "vec_id", "embedding", k = 8)
-    val books = Pq.train(e, "vec_id", "embedding", m = 8, k = 16)
-    val k = cents.length
-    val m = books.length
-    val sub = books.map(_.head.length).sum / m
-    val cellDefs = cents.zipWithIndex.map { case (c, i) =>
-      s"${l2ChainSql("v", c)} AS cd$i" }.mkString(",\n    ")
-    val cellCols = (0 until k).map(i => s"cd$i")
-    val pqDefs = books.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (cent, c) =>
-        s"${l2ChainSql("v", cent, off = j * sub)} AS d${j}_$c" }
-    }.mkString(",\n    ")
-    val codeDefs = (0 until m).map { j =>
-      s"${argminCaseSql(books(j).indices.map(c => s"d${j}_$c"))} AS c$j"
-    }.mkString(",\n    ")
-    val qs = e.where(col("vec_id") < 5)
-      .select(col("vec_id"), SimFns.toDouble(col("embedding")))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val distCases = qs.map { case (qid, qv) =>
-      val byJC = Pq.adcTable(qv, books).map { case (j, c, d) => (j, c) -> d }.toMap
-      val chain = (0 until m).map { j =>
-        val arr = books(j).indices.map(c => byJC((j, c))).mkString("[", ", ", "]")
-        s"($arr)[c$j + 1]"
-      }.mkString(" + ")
-      s"WHEN $qid THEN $chain"
-    }.mkString("\n      ")
+    * coarse centroids assign the corpus and pick each query's 3 probe
+    * cells, and the 8×16 codebooks encode + ADC-score the candidates.
+    * Candidates are the probe-cell join; each vector has exactly one cell
+    * so the join cannot duplicate a (qid, vec_id) pair. `corpusSql`
+    * parameterizes WHICH vectors are indexed (sim_ivfpq_append unions the
+    * planted batch) while the models ALWAYS refit on the natural corpus —
+    * the frozen-model contract. */
+  private def ivfpqOracle(s: SparkSession, dir: String, corpusSql: String = vectorsSql): String = {
+    val e = vectors(s, dir)
+    val cents = coarseCents(e)
+    val books = rawPqBooks(e)
+    val cases = queryPanel(e).toSeq.map { case (qid, qv) => (s"p.qid = $qid", qv) }
     s"""WITH e AS ($corpusSql),
-       |cd AS (SELECT vec_id, v,
-       |    $cellDefs
-       |  FROM e),
-       |a AS (SELECT vec_id, v, ${argminCaseSql(cellCols)} AS cell FROM cd),
-       |d AS (SELECT vec_id, cell,
-       |    $pqDefs
-       |  FROM a),
-       |enc AS (SELECT vec_id, cell,
-       |    $codeDefs
-       |  FROM d),
-       |qd AS (SELECT vec_id AS qid, ${cellCols.mkString(", ")}
-       |  FROM cd WHERE vec_id < 5),
-       |qc AS (SELECT qid, u.cell,
-       |    CASE u.cell ${(0 until k).map(i => s"WHEN $i THEN cd$i").mkString(" ")} END AS dist
-       |  FROM qd CROSS JOIN (SELECT unnest(range(0, $k)) AS cell) u),
-       |probes AS (SELECT qid, cell FROM (
-       |  SELECT qid, cell,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dist, cell) AS rn FROM qc)
-       |  WHERE rn <= 3),
-       |ad AS (SELECT p.qid, enc.vec_id,
-       |    CASE p.qid
-       |      $distCases
-       |    END AS dd
-       |  FROM enc JOIN probes p ON enc.cell = p.cell)
-       |SELECT CAST(qid AS BIGINT) AS qid, vec_id, round(dd, 6) AS dist2,
-       |  CAST(rn AS BIGINT) AS rank FROM (
-       |  SELECT qid, vec_id, dd,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dd, vec_id) AS rn FROM ad)
-       |WHERE rn <= 10 ORDER BY qid, rank""".stripMargin
+       |${assignCtes(cents, "e")},
+       |${pqEncodeCtes(books, "v", "vec_id, cell", "a")},
+       |${probeCtes(cents.length, "d", "vec_id < 5", 3)},
+       |${adcTopSql(cases, books, "enc JOIN probes p ON enc.cell = p.cell")}""".stripMargin
   }
 
   /** kcenter_coreset's twin: refit the shared greedy (pure function of the
     * first-256 sample), inline the 8 centers as literal distance chains,
     * assign with the argmin-CASE, fold the card exactly as the query does
     * (cluster_silhouette's micro-unit BIGINT mean + order-independent max). */
-  private def kcenterOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+  private def kcenterOracle(s: SparkSession, dir: String): String = {
     val centers = kcenterFit(s, dir)
-    val k = centers.length
-    val dDefs = centers.zipWithIndex.map { case ((_, c), i) =>
-      s"${l2ChainSql("v", c)} AS d$i" }.mkString(",\n    ")
-    val dcols = (0 until k).map(i => s"d$i")
+    val d1 = s", least(${distCols(centers.length).mkString(", ")}) AS d1"
     val idCase = s"CASE cell ${centers.zipWithIndex
       .map { case ((id, _), i) => s"WHEN $i THEN $id" }.mkString(" ")} END"
-    s"""WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |  WHERE embedding IS NOT NULL),
-       |d AS (SELECT
-       |    $dDefs
-       |  FROM e),
-       |a AS (SELECT ${argminCaseSql(dcols)} AS cell,
-       |    least(${dcols.mkString(", ")}) AS d1 FROM d)
+    s"""WITH e AS ($vectorsSql),
+       |${assignCtes(centers.map(_._2), "e", keep = "vec_id", extra = d1)}
        |SELECT $idCase AS center_id, CAST(cell + 1 AS BIGINT) AS step,
        |  CAST(count(*) AS BIGINT) AS n_vecs,
        |  round(CAST(sum(CAST(floor(d1 * 1e6 + 0.5) AS BIGINT)) AS DOUBLE)
@@ -2818,75 +2584,32 @@ object QueriesSim {
     * elementwise subtract (list_transform over a CASE-indexed literal
     * centroid — bit-identical to the Spark zip_with), encode with PQ chains
     * over rv, and score candidates with the per-(query, probed-cell)
-    * residual ADC arrays inlined as literals. */
-  private def ivfpqResidualOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val (cents, books, _) = ivfpqResidualParts(s, dir)
-    val (probes, luts) = ivfpqResidualLuts(s, dir, cents, books)
-    val k = cents.length
-    val dim = cents.head.length
-    val m = books.length
-    val sub = dim / m
-    val cellDefs = cents.zipWithIndex.map { case (c, i) =>
-      s"${l2ChainSql("v", c)} AS cd$i" }.mkString(",\n    ")
-    val cellCols = (0 until k).map(i => s"cd$i")
+    * residual ADC tables inlined as literals. */
+  private def ivfpqResidualOracle(s: SparkSession, dir: String): String = {
+    val e = vectors(s, dir)
+    val (cents, books, _) = ivfpqResidualParts(e)
+    val probes = ivfpqResidualProbes(e, cents)
     val centCase = s"CASE cell ${cents.zipWithIndex.map { case (c, i) =>
       s"WHEN $i THEN ${c.mkString("[", ", ", "]")}" }.mkString(" ")} END"
-    val pqDefs = books.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (cent, c) =>
-        s"${l2ChainSql("rv", cent, off = j * sub)} AS d${j}_$c" }
-    }.mkString(",\n    ")
-    val codeDefs = (0 until m).map { j =>
-      s"${argminCaseSql(books(j).indices.map(c => s"d${j}_$c"))} AS c$j"
-    }.mkString(",\n    ")
-    val byQC = luts.groupBy(x => (x._1, x._2))
-    val ddCases = probes.map { case (qid, cell) =>
-      val d = byQC((qid, cell)).map(x => ((x._3, x._4), x._5)).toMap
-      val chain = (0 until m).map { j =>
-        val arr = (0 until books(j).length).map(c => d((j, c))).mkString("[", ", ", "]")
-        s"($arr)[c$j + 1]"
-      }.mkString(" + ")
-      s"WHEN p.qid = $qid AND enc.cell = $cell THEN $chain"
-    }.mkString("\n      ")
-    val probeValues = probes.map { case (q, c) => s"($q, $c)" }.mkString(", ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |  WHERE embedding IS NOT NULL),
-       |cd AS (SELECT vec_id, v,
-       |    $cellDefs
-       |  FROM e),
-       |a AS (SELECT vec_id, v, ${argminCaseSql(cellCols)} AS cell FROM cd),
+    val probeValues = probes.map { case (q, c, _) => s"($q, $c)" }.mkString(", ")
+    val cases = probes.map { case (q, c, rq) => (s"p.qid = $q AND enc.cell = $c", rq) }
+    s"""WITH e AS ($vectorsSql),
+       |${assignCtes(cents, "e")},
        |rvt AS (SELECT vec_id, cell,
-       |    list_transform(range(1, ${dim + 1}), i -> v[i] - ($centCase)[i]) AS rv
+       |    list_transform(range(1, ${cents.head.length + 1}), i -> v[i] - ($centCase)[i]) AS rv
        |  FROM a),
-       |d AS (SELECT vec_id, cell,
-       |    $pqDefs
-       |  FROM rvt),
-       |enc AS (SELECT vec_id, cell,
-       |    $codeDefs
-       |  FROM d),
-       |p(qid, cell) AS (VALUES $probeValues),
-       |ad AS (SELECT p.qid, enc.vec_id,
-       |    CASE
-       |      $ddCases
-       |    END AS dd
-       |  FROM enc JOIN p ON enc.cell = p.cell)
-       |SELECT CAST(qid AS BIGINT) AS qid, vec_id, round(dd, 6) AS dist2,
-       |  CAST(rn AS BIGINT) AS rank FROM (
-       |  SELECT qid, vec_id, dd,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dd, vec_id) AS rn FROM ad)
-       |WHERE rn <= 10 ORDER BY qid, rank""".stripMargin
+       |${pqEncodeCtes(books, "rv", "vec_id, cell", "rvt")},
+       |rp(qid, cell) AS (VALUES $probeValues),
+       |${adcTopSql(cases, books, "enc JOIN rp p ON enc.cell = p.cell")}""".stripMargin
   }
 
-  private def pcaOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import graft.operators.Pca
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val (mu, comps) = Pca.fitSampled(e, "vec_id", "embedding")
+  private def pcaOracle(s: SparkSession, dir: String): String = {
+    val (mu, comps) = graft.operators.Pca.fitSampled(vectors(s, dir), "vec_id", "embedding")
     val muLit = mu.mkString("[", ", ", "]")
     def wLit(w: Array[Double]) = w.mkString("[", ", ", "]")
     // list_dot_product folds sequentially like SimFns.dot (sim_lsh
     // precedent); centering subtracts literal-list elements in index order
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |  WHERE embedding IS NOT NULL),
+    s"""WITH e AS ($vectorsSql),
        |c AS (SELECT vec_id,
        |    list_transform(range(1, ${mu.length + 1}), i -> v[i] - ($muLit)[i]) AS cv
        |  FROM e)
@@ -2896,20 +2619,14 @@ object QueriesSim {
        |FROM c ORDER BY vec_id""".stripMargin
   }
 
-  /** embed_whitening's twin: refit the identical PCA (bit-reproducible
-    * driver fit), pre-scale the component rows by 1/√λ on the driver, and
+  /** embed_whitening's twin: refit the identical model (whiteningFit — the
+    * bit-reproducible driver fit with the rows pre-scaled by 1/√λ), and
     * replay the µ-quantize-then-integer-fold statistics; list_dot_product
     * folds sequentially like SimFns.dot (the pcaOracle precedent), and
     * truncated integer division matches Spark DIV on negative sums
     * (probed: DuckDB -7//2 = -3). */
-  private def whiteningOracle(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import graft.operators.Pca
-    val e = t(s, dir, "embeddings").where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-    val (mu, comps, lams) = Pca.fitSampledFull(e, "vec_id", "embedding", nComponents = 4)
-    val rows = comps.zip(lams).map { case (w, l) =>
-      val s2 = math.sqrt(l); w.map(_ / s2) }
-    val eig6 = lams.map(l => math.floor(l * 1e6 + 0.5).toLong)
+  private def whiteningOracle(s: SparkSession, dir: String): String = {
+    val (mu, rows, eig6) = whiteningFit(vectors(s, dir))
     val muLit = mu.mkString("[", ", ", "]")
     def wLit(w: Array[Double]) = w.mkString("[", ", ", "]")
     val wDefs = rows.zipWithIndex.map { case (r, i) =>
@@ -2917,8 +2634,7 @@ object QueriesSim {
     }.mkString(",\n    ")
     val evVals = eig6.zipWithIndex.map { case (v, i) =>
       s"(CAST($i AS BIGINT), CAST($v AS BIGINT))" }.mkString(", ")
-    s"""WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |  WHERE embedding IS NOT NULL),
+    s"""WITH e AS ($vectorsSql),
        |c AS (SELECT list_transform(range(1, ${mu.length + 1}), i -> v[i] - ($muLit)[i]) AS cv
        |  FROM e),
        |w AS MATERIALIZED (SELECT
@@ -2954,11 +2670,14 @@ object QueriesSim {
                 s"(degrading to rows-only): ${e.getMessage}")
             None
         }
-      (tryGen("sim_ivf_kmeans", ivfKmeansOracle(s, dir)) ++
-        tryGen("sim_ivf_append", ivfAppendOracle(s, dir)) ++
+      (tryGen("sim_ivf_kmeans", ivfSearchOracle(s, dir, vectorsSql)) ++
+        // the append card searches corpus ∪ batch with the SAME
+        // corpus-trained quantizer: ground truth is a full recompute over
+        // the union, which the snapshot-union index must reproduce exactly
+        tryGen("sim_ivf_append", ivfSearchOracle(s, dir, appendedSql)) ++
         // compaction must search EXACTLY like the snapshot union, so its
         // oracle IS the append oracle (full recompute over corpus ∪ batch)
-        tryGen("ivf_compact", ivfAppendOracle(s, dir)) ++
+        tryGen("ivf_compact", ivfSearchOracle(s, dir, appendedSql)) ++
         tryGen("ivf_delete", ivfDeleteOracle(s, dir)) ++
         tryGen("ivf_retrain_trigger", ivfRetrainOracle(s, dir)) ++
         tryGen("sim_filtered", simFilteredOracle(s, dir)) ++
@@ -2967,12 +2686,7 @@ object QueriesSim {
         tryGen("maxsim_pq", maxsimPqOracle(s, dir)) ++
         tryGen("sim_pq", pqOracle(s, dir)) ++
         tryGen("sim_ivfpq", ivfpqOracle(s, dir)) ++
-        tryGen("sim_ivfpq_append", ivfpqOracle(s, dir,
-          """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |    WHERE embedding IS NOT NULL
-            |  UNION ALL
-            |  SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
-            |  FROM embeddings WHERE vec_id % 50 = 0 AND embedding IS NOT NULL""".stripMargin)) ++
+        tryGen("sim_ivfpq_append", ivfpqOracle(s, dir, appendedSql)) ++
         tryGen("sim_ivfpq_residual", ivfpqResidualOracle(s, dir)) ++
         tryGen("embed_pca_project", pcaOracle(s, dir)) ++
         tryGen("embed_whitening", whiteningOracle(s, dir)) ++

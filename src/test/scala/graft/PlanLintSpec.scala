@@ -182,7 +182,7 @@ class PlanLintSpec extends SparkSpec {
     "graft/queries/QueriesPipeline.scala" -> ((3, "1-row max(doc_id) probe + BPE limit(1) best-pair + WordPiece limit(1) best-pair")),
     "graft/queries/QueriesRelationalExt.scala" -> ((1, "jdbc_roundtrip: |regions|-row aggregate materialized inside the withRetry cycle")),
     "graft/queries/QueriesScale.scala" -> ((2, "winsorize/outlier_mad limit(maxHistRows+1) probe-and-collect")),
-    "graft/queries/QueriesSim.scala" -> ((8, "query panels (vec_id < 5/3), panel-bounded truth top-k (queries×k, one panelTruth helper for ann_recall/ann_nprobe_sweep), query-side ADC LUTs, limit(256) sample; r15: sim_beam_search beam ferry (≤ |queries|×2 = 20 rows per hop)")),
+    "graft/queries/QueriesSim.scala" -> ((6, "one driver query panel (queryPanel: vec_id < 5, shared by sim_ivfpq_residual's probes and the sim_pq/sim_ivfpq oracles' ADC tables), mmr_diversify's 3-query candidates and their pairwise sims (≤ 3×20 rows), panel-bounded truth top-k (queries×k, one panelTruth helper for ann_recall/ann_nprobe_sweep), limit(256) sample; r15: sim_beam_search beam ferry (≤ |queries|×2 = 20 rows per hop)")),
     "graft/queries/QueriesText.scala" -> ((1, "unigram trainer: distinct words of the limit(256)-doc id-ordered sample")),
     "graft/queries/QueriesTrain.scala" -> ((2, "limit(QcSample) trainer sample + per-source domain aggregate (|sources| rows)"))
   )

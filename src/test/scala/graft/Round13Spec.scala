@@ -235,4 +235,27 @@ class Round13Spec extends SparkSpec {
       graft.operators.CacheRegistry.sweep()
     }
   }
+
+  // The trained-model cards get exact oracles only at dump time: under a
+  // Tables.OracleContext, QueriesSim.oracle refits each card's model and
+  // inlines it as SQL literals. A generator that throws prints one stderr
+  // line and leaves its card on a rows-only check, so every one of them
+  // must generate.
+  private val trainedOracles = Seq("sim_ivf_kmeans", "sim_ivf_append", "ivf_compact",
+    "ivf_delete", "ivf_retrain_trigger", "sim_filtered", "sim_range_search", "maxsim_ivf",
+    "maxsim_pq", "sim_pq", "sim_ivfpq", "sim_ivfpq_append", "sim_ivfpq_residual",
+    "embed_pca_project", "embed_whitening", "cluster_silhouette", "kcenter_coreset",
+    "semdedup", "semdedup_incremental", "ann_nprobe_sweep")
+
+  test("QueriesSim.oracle: all 20 trained-model oracles generate under an OracleContext") {
+    import graft.queries.{QueriesSim, Tables}
+    assert(Tables.OracleContext.ctx.isEmpty, "another spec left an OracleContext set")
+    assert(trainedOracles.forall(n => !QueriesSim.oracle.contains(n)),
+      "a trained oracle generated without an OracleContext")
+    // a global other specs read: restore it whatever happens
+    Tables.OracleContext.ctx = Some((spark, dir))
+    val oracle = try QueriesSim.oracle finally Tables.OracleContext.ctx = None
+    val missing = trainedOracles.filterNot(n => oracle.get(n).exists(_.trim.nonEmpty))
+    assert(missing.isEmpty, s"trained oracles that did not generate: ${missing.mkString(", ")}")
+  }
 }
