@@ -78,9 +78,6 @@ object TextFns {
     "fr" -> wordsPattern(graft.plans.TextStats.FrWords),
     "es" -> wordsPattern(graft.plans.TextStats.EsWords))
 
-  def markerCount(c: Column, pattern: String): Column =
-    regexp_count(lower(c), lit(pattern)).cast(LongType)
-
   /** Heuristic language ID from a [[textStats]] struct: argmax of marker
     * counts, first listed language wins ties; "und" when nothing matches. */
   def langIdFrom(m: Column): Column = {
@@ -96,10 +93,6 @@ object TextFns {
 
   /** English stopword ratio — a quality-score component. */
   val StopPattern: String = wordsPattern(graft.plans.TextStats.StopWords)
-
-  /** Punctuation-character count. */
-  def punctCount(c: Column): Column =
-    regexp_count(c, lit("[^a-zA-Z0-9\\s]")).cast(LongType)
 
   /** The Gopher rule-battery flags (word-count band, mean-word-length band,
     * symbol ratio, stopword floor) as ONE struct off the fused [[textStats]]

@@ -17,13 +17,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("bytes", BinaryType),
-    StructField("mime", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)))
-
   /** Wrap a string column as a fake media payload (deterministic: utf-8
     * bytes; metadata derived from content so tests are reproducible). */
   def mediaFromText(text: org.apache.spark.sql.Column, mime: String): org.apache.spark.sql.Column =

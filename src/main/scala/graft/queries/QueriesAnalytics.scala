@@ -3127,8 +3127,7 @@ object QueriesAnalytics {
          |FROM kk ORDER BY event_type""".stripMargin,
     "pmi_collocations" ->
       s"""WITH tk AS (SELECT ${Tables.toksSql()} AS tk FROM documents),
-        |bgs AS (SELECT unnest(list_transform(range(1, len(tk)),
-        |    i -> tk[i] || ' ' || tk[i+1])) AS bg FROM tk),
+        |bgs AS (SELECT unnest(${ngramsSql(2)}) AS bg FROM tk),
         |b12 AS (SELECT bg, CAST(count(*) AS BIGINT) AS n12 FROM bgs
         |  GROUP BY 1 HAVING count(*) >= 5),
         |uni AS (SELECT unnest(tk) AS w FROM tk),

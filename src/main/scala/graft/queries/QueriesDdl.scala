@@ -803,8 +803,7 @@ object QueriesDdl {
          |    'stock photo caption reused across unrelated pages' FROM ids
          |  UNION ALL SELECT doc_id + 300000, text FROM ids),
          |sh AS (SELECT id, s FROM (
-         |  SELECT id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
+         |  SELECT id, list_distinct(${ngramsSql(3)}) AS s
          |  FROM (SELECT id, ${Tables.toksSql()} AS tk FROM docs)) WHERE len(s) > 0),
          |imgs AS (
          |  SELECT doc_id AS img_id, doc_id AS base, 0 AS bright FROM ids
@@ -837,8 +836,7 @@ object QueriesDdl {
          |  JOIN bits b ON b.img_id = p.id_b AND b.k = a.k
          |  GROUP BY 1, 2),
          |scored AS (
-         |  SELECT CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-         |      / CAST(len(list_distinct(list_concat(sa.s, sb.s))) AS DOUBLE) AS j,
+         |  SELECT ${jaccardSql("sa.s", "sb.s")} AS j,
          |    ham.h AS h
          |  FROM pairs p
          |  JOIN sh sa ON sa.id = p.id_a

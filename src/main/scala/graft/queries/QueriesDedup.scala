@@ -105,19 +105,68 @@ object QueriesDedup {
       trainSh.select(col("doc_id").as("train_id"), explode(col("shingles")).as("sh")))
   }
 
-  private val corpusSql =
-    """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
+  /** The DuckDB twin of [[corpus]]: CTEs `base` and `corpus`, after `WITH`. */
+  private val corpusCtes =
+    """base AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
       |corpus AS (
       |  SELECT doc_id, text FROM base
       |  UNION ALL SELECT doc_id + 100000, text FROM base
       |  UNION ALL SELECT doc_id + 200000, text || ' xtra xtra' FROM base)""".stripMargin
+  private val corpusSql = s"WITH $corpusCtes"
 
   private val toksSql = Tables.toksSql()
-  /** Distinct token-trigram shingles in DuckDB. */
-  private val shinglesSql =
-    s"""SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-       |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-       |  FROM (SELECT doc_id, $toksSql AS tk FROM corpus)""".stripMargin
+  /** The DuckDB twin of [[Dedup.shingleSets]] (trigrams): `(doc_id, s)` per
+    * row of the CTE `from`. */
+  private def shingleSetsSql(from: String = "corpus"): String =
+    s"""SELECT doc_id, list_distinct(${ngramsSql(3)}) AS s
+       |  FROM (SELECT doc_id, $toksSql AS tk FROM $from)""".stripMargin
+
+  /** The DuckDB twin of [[clusterLabels]], for any corpus CTE `from` that
+    * `ctes` defines: exact-Jaccard ≥ 0.8 edges between every pair of shingle
+    * sets, then the recursive transitive closure, ending in
+    * `lab(doc_id, cluster_id)` with cluster_id = the component's min doc_id.
+    * `sh` and `edges` are MATERIALIZED: DuckDB would otherwise inline them
+    * at each reference. A cluster oracle appends only its tail. */
+  private def clusterTruthSql(ctes: String = corpusCtes, from: String = "corpus"): String =
+    s"""WITH RECURSIVE $ctes,
+       |sh AS MATERIALIZED (${shingleSetsSql(from)}),
+       |edges AS MATERIALIZED (
+       |  SELECT a.doc_id AS u, b.doc_id AS v FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+       |  WHERE ${jaccardSql("a.s", "b.s")} >= 0.8),
+       |bidir AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
+       |reach(src, dst) AS (
+       |  SELECT doc_id, doc_id FROM $from
+       |  UNION
+       |  SELECT r.src, b.v FROM reach r JOIN bidir b ON r.dst = b.u),
+       |lab AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src)""".stripMargin
+
+  /** The DuckDB twin of [[contaminationCorpus]] and its 8-gram shingle
+    * streams: `ev` (doc_id < 50), `tr` (the rest + the planted eval copies
+    * at +500000, with source and n_chars), `evsh(eval_id, sh)` and
+    * `trsh(train_id, sh)`. */
+  private val contaminationCtes =
+    s"""WITH ev AS (SELECT doc_id, text FROM documents WHERE doc_id < 50),
+       |tr AS (SELECT doc_id, text, source, n_chars FROM documents WHERE doc_id >= 50
+       |       UNION ALL SELECT doc_id + 500000, text, source, n_chars FROM documents
+       |       WHERE doc_id < 50),
+       |evsh AS (SELECT doc_id AS eval_id, unnest(list_distinct(${ngramsSql(8)})) AS sh
+       |  FROM (SELECT doc_id, $toksSql AS tk FROM ev)),
+       |trsh AS (SELECT doc_id AS train_id, unnest(list_distinct(${ngramsSql(8)})) AS sh
+       |  FROM (SELECT doc_id, $toksSql AS tk FROM tr))""".stripMargin
+
+  /** The DuckDB twin of probing [[existingCorpusIndex]] with an arrivals
+    * batch: the indexed corpus `ex` (doc_id ≥ 100), the arrivals `inc` (the
+    * given SELECT of doc_id, text), and `hits(id_new, id_idx, j)`, every
+    * (arrival, indexed doc) pair whose exact trigram Jaccard is ≥ 0.8. */
+  private[graft] def indexProbeSql(arrivals: String): String =
+    s"""WITH ex AS (SELECT doc_id, text FROM documents WHERE doc_id >= 100),
+       |inc AS ($arrivals),
+       |she AS (${shingleSetsSql("ex")}),
+       |shi AS (${shingleSetsSql("inc")}),
+       |hits AS (SELECT id_new, id_idx, j FROM (
+       |  SELECT i.doc_id AS id_new, e.doc_id AS id_idx, ${jaccardSql("i.s", "e.s")} AS j
+       |  FROM shi i, she e)
+       |  WHERE j >= 0.8)""".stripMargin
 
   val queries: Map[String, Q] = Map(
     // Winnowing fingerprints (Schleimer, Wilkerson & Aiken 2003 — the MOSS
@@ -411,8 +460,7 @@ object QueriesDedup {
       // anchor the output on the STATIC 3-row config frame (bloom_fpr_curve
       // pattern — round-10 ADVICE): an operating point with ZERO candidates
       // must still report n_candidates=0 instead of silently vanishing
-      val confs = broadcast(s.createDataFrame(Seq((16L, 2L), (8L, 4L), (4L, 8L)))
-        .toDF("b", "r"))
+      val confs = s.createDataFrame(Seq((16L, 2L), (8L, 4L), (4L, 8L))).toDF("b", "r")
       confs
         .join(cand.groupBy(col("b"), col("r")).agg(count(lit(1)).as("nc")),
           Seq("b", "r"), "left")
@@ -856,19 +904,7 @@ object QueriesDedup {
     }))
 
   private val contaminationSql =
-    s"""WITH ev AS (SELECT doc_id, text FROM documents WHERE doc_id < 50),
-       |tr AS (SELECT doc_id, text FROM documents WHERE doc_id >= 50
-       |       UNION ALL SELECT doc_id + 500000, text FROM ev),
-       |evsh AS (SELECT doc_id AS eval_id, unnest(s) AS sh FROM (
-       |  SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 6, 1)),
-       |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-       |         tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS s
-       |  FROM (SELECT doc_id, $toksSql AS tk FROM ev))),
-       |trsh AS (SELECT doc_id AS train_id, unnest(s) AS sh FROM (
-       |  SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 6, 1)),
-       |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-       |         tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS s
-       |  FROM (SELECT doc_id, $toksSql AS tk FROM tr)))
+    s"""$contaminationCtes
        |SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS n_shared_8grams
        |FROM trsh JOIN evsh USING (sh)
        |GROUP BY train_id, eval_id ORDER BY train_id, eval_id""".stripMargin
@@ -877,8 +913,7 @@ object QueriesDedup {
     "winnowing_pairs" ->
       s"""$corpusSql,
          |tk5 AS (SELECT doc_id, $toksSql AS tk FROM corpus),
-         |sh AS (SELECT doc_id, i - 1 AS pos,
-         |    tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] AS sh
+         |sh AS (SELECT doc_id, i - 1 AS pos, ${ngramAtSql(5)} AS sh
          |  FROM (SELECT doc_id, tk, unnest(range(1, greatest(len(tk) - 3, 1))) AS i FROM tk5)),
          |hashed AS (SELECT doc_id, pos,
          |    CAST(('0x' || substr(md5(sh), 1, 10)) AS BIGINT) * 1000000 + (999999 - pos) AS c
@@ -901,10 +936,9 @@ object QueriesDedup {
          |FROM corpus GROUP BY text ORDER BY doc_id""".stripMargin,
     "ngram_jaccard" ->
       s"""$corpusSql,
-         |sh AS ($shinglesSql)
+         |sh AS (${shingleSetsSql()})
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  round(CAST(len(list_distinct(list_intersect(a.s, b.s))) AS DOUBLE) /
-         |        CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE), 6) AS jaccard
+         |  round(${jaccardSql("a.s", "b.s")}, 6) AS jaccard
          |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 100000 OR b.doc_id = a.doc_id + 200000
          |ORDER BY id_a, id_b""".stripMargin,
     "simhash_dedup" ->
@@ -925,7 +959,7 @@ object QueriesDedup {
         }
       }.mkString("\n  UNION ALL ")
       s"""$corpusSql,
-         |sh AS MATERIALIZED ($shinglesSql),
+         |sh AS MATERIALIZED (${shingleSetsSql()}),
          |ex AS MATERIALIZED (SELECT doc_id, unnest(s) AS sg FROM sh),
          |sig AS MATERIALIZED (SELECT doc_id,
          |    $mhCols
@@ -965,11 +999,9 @@ object QueriesDedup {
     },
     "minhash_dedup" ->
       s"""$corpusSql,
-         |sh AS ($shinglesSql)
+         |sh AS (${shingleSetsSql()})
          |SELECT id_a, id_b, round(j, 6) AS jaccard FROM (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    CAST(len(list_distinct(list_intersect(a.s, b.s))) AS DOUBLE) /
-         |    CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS j
+         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, ${jaccardSql("a.s", "b.s")} AS j
          |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
          |WHERE j >= 0.8 ORDER BY id_a, id_b""".stripMargin,
     "cross_source_dups" ->
@@ -983,7 +1015,7 @@ object QueriesDedup {
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "containment_dedup" ->
       s"""$corpusSql,
-         |sh AS ($shinglesSql)
+         |sh AS (${shingleSetsSql()})
          |SELECT id_a, id_b, shared, sz_a, sz_b,
          |  floor(shared / least(sz_a, sz_b) * 1e6 + 0.5) / 1e6 AS containment,
          |  (shared * 10 < (sz_a + sz_b - shared) * 8) AS jaccard_blind
@@ -999,20 +1031,7 @@ object QueriesDedup {
     // equi-join) — SAME ground truth as the unfiltered formulation
     "contamination_bloom" -> contaminationSql,
     "decontaminate_apply" ->
-      s"""WITH ev AS (SELECT doc_id, text FROM documents WHERE doc_id < 50),
-         |tr AS (SELECT doc_id, text, source, n_chars FROM documents WHERE doc_id >= 50
-         |       UNION ALL SELECT doc_id + 500000, text, source, n_chars FROM documents
-         |       WHERE doc_id < 50),
-         |evsh AS (SELECT doc_id AS eval_id, unnest(s) AS sh FROM (
-         |  SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 6, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-         |         tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM ev))),
-         |trsh AS (SELECT doc_id AS train_id, unnest(s) AS sh FROM (
-         |  SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 6, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-         |         tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM tr))),
+      s"""$contaminationCtes,
          |drops AS (
          |  SELECT DISTINCT train_id FROM (
          |    SELECT train_id, eval_id, count(*) AS n
@@ -1023,71 +1042,28 @@ object QueriesDedup {
          |  CAST(sum(n_chars) AS BIGINT) AS chars_kept
          |FROM tr WHERE doc_id NOT IN (SELECT train_id FROM drops)
          |GROUP BY source ORDER BY source""".stripMargin,
-    "dedup_incremental" ->
-      s"""WITH ex AS (SELECT doc_id, text FROM documents WHERE doc_id >= 100),
-         |inc AS (
-         |  SELECT doc_id + 300000 AS doc_id, text || ' xtra xtra' AS text
-         |  FROM documents WHERE doc_id >= 100 AND doc_id % 25 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 400000 AS doc_id, text FROM documents WHERE doc_id < 50),
-         |she AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM ex)),
-         |shi AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM inc))
-         |SELECT id_new, id_idx, round(j, 6) AS jaccard FROM (
-         |  SELECT i.doc_id AS id_new, e.doc_id AS id_idx,
-         |    CAST(len(list_distinct(list_intersect(i.s, e.s))) AS DOUBLE) /
-         |    CAST(len(list_distinct(list_concat(i.s, e.s))) AS DOUBLE) AS j
-         |  FROM shi i, she e)
-         |WHERE j >= 0.8 ORDER BY id_new, id_idx""".stripMargin,
+    "dedup_incremental" -> {
+      val arrivals =
+        """SELECT doc_id + 300000 AS doc_id, text || ' xtra xtra' AS text
+          |  FROM documents WHERE doc_id >= 100 AND doc_id % 25 = 0
+          |  UNION ALL
+          |  SELECT doc_id + 400000 AS doc_id, text FROM documents WHERE doc_id < 50""".stripMargin
+      s"""${indexProbeSql(arrivals)}
+         |SELECT id_new, id_idx, round(j, 6) AS jaccard FROM hits
+         |ORDER BY id_new, id_idx""".stripMargin
+    },
     // Ground truth: exhaustive jaccard edges + recursive transitive closure.
     // (The driver-side compare is engine-agnostic; the Spark side must reach
     // the same clusters through LSH banding + star contraction.)
     "dedup_apply" ->
-      s"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL SELECT doc_id + 100000, text FROM base
-         |  UNION ALL SELECT doc_id + 200000, text || ' xtra xtra' FROM base),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM corpus)),
-         |edges AS (
-         |  SELECT a.doc_id AS u, b.doc_id AS v FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE CAST(len(list_distinct(list_intersect(a.s, b.s))) AS DOUBLE) /
-         |        CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.8),
-         |bidir AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM corpus
-         |  UNION
-         |  SELECT r.src, b.v FROM reach r JOIN bidir b ON r.dst = b.u),
-         |lab AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src),
+      s"""${clusterTruthSql()},
          |kept AS (SELECT doc_id FROM lab WHERE doc_id = cluster_id)
          |SELECT CAST((SELECT count(*) FROM corpus) AS BIGINT) AS n_before,
          |  CAST((SELECT count(*) FROM kept) AS BIGINT) AS n_kept,
          |  CAST((SELECT count(*) FROM corpus) - (SELECT count(*) FROM kept) AS BIGINT) AS n_dropped,
          |  CAST((SELECT sum(doc_id) FROM kept) AS BIGINT) AS kept_id_sum""".stripMargin,
     "dedup_soft" ->
-      s"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL SELECT doc_id + 100000, text FROM base
-         |  UNION ALL SELECT doc_id + 200000, text || ' xtra xtra' FROM base),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM corpus)),
-         |edges AS (
-         |  SELECT a.doc_id AS u, b.doc_id AS v FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE CAST(len(list_distinct(list_intersect(a.s, b.s))) AS DOUBLE) /
-         |        CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.8),
-         |bidir AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM corpus
-         |  UNION
-         |  SELECT r.src, b.v FROM reach r JOIN bidir b ON r.dst = b.u),
-         |lab AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src),
+      s"""${clusterTruthSql()},
          |w AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS weight FROM lab GROUP BY 1)
          |SELECT weight, CAST(count(*) AS BIGINT) AS n_clusters,
          |  CAST(sum(cluster_id) AS BIGINT) AS rep_id_sum
@@ -1095,79 +1071,30 @@ object QueriesDedup {
     // FULL recompute over corpus ∪ batch — the incremental contraction
     // must reproduce this exactly (cluster_id = min doc_id of the MERGED
     // cluster, sizes including batch members)
-    "dedup_clusters_incremental" ->
-      s"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL SELECT doc_id + 100000, text FROM base
-         |  UNION ALL SELECT doc_id + 200000, text || ' xtra xtra' FROM base),
-         |bpick AS (SELECT doc_id, text FROM documents WHERE doc_id % 100 = 0),
-         |allc AS (
-         |  SELECT doc_id, text FROM corpus
-         |  UNION ALL SELECT doc_id + 400000, text || ' xtra' FROM bpick
-         |  UNION ALL SELECT doc_id + 600000, text || ' xtra' FROM bpick
-         |    WHERE doc_id % 200 = 0
-         |  UNION ALL SELECT doc_id + 800000,
-         |    array_to_string(list_reverse($toksSql), ' ') FROM bpick),
-         |sh AS MATERIALIZED (
-         |  SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM allc)),
-         |edges AS (
-         |  SELECT a.doc_id AS u, b.doc_id AS v FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE CAST(len(list_distinct(list_intersect(a.s, b.s))) AS DOUBLE) /
-         |        CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.8),
-         |bidir AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM allc
-         |  UNION
-         |  SELECT r.src, b.v FROM reach r JOIN bidir b ON r.dst = b.u),
-         |lab AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src)
+    "dedup_clusters_incremental" -> {
+      val allc =
+        s"""$corpusCtes,
+           |bpick AS (SELECT doc_id, text FROM documents WHERE doc_id % 100 = 0),
+           |allc AS (
+           |  SELECT doc_id, text FROM corpus
+           |  UNION ALL SELECT doc_id + 400000, text || ' xtra' FROM bpick
+           |  UNION ALL SELECT doc_id + 600000, text || ' xtra' FROM bpick
+           |    WHERE doc_id % 200 = 0
+           |  UNION ALL SELECT doc_id + 800000,
+           |    array_to_string(list_reverse($toksSql), ' ') FROM bpick)""".stripMargin
+      s"""${clusterTruthSql(allc, "allc")}
          |SELECT doc_id, cluster_id,
          |  CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
-         |FROM lab ORDER BY doc_id""".stripMargin,
+         |FROM lab ORDER BY doc_id""".stripMargin
+    },
     "dedup_clusters" ->
-      s"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL SELECT doc_id + 100000, text FROM base
-         |  UNION ALL SELECT doc_id + 200000, text || ' xtra xtra' FROM base),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM corpus)),
-         |edges AS (
-         |  SELECT a.doc_id AS u, b.doc_id AS v FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE CAST(len(list_distinct(list_intersect(a.s, b.s))) AS DOUBLE) /
-         |        CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.8),
-         |bidir AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM corpus
-         |  UNION
-         |  SELECT r.src, b.v FROM reach r JOIN bidir b ON r.dst = b.u),
-         |lab AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src)
+      s"""${clusterTruthSql()}
          |SELECT doc_id, cluster_id,
          |  CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
          |FROM lab ORDER BY doc_id""".stripMargin,
     "dedup_bcubed" ->
-      s"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL SELECT doc_id + 100000, text FROM base
-         |  UNION ALL SELECT doc_id + 200000, text || ' xtra xtra' FROM base),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM corpus)),
-         |edges AS (
-         |  SELECT a.doc_id AS u, b.doc_id AS v FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE CAST(len(list_distinct(list_intersect(a.s, b.s))) AS DOUBLE) /
-         |        CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.8),
-         |bidir AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM corpus
-         |  UNION
-         |  SELECT r.src, b.v FROM reach r JOIN bidir b ON r.dst = b.u),
-         |lab AS (SELECT src AS doc_id, min(dst) AS p FROM reach GROUP BY src),
-         |lt AS MATERIALIZED (SELECT lab.doc_id, lab.p,
+      s"""${clusterTruthSql()},
+         |lt AS MATERIALIZED (SELECT lab.doc_id, lab.cluster_id AS p,
          |    CASE WHEN b1.doc_id IS NOT NULL THEN lab.doc_id
          |         WHEN b2.doc_id IS NOT NULL THEN lab.doc_id - 100000
          |         ELSE lab.doc_id - 200000 END AS t
@@ -1192,24 +1119,7 @@ object QueriesDedup {
          |  CAST((2 * p6 * r6) // greatest(p6 + r6, 1) AS BIGINT) AS f1_6
          |FROM pp""".stripMargin,
     "dup_cluster_stats" ->
-      s"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL SELECT doc_id + 100000, text FROM base
-         |  UNION ALL SELECT doc_id + 200000, text || ' xtra xtra' FROM base),
-         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM corpus)),
-         |edges AS (
-         |  SELECT a.doc_id AS u, b.doc_id AS v FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE CAST(len(list_distinct(list_intersect(a.s, b.s))) AS DOUBLE) /
-         |        CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.8),
-         |bidir AS (SELECT u, v FROM edges UNION SELECT v, u FROM edges),
-         |reach(src, dst) AS (
-         |  SELECT doc_id, doc_id FROM corpus
-         |  UNION
-         |  SELECT r.src, b.v FROM reach r JOIN bidir b ON r.dst = b.u),
-         |lab AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src),
+      s"""${clusterTruthSql()},
          |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
          |       FROM lab GROUP BY 1)
          |SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
@@ -1220,11 +1130,9 @@ object QueriesDedup {
     // candidate-complete postings path must land on identical counts
     "dedup_sweep" ->
       s"""$corpusSql,
-         |sh AS MATERIALIZED ($shinglesSql),
+         |sh AS MATERIALIZED (${shingleSetsSql()}),
          |pairs AS MATERIALIZED (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    CAST(len(list_distinct(list_intersect(a.s, b.s))) AS DOUBLE) /
-         |      CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS j
+         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, ${jaccardSql("a.s", "b.s")} AS j
          |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
          |  WHERE len(a.s) > 0 AND len(b.s) > 0),
          |t AS (SELECT CAST(unnest([0.5, 0.6, 0.7, 0.8, 0.9]) AS DOUBLE) AS threshold),
@@ -1257,9 +1165,7 @@ object QueriesDedup {
          |  SELECT doc_id, list_distinct($toksSql) AS tk FROM corpus)
          |  WHERE len(tk) > 0),
          |pairs AS (SELECT id_a, id_b, jc FROM (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    CAST(len(list_intersect(a.tk, b.tk)) AS DOUBLE) /
-         |      len(list_distinct(list_concat(a.tk, b.tk))) AS jc
+         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, ${jaccardSql("a.tk", "b.tk")} AS jc
          |  FROM toks a JOIN toks b ON a.doc_id < b.doc_id)
          |  WHERE jc >= 0.6),
          |sym AS (SELECT id_a AS doc_id, id_b AS partner, jc FROM pairs

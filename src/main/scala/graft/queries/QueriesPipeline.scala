@@ -1192,8 +1192,7 @@ object QueriesPipeline {
        |  FROM (SELECT unnest(tk) AS sym, cnt FROM tk$k) GROUP BY 1),
        |p$k AS (SELECT split_part(pr, ' ', 1) AS l, split_part(pr, ' ', 2) AS r,
        |    CAST(sum(cnt) AS BIGINT) AS c
-       |  FROM (SELECT unnest(list_transform(range(1, len(tk)),
-       |      i -> tk[i] || ' ' || tk[i+1])) AS pr, cnt
+       |  FROM (SELECT unnest(${ngramsSql(2)}) AS pr, cnt
        |    FROM tk$k WHERE len(tk) >= 2)
        |  GROUP BY 1, 2),
        |s$k AS (SELECT p$k.l, p$k.r, c,
@@ -1208,8 +1207,7 @@ object QueriesPipeline {
     s""",
        |p$k AS (SELECT split_part(pr, ' ', 1) AS l, split_part(pr, ' ', 2) AS r,
        |    CAST(sum(cnt) AS BIGINT) AS c
-       |  FROM (SELECT unnest(list_transform(range(1, len(tk)),
-       |      i -> tk[i] || ' ' || tk[i+1])) AS pr, cnt
+       |  FROM (SELECT unnest(${ngramsSql(2)}) AS pr, cnt
        |    FROM (SELECT string_split(trim(seq), ' ') AS tk, cnt FROM w${k - 1}))
        |  GROUP BY 1, 2),
        |b$k AS (SELECT l, r, c FROM p$k ORDER BY c DESC, l, r LIMIT 1),
@@ -1549,10 +1547,7 @@ object QueriesPipeline {
          |  UNION ALL SELECT doc_id + 700000, text FROM documents WHERE doc_id < 50),
          |tk AS (SELECT doc_id, $toks AS tk FROM corpus),
          |win AS (SELECT doc_id, substr(md5(sh), 1, 16) AS h FROM (
-         |  SELECT doc_id, unnest(list_transform(range(1, greatest(len(tk) - 8, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-         |         tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7] || ' ' ||
-         |         tk[i+8] || ' ' || tk[i+9])) AS sh FROM tk)),
+         |  SELECT doc_id, unnest(${ngramsSql(10)}) AS sh FROM tk)),
          |dup AS (SELECT h FROM (SELECT h, count(*) AS c FROM win GROUP BY h) WHERE c >= 2)
          |SELECT w.doc_id AS doc_id, CAST(count(*) AS BIGINT) AS n_windows,
          |  CAST(count(d.h) AS BIGINT) AS n_dup_windows,
@@ -1563,9 +1558,7 @@ object QueriesPipeline {
     "scaling_law_fit" ->
       s"""WITH mx AS (SELECT max(doc_id) AS mxid FROM documents),
          |tk AS MATERIALIZED (SELECT doc_id, $toks AS tk FROM documents),
-         |tri AS (SELECT doc_id, unnest(list_transform(
-         |    range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh FROM tk),
+         |tri AS (SELECT doc_id, unnest(${ngramsSql(3)}) AS sh FROM tk),
          |vb AS (SELECT (fd * 8) // (mxid + 1) + 1 AS k,
          |    CAST(count(*) AS BIGINT) AS nv
          |  FROM (SELECT sh, min(doc_id) AS fd FROM tri GROUP BY 1) CROSS JOIN mx
@@ -1694,8 +1687,7 @@ object QueriesPipeline {
     "dsir_weights" ->
       s"""WITH feats AS MATERIALIZED (
          |  SELECT doc_id, lang, source, substr(md5(bg), 1, 2) AS f FROM (
-         |    SELECT doc_id, lang, source, unnest(list_transform(range(1, len(tk)),
-         |      i -> tk[i] || ' ' || tk[i+1])) AS bg
+         |    SELECT doc_id, lang, source, unnest(${ngramsSql(2)}) AS bg
          |    FROM (SELECT doc_id, lang, source, $toks AS tk FROM documents))),
          |per_doc AS MATERIALIZED (
          |  SELECT doc_id, source, lang, f, CAST(count(*) AS BIGINT) AS c

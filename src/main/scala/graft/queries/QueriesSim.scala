@@ -3119,8 +3119,7 @@ object QueriesSim {
          |  UNION ALL SELECT doc_id + 100000, text FROM base
          |  UNION ALL SELECT doc_id + 200000, text || ' xtra xtra' FROM base),
          |terms AS (
-         |  SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-         |    i -> tk[i] || ' ' || tk[i+1])) AS tok
+         |  SELECT doc_id, unnest(${ngramsSql(2)}) AS tok
          |  FROM (SELECT doc_id, ${Tables.toksSql()} AS tk FROM corpus)),
          |tfm AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
          |  FROM terms GROUP BY 1, 2),

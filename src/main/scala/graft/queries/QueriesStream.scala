@@ -359,33 +359,24 @@ object QueriesStream {
          |FROM g GROUP BY family ORDER BY family""".stripMargin,
 
     // exhaustive jaccard between the constructed arrivals and the indexed
-    // corpus — dedup_incremental's oracle shape, aggregated to the
-    // per-arrival gate decision
-    "stream_neardup_gate" ->
-      s"""WITH ex AS (SELECT doc_id, text FROM documents WHERE doc_id >= 100),
-         |inc AS (
-         |  SELECT doc_id + 1000000 AS doc_id, text || ' x' AS text
-         |  FROM documents WHERE doc_id >= 100 AND doc_id % 20 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 1100000 AS doc_id,
-         |    array_to_string(list_reverse(${toksSql()}), ' ') AS text
-         |  FROM documents WHERE doc_id >= 100 AND doc_id % 20 = 10),
-         |she AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, ${toksSql()} AS tk FROM ex)),
-         |shi AS (SELECT doc_id, list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s
-         |  FROM (SELECT doc_id, ${toksSql()} AS tk FROM inc)),
+    // corpus (dedup_incremental's probe, QueriesDedup.indexProbeSql),
+    // aggregated to the per-arrival gate decision
+    "stream_neardup_gate" -> {
+      val arrivals =
+        s"""SELECT doc_id + 1000000 AS doc_id, text || ' x' AS text
+           |  FROM documents WHERE doc_id >= 100 AND doc_id % 20 = 0
+           |  UNION ALL
+           |  SELECT doc_id + 1100000 AS doc_id,
+           |    array_to_string(list_reverse(${toksSql()}), ' ') AS text
+           |  FROM documents WHERE doc_id >= 100 AND doc_id % 20 = 10""".stripMargin
+      s"""${QueriesDedup.indexProbeSql(arrivals)},
          |hh AS (SELECT id_new, CAST(count(*) AS BIGINT) AS n_matches,
          |    round(max(j), 6) AS best_j
-         |  FROM (SELECT i.doc_id AS id_new, e.doc_id AS id_idx,
-         |      CAST(len(list_distinct(list_intersect(i.s, e.s))) AS DOUBLE) /
-         |      CAST(len(list_distinct(list_concat(i.s, e.s))) AS DOUBLE) AS j
-         |    FROM shi i, she e) z
-         |  WHERE j >= 0.8 GROUP BY 1)
+         |  FROM hits GROUP BY 1)
          |SELECT i.doc_id, coalesce(hh.n_matches, 0) AS n_matches,
          |  hh.best_j AS best_j,
          |  coalesce(hh.n_matches, 0) = 0 AS admitted
          |FROM inc i LEFT JOIN hh ON hh.id_new = i.doc_id
-         |ORDER BY i.doc_id""".stripMargin)
+         |ORDER BY i.doc_id""".stripMargin
+    })
 }

@@ -1440,12 +1440,12 @@ object QueriesText {
 
   private val LmSqlCtes =
     s"""WITH tr AS (SELECT $toks AS tk FROM documents WHERE doc_id >= 50),
-         |tbg AS (SELECT unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg FROM tr),
+         |tbg AS (SELECT unnest(${ngramsSql(2)}) AS bg FROM tr),
          |c2 AS (SELECT bg, count(*) AS c2 FROM tbg GROUP BY 1),
          |tw AS (SELECT unnest(tk) AS w FROM tr),
          |c1 AS (SELECT w, count(*) AS c1 FROM tw GROUP BY 1),
          |v AS (SELECT count(*) AS v FROM c1),
-         |ev AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg
+         |ev AS (SELECT doc_id, unnest(${ngramsSql(2)}) AS bg
          |       FROM (SELECT doc_id, $toks AS tk FROM documents WHERE doc_id < 50)),
          |sc AS (SELECT doc_id, ln((coalesce(c2, 0) + 1.0) / (coalesce(c1, 0) + v)) AS lp
          |  FROM ev LEFT JOIN c2 USING (bg)
@@ -1597,8 +1597,7 @@ object QueriesText {
         |  round(ln(sum(c)) - sum(c * ln(c)) / sum(c), 4) AS entropy
         |FROM tc GROUP BY source ORDER BY source""".stripMargin,
     "repetition_score" ->
-      s"""WITH s AS (SELECT doc_id, list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS tri
+      s"""WITH s AS (SELECT doc_id, ${ngramsSql(3)} AS tri
          |  FROM (SELECT doc_id, $toks AS tk FROM documents))
          |SELECT doc_id, CAST(len(tri) AS BIGINT) AS n_trigrams,
          |  CAST(len(list_distinct(tri)) AS BIGINT) AS n_distinct,
@@ -1674,12 +1673,12 @@ object QueriesText {
          |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "lm_backoff" ->
       s"""WITH tr AS (SELECT $toks AS tk FROM documents WHERE doc_id >= 50),
-         |tbg AS (SELECT unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg FROM tr),
+         |tbg AS (SELECT unnest(${ngramsSql(2)}) AS bg FROM tr),
          |c2 AS (SELECT bg, CAST(count(*) AS BIGINT) AS c2 FROM tbg GROUP BY 1),
          |tw AS (SELECT unnest(tk) AS w FROM tr),
          |c1 AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM tw GROUP BY 1),
          |nv AS (SELECT CAST(sum(c1) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS v FROM c1),
-         |ev AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg
+         |ev AS (SELECT doc_id, unnest(${ngramsSql(2)}) AS bg
          |       FROM (SELECT doc_id, $toks AS tk FROM documents WHERE doc_id < 50)),
          |sc AS (SELECT doc_id, (c2.c2 IS NULL) AS backed,
          |    CASE WHEN c2.c2 IS NOT NULL
@@ -1698,14 +1697,14 @@ object QueriesText {
          |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "lm_kneser_ney" ->
       s"""WITH tr AS (SELECT $toks AS tk FROM documents WHERE doc_id >= 50),
-         |tbg AS (SELECT unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg FROM tr),
+         |tbg AS (SELECT unnest(${ngramsSql(2)}) AS bg FROM tr),
          |c2 AS (SELECT bg, CAST(count(*) AS BIGINT) AS c2 FROM tbg GROUP BY 1),
          |fw AS (SELECT string_split(bg, ' ')[1] AS w1, CAST(sum(c2) AS BIGINT) AS c1,
          |    CAST(count(*) AS BIGINT) AS n1fw FROM c2 GROUP BY 1),
          |bw AS (SELECT string_split(bg, ' ')[2] AS w2, CAST(count(*) AS BIGINT) AS n1bw
          |  FROM c2 GROUP BY 1),
          |gl AS (SELECT CAST(sum(n1bw) AS BIGINT) AS n1all, CAST(count(*) AS BIGINT) AS vcont FROM bw),
-         |ev AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg
+         |ev AS (SELECT doc_id, unnest(${ngramsSql(2)}) AS bg
          |       FROM (SELECT doc_id, $toks AS tk FROM documents WHERE doc_id < 50)),
          |sc AS (SELECT doc_id, (f.c1 IS NULL) AS novel,
          |    ln(CASE WHEN f.c1 IS NOT NULL
@@ -1807,8 +1806,7 @@ object QueriesText {
          |WHERE rn <= 10 ORDER BY rank""".stripMargin,
     "bm25_prf" ->
       s"""WITH toks AS (SELECT doc_id, $toks AS tk FROM documents),
-         |terms AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-         |    i -> tk[i] || ' ' || tk[i+1])) AS term FROM toks),
+         |terms AS (SELECT doc_id, unnest(${ngramsSql(2)}) AS term FROM toks),
          |tfm AS MATERIALIZED (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
          |  FROM terms GROUP BY doc_id, term),
          |dlen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tfm GROUP BY doc_id),
@@ -1856,8 +1854,7 @@ object QueriesText {
          |WHERE rn <= 5 ORDER BY qid, rank""".stripMargin,
     "bm25_search" ->
       s"""WITH toks AS (SELECT doc_id, $toks AS tk FROM documents),
-         |terms AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-         |    i -> tk[i] || ' ' || tk[i+1])) AS term FROM toks),
+         |terms AS (SELECT doc_id, unnest(${ngramsSql(2)}) AS term FROM toks),
          |tfm AS MATERIALIZED (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
          |  FROM terms GROUP BY doc_id, term),
          |dlen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tfm GROUP BY doc_id),
@@ -1884,8 +1881,7 @@ object QueriesText {
          |WHERE rn <= 10 ORDER BY qid, rank""".stripMargin,
 "bm25_incremental" ->
       s"""WITH toks AS (SELECT doc_id, $toks AS tk FROM documents),
-         |terms AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-         |    i -> tk[i] || ' ' || tk[i+1])) AS term FROM toks),
+         |terms AS (SELECT doc_id, unnest(${ngramsSql(2)}) AS term FROM toks),
          |tfm AS MATERIALIZED (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
          |  FROM terms GROUP BY doc_id, term),
          |dlen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tfm GROUP BY doc_id),
@@ -1936,13 +1932,13 @@ object QueriesText {
          |    md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fp,
          |    $toks AS t FROM documents)
          |SELECT doc_id, fp,
-         |  list_min(list_transform(range(1, greatest(len(t) - 2, 1)),
-         |    i -> substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]), 1, 16))) AS min_shingle_fp
+         |  list_min(list_transform(${ngramsSql(4, "t")},
+         |    g -> substr(md5(g), 1, 16))) AS min_shingle_fp
          |FROM tk ORDER BY doc_id""".stripMargin,
     "vocab_drift" ->
       s"""WITH terms AS (
          |  SELECT doc_id % 2 AS half,
-         |    unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS tok
+         |    unnest(${ngramsSql(2)}) AS tok
          |  FROM (SELECT doc_id, $toks AS tk FROM documents WHERE text IS NOT NULL)),
          |counts AS (
          |  SELECT tok,
@@ -1959,8 +1955,7 @@ object QueriesText {
     "ngram_novelty" ->
       s"""WITH sh AS (
          |  SELECT doc_id,
-         |    unnest(list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS sh
+         |    unnest(list_distinct(${ngramsSql(3)})) AS sh
          |  FROM (SELECT doc_id, $toks AS tk FROM documents WHERE text IS NOT NULL)),
          |f AS (
          |  SELECT doc_id, min(doc_id) OVER (PARTITION BY sh) AS first_doc FROM sh)
@@ -2034,8 +2029,7 @@ object QueriesText {
          |tk AS (SELECT doc_id, source, planted, ${Tables.toksSql()} AS tk
          |  FROM docs),
          |g AS (SELECT doc_id, source, planted,
-         |    unnest(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
+         |    unnest(${ngramsSql(3)}) AS g
          |  FROM tk),
          |c AS (SELECT doc_id, source, planted, g, CAST(count(*) AS BIGINT) AS c
          |  FROM g GROUP BY 1, 2, 3, 4),
@@ -2094,8 +2088,7 @@ object QueriesText {
     "df_spectrum" ->
       s"""WITH sh AS (
          |  SELECT doc_id,
-         |    unnest(list_distinct(list_transform(range(1, greatest(len(tk) - 1, 1)),
-         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS s
+         |    unnest(list_distinct(${ngramsSql(3)})) AS s
          |  FROM (SELECT doc_id, $toks AS tk FROM documents WHERE text IS NOT NULL)),
          |df AS (SELECT s, CAST(count(*) AS BIGINT) AS df FROM sh GROUP BY 1)
          |SELECT least(df, 21) AS df_bucket, CAST(count(*) AS BIGINT) AS n_shingles

@@ -257,8 +257,7 @@ object QueriesTrain {
   private val doremiSql: String =
     s"""WITH feats AS MATERIALIZED (
        |  SELECT source, substr(md5(bg), 1, 2) AS f FROM (
-       |    SELECT source, unnest(list_transform(range(1, len(tk)),
-       |      i -> tk[i] || ' ' || tk[i+1])) AS bg
+       |    SELECT source, unnest(${ngramsSql(2)}) AS bg
        |    FROM (SELECT source, $toks AS tk FROM documents))),
        |per_ds AS MATERIALIZED (
        |  SELECT source, f, CAST(count(*) AS BIGINT) AS c

@@ -71,6 +71,25 @@ object Tables {
   def toksSql(column: String = "text"): String =
     s"""list_filter(string_split_regex(lower($column), '\\s+'), x -> x <> '')"""
 
+  /** The `n`-gram starting at the 1-based position `i` (a column or lambda
+    * variable of that name) of the token list `tk`: its tokens joined by
+    * single spaces. */
+  def ngramAtSql(n: Int, tk: String = "tk"): String =
+    (0 until n).map(k => if (k == 0) s"$tk[i]" else s"$tk[i+$k]").mkString(" || ' ' || ")
+
+  /** The DuckDB twin of [[graft.functions.TextFns.shingles]]: the list of
+    * every token `n`-gram of `tk` in position order, `[]` when `tk` has
+    * fewer than `n` tokens. DuckDB's `greatest` skips NULLs, so a NULL `tk`
+    * also gives `[]` (not NULL). */
+  def ngramsSql(n: Int, tk: String = "tk"): String =
+    s"list_transform(range(1, greatest(len($tk) - ${n - 2}, 1)), i -> ${ngramAtSql(n, tk)})"
+
+  /** The DuckDB twin of [[graft.operators.Dedup.jaccard]]: the exact Jaccard
+    * ratio of two shingle lists, as a DOUBLE. */
+  def jaccardSql(a: String, b: String): String =
+    s"CAST(len(list_distinct(list_intersect($a, $b))) AS DOUBLE) / " +
+      s"CAST(len(list_distinct(list_concat($a, $b))) AS DOUBLE)"
+
   /** The DuckDB twin of [[graft.functions.TextFns]]' per-doc quality metrics
     * — emit as a CTE `SELECT doc_id$extra, nc, nt, np, ns FROM documents`;
     * single definition so the score inputs can't drift between oracles. */

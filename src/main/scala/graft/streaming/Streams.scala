@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.Row
 import graft.operators.Dedup
 
 /** Structured-Streaming surface (SURVEY.md §2.8 streaming). The reference has
@@ -90,12 +89,6 @@ object Streams {
   /** In-memory sink for tests/smoke: query the result via its table name. */
   def toMemorySink(df: DataFrame, name: String, outputMode: String = "update"): StreamingQuery =
     df.writeStream.format("memory").queryName(name).outputMode(outputMode).start()
-
-  /** Parquet sink with checkpointing — the durable production shape. */
-  def toParquetSink(df: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
-    df.writeStream.format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
 
   // ---- custom state: transformWithState (Spark 4 API) ----------------------
 

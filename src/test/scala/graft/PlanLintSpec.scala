@@ -260,6 +260,13 @@ class PlanLintSpec extends SparkSpec {
       "caches go through CacheRegistry.track):\n  " + problems.mkString("\n  "))
   }
 
+  test("oracle n-grams go through Tables.ngramsSql (no hand-written [i+1] concatenation)") {
+    val problems = budgetProblems("""\[i\s*\+\s*1\]""".r, "hand-written n-gram", Map.empty)
+    assert(problems.isEmpty, s"${problems.size} n-gram lint failures (oracle n-grams go " +
+      "through Tables.ngramsSql, positional ones through Tables.ngramAtSql):\n  " +
+      problems.mkString("\n  "))
+  }
+
   test("the window allowlist names only live queries (no stale entries)") {
     val qs = SparkEntry.queries.keySet
     val stale = (windowAllow.keySet ++ cartesianAllow.keySet ++
